@@ -1,9 +1,18 @@
-"""Benchmark harness: runs the headline queries and prints ONE JSON line.
+"""Benchmark harness: times registry members and prints ONE JSON line.
+
+Usage::
+
+    python bench.py [--sf1 | --all] [--allow-contended] [--plans DIR] [NAME ...]
 
 Env: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-``SPARK_GRAFT_CPUS`` (default 32). Each query is fully materialized via
-the noop sink (no driver collect, no disk write cost) so the measured
-time is plan execution only.
+``SPARK_GRAFT_CPUS`` (default 32). Without NAMEs the HEADLINE members
+run (``--sf1``/``--all`` add SF1_EXTRA); NAMEs pick members instead.
+Each run builds the query and materializes it via the noop sink (no
+collect, no disk write cost). ``queries`` holds each member's min over
+runs of construction plus run; ``layers`` splits that into
+construction, first run and steady run and attributes the member's
+Spark jobs and stages to construction or run. ``--plans DIR`` writes
+each member's ``explain("formatted")`` to ``DIR/<member>.txt``.
 """
 
 from __future__ import annotations
@@ -11,13 +20,17 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.spans import Tracer  # noqa: E402
+
 #: Queries timed for BENCH_r{N}.json. Kept to the heavy hitters — full
 #: coverage correctness is the selfcheck/driver gate, not the bench.
+#: Only scalable paths: the quadratic pair verifiers are correctness-
+#: gate queries. docs/bench-history.md records why each group was added.
 HEADLINE = (
     # relational core
     "denormalized_orders",
@@ -44,15 +57,13 @@ HEADLINE = (
     "streaming_window_counts",
     "session_window_counts",
     "streaming_dedup_keys",
-    # training-data pipeline (scalable paths only — the quadratic
-    # pair-verifiers are correctness-gate queries, not bench targets)
+    # training-data pipeline
     "text_stats",
     "text_fingerprint",
     "dedup_exact",
     "embed_cosine_topk",
     "embed_ann_bucketed",
     "multimodal_decode",
-    # round 2: relevance + corpus-prep additions (linear-scale paths)
     "search_bm25_scored",
     "doc_chunks",
     "pack_token_budget",
@@ -60,10 +71,7 @@ HEADLINE = (
     "stratified_sample_langs",
     "embed_quantize_int8",
     "incremental_sync_events",
-    # rounds 6-7 search-surface additions (r6 verdict #8: the new
-    # plans need recorded per-round wall times so a future plan
-    # regression is visible in the bench artifact; the canary ratio
-    # keeps cross-round totals interpretable despite the longer list)
+    # search surface: pages, aggs, spans, suggesters, rescore, knn
     "search_from_size_page",
     "search_aggs_nested_levels",
     "search_aggs_significant_terms",
@@ -71,81 +79,45 @@ HEADLINE = (
     "search_aggs_timezone",
     "search_dsl_phrase_slop",
     "search_ranked_offset_page",
-    # r7 late additions with real distributed cost: the nested-agg
-    # explode+groupBy, the multi-field terms shuffle, the window
-    # top-k per bucket, the shared-job metric family, and the TSVB
-    # pipeline parent (one groupBy + driver-side transforms)
     "search_aggs_nested_parent",
     "search_aggs_multi_terms",
     "search_aggs_top_metrics",
     "search_aggs_extended_stats",
     "search_aggs_tsvb_math",
-    # r9 (r8 verdict #4): the serving paths r8/r9 touched get timing
-    # artifacts so a plan regression in exactly that code is visible —
-    # knn (exact cosine TakeOrdered), the term-suggester dictionary
-    # groupBy, the two-phase rescore, SemDeDup's bucketed pair pass,
-    # and the new function_score ranked page
     "search_knn_vector",
     "search_suggest_terms",
     "search_rescore_window",
     "semdedup_embeddings",
     "search_dsl_function_score",
-    # r9 late additions with real distributed cost: the positional
-    # span compile (token-array algebra in one scan) and the
-    # three-shuffle boilerplate removal pipeline
     "search_dsl_span_near",
     "boilerplate_chunk_removal",
-    # r10 additions with real distributed cost: the DSIR two-pass
-    # model+score pipeline, the one-tokenized-scan significant_text,
-    # the materialized-sample wrapper, the span-producer trees, and
-    # the per-distinct-value fuzzy completion
+    # corpus prep and the rest of the search surface
     "dsir_importance_weights",
     "search_aggs_significant_text",
     "search_aggs_sampler_significant",
     "search_dsl_span_nested",
     "search_dsl_intervals_filter",
     "search_suggest_completion_fuzzy",
-    # r11: variable-span duplicate-run removal (the one-explode
-    # k-gram pipeline — the heaviest corpus-prep stage per byte) and
-    # the re-registered sign-bucketed embedding near-dup pairs
     "exact_substring_dedup",
     "embed_neardup_pairs",
     "lm_perplexity_features",
     "benchmark_decontamination_spans",
-    # late r11: exact closed-set mining (subset-bitmask generator +
-    # one itemset groupBy) and the mixture materialization's
-    # per-domain rank window + copy explode
     "search_aggs_frequent_item_sets",
     "mixture_domain_resample",
-    # late r11 second wave: the KN tier (one more broadcast margin
-    # than the Laplace member) and the zero-shuffle line-rule bundle
     "lm_kneser_ney_features",
     "fineweb_quality_filters",
-    # r12: relevance-boost ranked pages (compile_score column algebra
-    # — two tf columns + TakeOrdered; one member stands in for the
-    # four-query family, the others share its plan shape)
+    # one member stands in for the boosted ranked-page family (the
+    # others share its plan shape)
     "search_boosted_multimatch",
-    # r13: the new plan families get recorded wall times (r6 verdict
-    # precedent) — the knn IVF probed tier (one pruned scan), the
-    # geohash cell groupBy, and the one-scan stored-query sweep
+    # geo, percolate, join-field and knn IVF families
     "search_knn_ivf",
     "geo_grid_counts",
     "percolate_orders",
-    # r13 late: the rest of the geo family — the tile/ring groupBys
-    # share geo_grid_counts' plan shape but carry the transcendental
-    # mercator/haversine key math; bounds+centroid is the
-    # six-conditional-extreme single-agg job
     "geo_tile_counts",
     "geo_rings_balance",
     "geo_bounds_centroid",
-    # second wave: decay-scored ranked page + ray-cast polygon filter
     "geo_distance_feature_rank",
     "geo_polygon_members",
-    # r14: the new plan families with real distributed cost get
-    # recorded wall times (r6 precedent) — the join-field semi-join
-    # flags, the children scope-switch, the scripted_metric terms
-    # frame, the moving-percentiles auxiliary explode+groupBy, and
-    # the filtered knn IVF tier
     "join_field_has_child",
     "join_field_has_parent",
     "children_agg_lineitems",
@@ -154,9 +126,8 @@ HEADLINE = (
     "search_knn_ivf_filtered",
 )
 
-#: Extra members timed only under ``--sf1`` (r4 verdict directive #4:
-#: the sf1 rehearsal becomes a per-round artifact so superlinear
-#: regressions are caught by comparison). The default HEADLINE stays
+#: Extra members timed only under ``--sf1`` / ``--all``, so superlinear
+#: regressions show in the sf1 artifact. The default HEADLINE stays
 #: untouched to keep BENCH_r{N}.json min-of-3 comparable across rounds.
 SF1_EXTRA = (
     "boilerplate_chunk_removal",
@@ -172,10 +143,7 @@ SF1_EXTRA = (
     "exact_substring_dedup",
     "lm_perplexity_features",
     "benchmark_decontamination_spans",
-    # r11: the Arrow-batched exact-BPE tier — CPU-dense Python work
-    # whose sf1 time proves the pandas-UDF batching parallelizes
     "token_count_bpe_exact",
-    # late r11: the two heaviest of the new members at corpus scale
     "search_aggs_frequent_item_sets",
     "mixture_domain_resample",
     "lm_kneser_ney_features",
@@ -184,22 +152,14 @@ SF1_EXTRA = (
 SF1_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        ".scale", "sf1")
 
-#: Machine-state canary (r5 verdict #7): three heavy, code-stable
-#: queries pinned to their RECORDED BENCH_r05.json min-of-3 times
-#: (sf0.1, local[32]). They run as part of HEADLINE anyway, so the
-#: ratio costs nothing. A uniform machine-state shift moves the canary
-#: and the total together — ``total_ratio / canary_ratio`` isolates
-#: the code effect, which r5 had to prove with a manual same-box A/B.
-#: Re-pin whenever a canary member's code is deliberately changed.
-#: r15 re-pin (r14 verdict #1): the r5-era pins made the ≤1.1 record
-#: gate reject genuinely QUIET hosts — four idle-host r14 runs read
-#: canary {1.078, 1.12, 1.189, 1.235} because these sub-2 s members'
-#: in-bench min-of-3 rarely amortizes JIT warm-up against pins from a
-#: different code/JVM generation. Values are VERBATIM min-of-3 from
-#: BENCH_sf01_r14.json (the newest gate-passing quiet sf0.1 artifact,
-#: canary 1.078 under the OLD pins); all three members code-stable.
-#: Record mode additionally runs canary members 5× (see the bench
-#: loop) so the min amortizes instead of riding run-3 luck.
+#: Machine-state canary: three heavy, code-stable queries pinned to
+#: recorded min-of-3 times (sf0.1, local[32]). They run as part of
+#: HEADLINE anyway, so the ratio costs nothing. A uniform machine-state
+#: shift moves the canary and the total together —
+#: ``total_ratio / canary_ratio`` isolates the code effect. Pins are
+#: VERBATIM min-of-3 from BENCH_sf01_r14.json; re-pin whenever a canary
+#: member's code is deliberately changed (history:
+#: docs/bench-history.md).
 CANARY_PINS = {
     "denormalized_orders": 2.042,
     "pricing_summary": 1.000,
@@ -207,54 +167,21 @@ CANARY_PINS = {
 }
 CANARY_SF, CANARY_CPUS = 0.1, "32"
 
-#: sf1-tier canary (r11 verdict #9): same mechanism for the --sf1
-#: artifact so cross-round sf1 comparisons stop leaning on machine
-#: stability. Pins = three heavy, code-stable members at their
-#: recorded BENCH_sf1_r10.json min-of-3 (local[32]). Re-pin when a
-#: member's code is deliberately changed.
+#: sf1-tier canary: same mechanism for the --sf1 artifact. Members must
+#: be code-stable since their pin artifact; pins are VERBATIM min-of-3
+#: from BENCH_sf1_r12.json (local[32]), the newest quiet sf1 artifact
+#: in which these members already had their current shape.
 SF1_CANARY_PINS = {
-    # r13: neardup_minhash_lsh left the canary set — its cost basis
-    # changed deliberately (exact-collapse + star-cap, see
-    # BASELINE_RESETS) and canary members must be code-stable.
-    # r14: quality_classifier_scores left for the same reason (the
-    # inline tier's Arrow-batched rewrite cut it ~13x — keeping the
-    # 10.442 pin would report every future run as impossibly quiet
-    # and blind the contention gate). The interim replacements
-    # (dsir_importance_weights 1.641 / mixture_domain_resample
-    # 0.615) ALSO left before any artifact was recorded against
-    # them: the r14 driver-local-relation rewrite (localrel) cut
-    # both deliberately (mixture 2.21 -> 0.29 s at sf0.1), so they
-    # fail the same code-stability rule.
-    #
-    # Current set: three members verified code-identical from r12
-    # through HEAD (function-body diff vs the r12 verdict commit,
-    # incl. their operators/* helpers), pinned at their recorded
-    # BENCH_sf1_r12.json min-of-3 — the last sf1 artifact from a
-    # proven-quiet host (its own canary_ratio 0.999, tight spreads).
-    # q4/text_stats were previously pinned at BENCH_sf1_r10 values;
-    # those embed pre-r12 drift (the quiet r12 artifact read them at
-    # 1.14x the r10 pins), which under the r14 gate would misreport
-    # a genuinely quiet host as contended — the pin basis must be
-    # the newest quiet artifact in which the member's code already
-    # had its current shape.
-    # r15 (ADVICE): token_count_bpe_exact left the set — its own r12
-    # spread was 1.663/0.785/0.754 (2.21×), so the member's min is a
-    # cold-JIT lottery and it made the gate itself noisy. Replaced by
-    # text_fingerprint: code-identical r12 → HEAD (operators/text.py
-    # diff since the r12 verdict commit touches only the quality-
-    # classifier functions) and r12 spread 1.93/1.902/2.084 (1.10×).
-    # Pin is the BENCH_sf1_r12.json min-of-3, same basis as its two
-    # set-mates.
     "q4_order_priority": 3.010,
     "text_stats": 4.283,
     "text_fingerprint": 1.902,
 }
 
 
-#: Machine-readable re-pin markers (r11 verdict #3): a member listed
-#: here changed its cost basis DELIBERATELY — cross-round comparison
-#: logic (and the judge) should compare against the first artifact
-#: that carries the marker, not flag the step as a regression.
+#: Machine-readable re-pin markers: a member listed here changed its
+#: cost basis DELIBERATELY — cross-round comparison should start from
+#: the first artifact that carries the marker, not flag the step as a
+#: regression.
 BASELINE_RESETS = {
     "pii_redaction":
         "r11 rule widening: 2 -> 6 rule families (email/phone + "
@@ -286,17 +213,13 @@ BASELINE_RESETS = {
 }
 
 
-#: Canary gate (r14, r13 verdict #1): an artifact-of-record captured
-#: on a contended host is WORSE than no artifact — r13 committed a
-#: canary-1.276 sf1 record carrying an unreproducible 9.6x reading on
-#: a code-untouched member. The canary exists to detect contamination;
-#: this makes it act: in the committed-artifact modes (--sf1 / --all)
-#: a canary ratio above the threshold refuses to emit (nonzero exit,
-#: ratio printed) so a contended reading can never become the record.
-#: The driver's plain per-round run is NOT gated — refusing there
-#: would leave the round without any bench evidence, and the judge
-#: already canary-adjusts that window. ``--allow-contended`` exists
-#: for diagnosis only; artifacts recorded with it must say so.
+#: Canary gate: an artifact of record captured on a contended host is
+#: WORSE than no artifact. In the record modes (--sf1 / --all) a canary
+#: ratio above the threshold refuses to emit (nonzero exit, ratio
+#: printed). The plain per-round run is NOT gated — refusing
+#: there would leave the round without bench evidence.
+#: ``--allow-contended`` exists for diagnosis only; artifacts recorded
+#: with it say so.
 CANARY_GATE_THRESHOLD = 1.1
 
 
@@ -326,62 +249,19 @@ def _state_store_tag(spark) -> str:
     return cls or "unset"
 
 
-def main() -> None:
-    sf1_mode = "--sf1" in sys.argv[1:]
-    # --all (r13, r12 verdict #8): time the FULL sf1 member list at the
-    # env-selected lake (normally sf0.1) so cross-round sf0.1
-    # comparison has a committed 74-member artifact with spreads —
-    # the driver's BENCH_r{N}.json tail is truncated to ~50 members.
-    all_members = "--all" in sys.argv[1:]
-    # --sf1 pins the lake (the env default belongs to the driver's
-    # per-round sf0.1 run; mixing them would mislabel the artifact)
-    sf_dir = SF1_DIR if sf1_mode else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if sf1_mode and not os.path.isdir(sf_dir):
-        sys.exit(f"sf1 lake missing at {sf_dir}; run scripts/gen_sf1.py first")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    from sql_database_to_elastic_datalake_spark.session import get_spark
-    import __spark_entry__ as entrymod
-
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # r13 (r12 verdict #1): the streaming members' recorded times MUST
-    # come from the pinned RocksDB provider — two consecutive rounds of
-    # "state-store IO drift" on streaming_window_counts were a bench
-    # protocol defect, not a plan one. Re-pin explicitly (get_spark
-    # already defaults to it; this guards externally mutated sessions),
-    # hard-fail rather than record an artifact under the wrong tier,
-    # and stamp the provider into the artifact of record.
-    from sql_database_to_elastic_datalake_spark.session import (
-        enable_rocksdb_state_store,
-        release_local_checkpoints,
-    )
-
-    enable_rocksdb_state_store(spark)
-    if _state_store_tag(spark) != "rocksdb":
-        sys.exit("bench requires the RocksDB state-store tier; got "
-                 + _state_store_tag(spark))
-
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    # Warm the engine machinery the measured queries share, so the first
-    # slot does not bill one-time costs to its query: JVM/codegen
-    # (trivial job), the parquet reader + broadcast-exchange + hash-agg
-    # + window paths (one micro-query over the two tiny dims). Steady
-    # state is what a cluster sees; the machinery warm-up touches none
-    # of the benchmarked plans themselves.
-    spark.range(1000).selectExpr("sum(id)").collect()
+def _warm_up(spark, sf_dir: str) -> None:
+    """Warm the engine machinery the measured queries share, so the
+    first slot does not bill one-time costs to its query: JVM/codegen
+    (trivial job), the parquet reader + broadcast-exchange + hash-agg
+    + window paths (one micro-query over the two tiny dims). The
+    warm-up touches none of the benchmarked plans themselves."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from sql_database_to_elastic_datalake_spark.sources.parquet import load_table
 
+    spark.range(1000).selectExpr("sum(id)").collect()
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
-    from pyspark.sql import Window
-
     (
         nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .withColumn(
@@ -398,61 +278,165 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # three runs per query, min reported: the first pays one-time costs
-    # (file listing, codegen compile) that say nothing about engine
-    # throughput; min-of-3 is the steady-state wall the cluster sees
-    # (measured: the flagship needs run 3 to fully amortize its
-    # broadcast+codegen warm-up — 2.6 s cold, 2.0 s second, 1.6-1.7 s
-    # steady).
-    bench_set = (HEADLINE + tuple(q for q in SF1_EXTRA
-                                  if q not in HEADLINE)
-                 if (sf1_mode or all_members) else HEADLINE)
+
+def measure_member(spark, tracer: Tracer, name: str, query, sf_dir: str,
+                   n_runs: int, plans_dir: str | None = None) -> dict:
+    """Build and noop-run one member ``n_runs`` times.
+
+    Construction and run each get their own span, so their wall times
+    and Spark jobs (job group per span) are told apart. Returns
+    ``seconds`` (min over runs of construction plus run), ``runs``
+    ([(construction s, run s)] per run), ``layers`` and, when the
+    member attaches them, ``cost_metrics``.
+
+    ``layers``: ``build_s`` is the fastest construction, ``first_s``
+    the first run (Catalyst plus codegen), ``steady_s`` the fastest
+    later run. ``build_jobs``/``run_jobs`` count each half's jobs;
+    ``stages``, ``shuffle_write_bytes`` and ``executor_run_s`` cover a
+    whole run (construction plus run). All of these are medians over
+    runs. ``task_skew`` (max/median task time of the longest stage) is
+    the largest over runs.
+    """
+    from sql_database_to_elastic_datalake_spark.session import (
+        release_local_checkpoints,
+    )
+
+    first = len(tracer.spans)
+    df = None
+    for _ in range(n_runs):
+        with tracer.span(f"{name}.build"):
+            df = query(spark, sf_dir)
+        with tracer.span(f"{name}.run"):
+            df.write.format("noop").mode("overwrite").save()
+    # everything below runs outside the timed spans
+    out: dict = {}
+    # data-bound cost metrics some operators attach (dedup_clusters'
+    # candidate pairs/propagation rounds, the LSH star-cap accounting),
+    # so a bench delta is attributable to data vs plan vs measurement.
+    # Read ONCE: lazy accountings run one small job on first read.
+    m = getattr(df, "_dedup_metrics", None)
+    if m:
+        out["cost_metrics"] = dict(m)
+    if plans_dir:
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
+            fh.write(df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution
+                .ExplainMode.fromString("formatted")))
+    tracer.harvest()
+    # release the member's localCheckpoint blocks before the next one
+    # (after the cost metrics above, which may read a checkpointed
+    # relation): accumulated blocks read as run-to-run spread
+    df = None
+    release_local_checkpoints(spark)
+
+    spans = tracer.spans[first:]
+    builds, runs = spans[0::2], spans[1::2]
+    pairs = list(zip(builds, runs))
+    run_s = [r.duration for r in runs]
+    med = statistics.median
+    out["runs"] = [(b.duration, r.duration) for b, r in pairs]
+    out["seconds"] = round(min(b + r for b, r in out["runs"]), 3)
+    out["layers"] = {
+        "build_s": round(min(b.duration for b in builds), 3),
+        "first_s": round(run_s[0], 3),
+        "steady_s": round(min(run_s[1:]), 3),
+        "build_jobs": med(len(b.jobs) for b in builds),
+        "run_jobs": med(len(r.jobs) for r in runs),
+        "stages": med(b.stages + r.stages for b, r in pairs),
+        "shuffle_write_bytes": med(b.shuffle_write_bytes
+                                   + r.shuffle_write_bytes
+                                   for b, r in pairs),
+        "executor_run_s": round(med(b.executor_run_s + r.executor_run_s
+                                    for b, r in pairs), 3),
+        "task_skew": round(max(s.task_skew for s in spans), 2),
+    }
+    return out
+
+
+def main() -> None:
+    argv = sys.argv[1:]
+    plans_dir = None
+    if "--plans" in argv:
+        i = argv.index("--plans")
+        plans_dir = argv[i + 1]
+        del argv[i:i + 2]
+        os.makedirs(plans_dir, exist_ok=True)
+    names = [a for a in argv if not a.startswith("--")]
+    sf1_mode = "--sf1" in argv
+    # --all: time the FULL sf1 member list at the env-selected lake
+    # (normally sf0.1) — the plain run's BENCH_r{N}.json tail is truncated
+    all_members = "--all" in argv
+    record_mode = sf1_mode or all_members
+    # --sf1 pins the lake (the env default belongs to the driver's
+    # per-round sf0.1 run; mixing them would mislabel the artifact)
+    sf_dir = SF1_DIR if sf1_mode else os.environ.get(
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if sf1_mode and not os.path.isdir(sf_dir):
+        sys.exit(f"sf1 lake missing at {sf_dir}; run scripts/gen_sf1.py first")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
+    if names:
+        bench_set = tuple(names)
+    elif record_mode:
+        bench_set = HEADLINE + tuple(q for q in SF1_EXTRA
+                                     if q not in HEADLINE)
+    else:
+        bench_set = HEADLINE
+
+    from sql_database_to_elastic_datalake_spark.session import (
+        enable_rocksdb_state_store,
+        get_spark,
+    )
+
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # the streaming members' recorded times MUST come from the pinned
+    # RocksDB provider: re-pin explicitly (get_spark already defaults to
+    # it; this guards externally mutated sessions), hard-fail rather
+    # than record an artifact under the wrong tier, and stamp the
+    # provider into the artifact
+    enable_rocksdb_state_store(spark)
+    if _state_store_tag(spark) != "rocksdb":
+        sys.exit("bench requires the RocksDB state-store tier; got "
+                 + _state_store_tag(spark))
+
+    _warm_up(spark, sf_dir)
+    tracer = Tracer(active=True)
+    tracer.spark = spark
+
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     spreads: dict[str, dict] = {}
     cost_metrics: dict[str, dict] = {}
-    record_mode = sf1_mode or all_members
     canary_set = set(SF1_CANARY_PINS if sf1_mode else CANARY_PINS)
     for name in bench_set:
         if name not in qs:
             continue
-        runs: list[float] = []
-        df = None
-        # r15 (r14 verdict #1): in RECORD mode the canary members run
-        # 5× instead of 3× — their sub-2 s min-of-3 often fails to
-        # amortize JIT warm-up, which is pure measurement noise in the
-        # contention ratio the gate acts on (four idle r14 hosts read
-        # 1.08-1.24 against honest pins). Min over all runs; every run
-        # rides the spread block. The driver's plain run is unchanged.
+        # min over runs: the first run pays one-time costs (file
+        # listing, codegen compile) that say nothing about engine
+        # throughput. In record mode the canary members run 5× — their
+        # sub-2 s min-of-3 often fails to amortize JIT warm-up, which
+        # is noise in the contention ratio the gate acts on.
         n_runs = 5 if (record_mode and name in canary_set) else 3
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        # data-bound cost metrics some operators attach (e.g.
-        # dedup_clusters' candidate_pairs/propagation_rounds, the LSH
-        # star-cap accounting) — recorded so a bench delta is
-        # attributable to data vs plan vs measurement (r11 verdict
-        # #1). Read ONCE, outside the timed region: lazy accountings
-        # (_CapAccounting) run one small job on first read.
-        m = getattr(df, "_dedup_metrics", None)
-        if m:
-            cost_metrics[name] = dict(m)
-        timings[name] = round(min(runs), 3)
-        # r15 (r14 verdict #3): release the member's localCheckpoint
-        # blocks BETWEEN members (outside every timed region, after
-        # the lazy cost metrics above were read — they run one job
-        # over a checkpointed relation). Without this, a record run's
-        # 3 constructions × 88 members accumulate checkpoint blocks
-        # until driver GC + the async ContextCleaner catch up, and
-        # the pressure reads as run-to-run spread on the dedup family
-        # (r14: simhash runs [8.99, 4.12, 17.41] vs isolated ~2.3 s).
-        df = None
-        release_local_checkpoints(spark)
-        if sf1_mode or all_members:
-            # variance-proof protocol (r11 verdict #1, extended to the
-            # committed sf0.1 artifact in r13): per-member per-run
-            # spread rides the artifact, so a >2x comparison hit can
-            # be told apart from run-to-run measurement noise
+        res = measure_member(spark, tracer, name, qs[name], sf_dir,
+                             n_runs, plans_dir)
+        timings[name] = res["seconds"]
+        layers[name] = res["layers"]
+        if "cost_metrics" in res:
+            cost_metrics[name] = res["cost_metrics"]
+        if record_mode:
+            # per-run spread rides the record artifacts, so a >2x
+            # comparison hit can be told apart from run-to-run noise
+            runs = [b + r for b, r in res["runs"]]
             spreads[name] = {
                 "runs": [round(r, 3) for r in runs],
                 "max_min_ratio": round(max(runs) / max(min(runs), 1e-9),
@@ -468,8 +452,9 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         # the tier the streaming members ran under — asserted rocksdb
-        # above, recorded so the artifact proves it (r12 verdict #1)
+        # above, recorded so the artifact proves it
         "state_store_provider": _state_store_tag(spark),
+        "layers": layers,
     }
     if spreads:
         out["spread"] = spreads
@@ -489,12 +474,12 @@ def main() -> None:
             sum(timings[q] for q in SF1_CANARY_PINS)
             / sum(SF1_CANARY_PINS.values()), 3)
         out["canary_queries"] = sorted(SF1_CANARY_PINS)
-    allow_contended = "--allow-contended" in sys.argv[1:]
+    allow_contended = "--allow-contended" in argv
     if allow_contended:
         out["allow_contended"] = True  # diagnostic run, NOT a record
     try:
         check_canary_gate(out.get("canary_ratio"),
-                          record_mode=(sf1_mode or all_members),
+                          record_mode=record_mode,
                           allow_contended=allow_contended)
     except SystemExit:
         # the timings are still useful for diagnosis — emit them on

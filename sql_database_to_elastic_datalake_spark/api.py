@@ -788,36 +788,7 @@ class LakeService:
             # AFTER the window re-sort — the order changed inside it)
             window = int(rescore.get("window_size", 10))
             rows = ranked.limit(max(window, from_ + k)).collect()
-            rspec = rescore.get("query") or {}
-            qw = float(rspec.get("query_weight", 1.0))
-            rqw = float(rspec.get("rescore_query_weight", 1.0))
-            mode = rspec.get("score_mode", "total")
-            combine = {
-                "total": lambda o, r: o + r,
-                "multiply": lambda o, r: o * r,
-                "avg": lambda o, r: (o + r) / 2.0,
-                "max": max,
-                "min": min,
-            }.get(mode)
-            if combine is None:
-                raise DslError(f"unknown rescore score_mode {mode!r}")
-            # ES combines only for docs that MATCH the rescore query;
-            # a non-matching window doc keeps query_weight * original
-            # (feeding 0 into multiply/avg/min would zero/halve/floor
-            # it and reorder the window differently from ES — r7
-            # ADVICE). Matched-ness is the rescore query's membership
-            # predicate computed in-plan (r12 ADVICE: a matched doc
-            # can legitimately score 0.0 under boost 0, and ES still
-            # combines it — score truthiness was the wrong proxy).
-            win = [
-                ((combine(qw * r["_score"], rqw * r["_rescore"])
-                  if r["_rescore_matched"]
-                  else qw * r["_score"]), i, r)
-                for i, r in enumerate(rows[:window])
-            ]
-            # stable on the original rank for equal combined scores
-            win.sort(key=lambda t: (-t[0], t[1]))
-            paged = [(c, r) for c, _, r in win] \
+            paged = _rescore_window(rows, rescore, window) \
                 + [(r["_score"], r) for r in rows[window:]]
             top = paged[from_:from_ + k]
             hits = [
@@ -1395,33 +1366,9 @@ class LakeService:
             if obs is not None:
                 total_value += obs.get["n"]
             if rescore is not None and rows:
-                rspec = rescore.get("query") or {}
-                qw = float(rspec.get("query_weight", 1.0))
-                rqw = float(rspec.get("rescore_query_weight", 1.0))
-                mode = rspec.get("score_mode", "total")
-                combine = {
-                    "total": lambda o, r: o + r,
-                    "multiply": lambda o, r: o * r,
-                    "avg": lambda o, r: (o + r) / 2.0,
-                    "max": max,
-                    "min": min,
-                }.get(mode)
-                if combine is None:
-                    raise DslError(
-                        f"unknown rescore score_mode {mode!r}")
-                # combine iff the rescore query MATCHES — a membership
-                # boolean computed in-plan, not score truthiness: a
-                # matched doc can score 0.0 (boost 0) and ES still
-                # combines it (r12 ADVICE)
-                head = [
-                    ((combine(qw * r["_score"], rqw * r["_rescore"])
-                      if r["_rescore_matched"]
-                      else qw * r["_score"]), i, r)
-                    for i, r in enumerate(rows[:window])
-                ]
-                head.sort(key=lambda t: (-t[0], t[1]))
-                rows = [r for _, _, r in head] + list(rows[window:])
-                rescored = {id(r): c for c, _, r in head}
+                head = _rescore_window(rows, rescore, window)
+                rows = [r for _, r in head] + list(rows[window:])
+                rescored = {id(r): c for c, r in head}
                 rows = rows[:from_ + k]
             else:
                 rescored = {}
@@ -3122,6 +3069,47 @@ def _rescore_expr(rescore: dict | None, df: "DataFrame"):
     # compiler shares the leaf semantics with the ranked pages
     return compile_score(rq, field_resolver=resolve,
                          schema_fields=df.schema).cast("double")
+
+
+#: ES rescore ``score_mode`` → how the weighted original and rescore
+#: scores of a matched window doc combine.
+_RESCORE_COMBINE = {
+    "total": lambda o, r: o + r,
+    "multiply": lambda o, r: o * r,
+    "avg": lambda o, r: (o + r) / 2.0,
+    "max": max,
+    "min": min,
+}
+
+
+def _rescore_window(rows, rescore: dict, window: int) -> list:
+    """ES's two-phase re-rank of the first ``window`` collected rows
+    (each carrying ``_score``, ``_rescore`` and ``_rescore_matched``):
+    ``[(combined score, row)]`` sorted by combined score, stable on
+    the original rank for ties. The caller appends the rows beyond
+    the window and pages.
+
+    ES combines only for docs that MATCH the rescore query; a
+    non-matching window doc keeps ``query_weight * original`` (feeding
+    0 into multiply/avg/min would zero/halve/floor it and reorder the
+    window differently from ES — r7 ADVICE). Matched-ness is the
+    rescore query's membership predicate computed in-plan (r12 ADVICE:
+    a matched doc can legitimately score 0.0 under boost 0, and ES
+    still combines it — score truthiness was the wrong proxy)."""
+    rspec = rescore.get("query") or {}
+    qw = float(rspec.get("query_weight", 1.0))
+    rqw = float(rspec.get("rescore_query_weight", 1.0))
+    mode = rspec.get("score_mode", "total")
+    combine = _RESCORE_COMBINE.get(mode)
+    if combine is None:
+        raise DslError(f"unknown rescore score_mode {mode!r}")
+    head = [
+        ((combine(qw * r["_score"], rqw * r["_rescore"])
+          if r["_rescore_matched"] else qw * r["_score"]), i, r)
+        for i, r in enumerate(rows[:window])
+    ]
+    head.sort(key=lambda t: (-t[0], t[1]))
+    return [(c, r) for c, _, r in head]
 
 
 def _rescore_match_expr(rescore: dict | None, df: "DataFrame"):

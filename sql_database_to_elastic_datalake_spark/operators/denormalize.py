@@ -47,7 +47,6 @@ def denormalized_orders(
     sf_dir: str,
     indexed_at: str = "2026-01-01T00:00:00",
     order_key: int | None = None,
-    ordered: bool = True,
 ) -> DataFrame:
     """Build the wide denormalized order document table.
 
@@ -169,9 +168,9 @@ def denormalized_orders(
     # (/root/reference/src/db_connector.py:300) only dictates its batch
     # iteration order — documents at rest are keyed, not ordered. A
     # global sort is a full range-shuffle of the wide output, pure cost
-    # at 100 TB, so it is opt-out-able; the driver's comparison is
-    # order-insensitive either way.
-    return out.orderBy("order_id") if ordered else out
+    # at 100 TB, so there is none; ``sinks.writer.write_lake(...,
+    # cluster_by=("order_id",))`` gives at-rest locality instead.
+    return out
 
 
 #: DuckDB oracle for :func:`denormalized_orders` (driver correctness gate).

@@ -88,14 +88,8 @@ def register(name: str, oracle: str | None = None):
 # Flagship: the denormalized wide-document pipeline (SURVEY §3.2)
 # ---------------------------------------------------------------------------
 
-# ordered=False: document order at rest is meaningless (the reference's
-# ORDER BY only sequenced its write batches); the correctness compare is
-# order-insensitive and a global range-shuffle of the wide output is the
-# single most expensive no-op in the plan at scale.
 register("denormalized_orders", denormalize.DENORMALIZED_ORDERS_ORACLE)(
-    lambda spark, sf_dir: denormalize.denormalized_orders(
-        spark, sf_dir, ordered=False
-    )
+    lambda spark, sf_dir: denormalize.denormalized_orders(spark, sf_dir)
 )
 
 

@@ -12,6 +12,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The RocksDB streaming state tier — THE DEFAULT since r5 (see its
+#: _DEFAULT_CONF entry for the measurement that decided it). Kept as a
+#: named constant for sessions built outside this factory and for the
+#: A/B harness. Runtime-settable, but it only takes effect for queries
+#: STARTED after it is set — apply before .start().
+ROCKSDB_STATE_STORE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+        "true",
+}
+
 #: Conf applied to every session we build. All of these are also safe to
 #: set on an existing session at runtime except the codegen/arrow ones,
 #: which are static — hence ``ensure_session_conf`` below for sessions we
@@ -73,13 +86,7 @@ _DEFAULT_CONF = {
     # Bench discontinuity: BENCH_r05 streaming numbers are the first
     # recorded under RocksDB. scripts/bench_streaming_state.py re-runs
     # the A/B; HDFS_STATE_STORE_CONF reverts for comparison.
-    **{
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-    },
+    **ROCKSDB_STATE_STORE_CONF,
 }
 
 
@@ -123,19 +130,6 @@ def get_spark(
     ensure_session_conf(spark)
     return spark
 
-
-#: The RocksDB streaming state tier — THE DEFAULT since r5 (see the
-#: _DEFAULT_CONF entry for the measurement that decided it). Kept as a
-#: named constant for sessions built outside this factory and for the
-#: A/B harness. Runtime-settable, but it only takes effect for queries
-#: STARTED after it is set — apply before .start().
-ROCKSDB_STATE_STORE_CONF = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
-        "true",
-}
 
 #: Spark's shipped default, retained for A/B comparison
 #: (scripts/bench_streaming_state.py) and for reverting on hosts where
