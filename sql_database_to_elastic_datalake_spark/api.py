@@ -4042,6 +4042,18 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     app = Flask("sql_database_to_elastic_datalake_spark")
     app.json = _IsoJSONProvider(app)
 
+    # The error-to-status mapping, once for every route. A malformed or
+    # unsupported DSL tree is the CALLER's error — ES's 400, not a 500;
+    # a dangling table/doc/template reference is ES's 404 (NotFoundError
+    # subclasses DslError; Flask picks the most specific handler).
+    @app.errorhandler(NotFoundError)
+    def _not_found(ex):
+        return jsonify({"error": str(ex)}), 404
+
+    @app.errorhandler(DslError)
+    def _bad_request(ex):
+        return jsonify({"error": str(ex)}), 400
+
     def _etype(segment):
         return ROUTE_ENTITY.get(segment, segment.rstrip("s"))
 
@@ -4187,15 +4199,12 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                 or isinstance(ms, bool):
             return jsonify(
                 {"error": "min_score must be a number"}), 400
-        try:
-            return jsonify(_wire_envelope(
-                service.search(term, body.get("tables"), k=k,
-                               fields=body.get("fields"), from_=from_,
-                               min_score=ms,
-                               rescore=body.get("rescore")),
-            )), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(_wire_envelope(
+            service.search(term, body.get("tables"), k=k,
+                           fields=body.get("fields"), from_=from_,
+                           min_score=ms,
+                           rescore=body.get("rescore")),
+        )), 200
 
     @app.route("/search/advanced", methods=["POST"])
     def advanced():
@@ -4204,8 +4213,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def _advanced_body(body):
         """The /search/advanced body pipeline — shared verbatim by the
         template route (r11): a rendered template IS an advanced body."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         k = _page_size(body)
         if k is None:
             return jsonify({"error": "k/size must be a non-negative integer"}), 400
@@ -4240,16 +4247,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                                     f"scroll is not supported with "
                                     f"{bad} (the token manages the "
                                     "cursor)"}), 400
-            try:
-                return jsonify(_wire_envelope(service.scroll_search(
-                    table=body.get("table"),
-                    dsl=body.get("query", {"match_all": {}}),
-                    size=k, sort=body.get("sort"),
-                    source=body.get("_source"),
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                ))), 200
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
+            return jsonify(_wire_envelope(service.scroll_search(
+                table=body.get("table"),
+                dsl=body.get("query", {"match_all": {}}),
+                size=k, sort=body.get("sort"),
+                source=body.get("_source"),
+                aggs=body.get("aggs") or body.get("aggregations"),
+            ))), 200
         if body.get("pit") is not None:
             # ES 8.x PIT + search_after: the pit carries the index (no
             # index in the path → no "table" key), the caller manages
@@ -4267,89 +4271,71 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                                     f"pit is not supported with "
                                     f"{bad} (use search_after "
                                     "paging)"}), 400
-            try:
-                table = service.resolve_pit(body["pit"])
-                out = service.advanced_search(
-                    table, body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=service.pit_total_sort(
-                        table, body.get("sort")),
-                    search_after=body.get("search_after"),
-                    source=body.get("_source"),
-                    highlight=body.get("highlight"),
-                    post_filter=body.get("post_filter"),
-                    track_total_hits=body.get("track_total_hits"),
-                    fields_opt=(
-                        ((body.get("fields") or [])
-                         + (body.get("docvalue_fields") or []))
-                        or None),
-                    suggest=body.get("suggest"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                    script_fields=body.get("script_fields"),
-                )
-                # ES returns the (possibly refreshed) pit_id on every
-                # page; stateless tokens never change
-                pid = body["pit"]
-                out["pit_id"] = (pid.get("id")
-                                 if isinstance(pid, dict) else pid)
-                return jsonify(_wire_envelope(out)), 200
-            except NotFoundError as ex:
-                return jsonify({"error": str(ex)}), 404
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
-        try:
-            return jsonify(_wire_envelope(
-                service.advanced_search(
-                    # the reference always queries the index pattern
-                    # (src/search_api.py:40-44); an explicit table (or
-                    # narrower pattern) is the engine's extension
-                    body.get("table", INDEX_PREFIX + "*"),
-                    # ES defaults an omitted query to match_all —
-                    # aggs-only bodies are a standard Kibana shape
-                    body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=body.get("sort"),
-                    search_after=body.get("search_after"),
-                    from_=from_,
-                    source=body.get("_source"),
-                    highlight=body.get("highlight"),
-                    post_filter=body.get("post_filter"),
-                    collapse=body.get("collapse"),
-                    track_total_hits=body.get("track_total_hits"),
-                    # docvalue_fields is the pre-8.x spelling of the
-                    # fields option — same {field, format} entries,
-                    # same hit["fields"] arrays (what older Kibana
-                    # sends by default); both merge into one list
-                    fields_opt=(
-                        ((body.get("fields") or [])
-                         + (body.get("docvalue_fields") or []))
-                        or None),
-                    suggest=body.get("suggest"),
-                    knn=body.get("knn"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                    script_fields=body.get("script_fields"),
-                    indices_boost=body.get("indices_boost"),
-                    rescore=body.get("rescore"),
-                    min_score=body.get("min_score"),
-                )
-            )), 200
-        except NotFoundError as ex:
-            # r13 late: index-based percolation references a concrete
-            # table/doc — a dangling reference is ES's 404
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            # a malformed/unsupported DSL tree is the CALLER's error —
-            # the reference returns ES's 400 for these, not a 500
-            return jsonify({"error": str(ex)}), 400
+            table = service.resolve_pit(body["pit"])
+            out = service.advanced_search(
+                table, body.get("query", {"match_all": {}}), k=k,
+                aggs=body.get("aggs") or body.get("aggregations"),
+                sort=service.pit_total_sort(
+                    table, body.get("sort")),
+                search_after=body.get("search_after"),
+                source=body.get("_source"),
+                highlight=body.get("highlight"),
+                post_filter=body.get("post_filter"),
+                track_total_hits=body.get("track_total_hits"),
+                fields_opt=(
+                    ((body.get("fields") or [])
+                     + (body.get("docvalue_fields") or []))
+                    or None),
+                suggest=body.get("suggest"),
+                runtime_mappings=body.get("runtime_mappings"),
+                script_fields=body.get("script_fields"),
+            )
+            # ES returns the (possibly refreshed) pit_id on every
+            # page; stateless tokens never change
+            pid = body["pit"]
+            out["pit_id"] = (pid.get("id")
+                             if isinstance(pid, dict) else pid)
+            return jsonify(_wire_envelope(out)), 200
+        return jsonify(_wire_envelope(
+            service.advanced_search(
+                # the reference always queries the index pattern
+                # (src/search_api.py:40-44); an explicit table (or
+                # narrower pattern) is the engine's extension
+                body.get("table", INDEX_PREFIX + "*"),
+                # ES defaults an omitted query to match_all —
+                # aggs-only bodies are a standard Kibana shape
+                body.get("query", {"match_all": {}}), k=k,
+                aggs=body.get("aggs") or body.get("aggregations"),
+                sort=body.get("sort"),
+                search_after=body.get("search_after"),
+                from_=from_,
+                source=body.get("_source"),
+                highlight=body.get("highlight"),
+                post_filter=body.get("post_filter"),
+                collapse=body.get("collapse"),
+                track_total_hits=body.get("track_total_hits"),
+                # docvalue_fields is the pre-8.x spelling of the
+                # fields option — same {field, format} entries,
+                # same hit["fields"] arrays (what older Kibana
+                # sends by default); both merge into one list
+                fields_opt=(
+                    ((body.get("fields") or [])
+                     + (body.get("docvalue_fields") or []))
+                    or None),
+                suggest=body.get("suggest"),
+                knn=body.get("knn"),
+                runtime_mappings=body.get("runtime_mappings"),
+                script_fields=body.get("script_fields"),
+                indices_boost=body.get("indices_boost"),
+                rescore=body.get("rescore"),
+                min_score=body.get("min_score"),
+            )
+        )), 200
 
     def _resolve_template(body):
         """(source, params) from a template request body — exactly one
         of inline ``source`` / stored ``id``; unknown keys are named
         400s (the reject-instead-of-drop policy)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         if not isinstance(body, dict):
             raise DslError("template request must be a JSON object")
         unknown = sorted(set(body) - {"source", "id", "params", "table"})
@@ -4384,14 +4370,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         )
 
         body = request.get_json(force=True)
-        try:
-            source, params = _resolve_template(body)
-            rendered = render_search_template(
-                source, params, partials=service.stored_templates)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        source, params = _resolve_template(body)
+        rendered = render_search_template(
+            source, params, partials=service.stored_templates)
         # the engine's table extension rides the OUTER request (ES
         # carries the index in the path); the template may also set it
         if body.get("table") is not None and "table" not in rendered:
@@ -4407,14 +4388,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         )
 
         body = request.get_json(force=True)
-        try:
-            source, params = _resolve_template(body)
-            rendered = render_search_template(
-                source, params, partials=service.stored_templates)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        source, params = _resolve_template(body)
+        rendered = render_search_template(
+            source, params, partials=service.stored_templates)
         return jsonify({"template_output": rendered}), 200
 
     @app.route("/scripts/<sid>", methods=["PUT", "POST"])
@@ -4423,11 +4399,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             validate_stored_script,
         )
 
-        try:
-            service.stored_templates[sid] = validate_stored_script(
-                request.get_json(force=True))
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        service.stored_templates[sid] = validate_stored_script(
+            request.get_json(force=True))
         return jsonify({"acknowledged": True}), 200
 
     @app.route("/scripts/<sid>", methods=["GET"])
@@ -4467,8 +4440,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             # of the table percolated against, unknown here; match
             # time still raises the named 400 on a non-geo target
             pass
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
         service.percolator_queries[pid] = body["query"]
         return jsonify({"acknowledged": True, "_id": pid}), 200
 
@@ -4492,10 +4463,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def termvectors_route():
         """ES ``_termvectors``: one doc's per-field term vectors with
         optional corpus statistics (service.termvectors docstring)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
         if not isinstance(body, dict):
             return jsonify({"error": "body must be a JSON object"}), 400
@@ -4512,18 +4479,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not body.get("table") or body.get("id") is None:
             return jsonify({"error":
                             "termvectors requires table and id"}), 400
-        try:
-            return jsonify(service.termvectors(
-                body["table"], body["id"],
-                fields=body.get("fields"),
-                term_statistics=bool(body.get("term_statistics")),
-                field_statistics=body.get("field_statistics", True)
-                is not False,
-            )), 200
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.termvectors(
+            body["table"], body["id"],
+            fields=body.get("fields"),
+            term_statistics=bool(body.get("term_statistics")),
+            field_statistics=body.get("field_statistics", True)
+            is not False,
+        )), 200
 
     @app.route("/search/mtermvectors", methods=["POST"])
     def mtermvectors_route():
@@ -4531,10 +4493,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         request table, or ``docs`` entries carrying ``_index``/
         ``_id`` (+ per-entry fields/term_statistics). Per-entry
         errors stay inline (the multi-API contract)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
         if not isinstance(body, dict):
             return jsonify({"error": "body must be a JSON object"}), 400
@@ -4595,17 +4553,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         (precision/recall@k, MRR, (n)DCG, ERR). Metrics are computed
         driver-side over the page's ids (bounded by k); each request
         is ONE ordinary ranked search."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-        )
-
         body = request.get_json(force=True)
-        try:
-            out = _run_rank_eval(service, body)
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = _run_rank_eval(service, body)
         return jsonify(out), 200
 
     @app.route("/search/count", methods=["POST"])
@@ -4614,28 +4563,23 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         One count job per table with the predicate pushed to the
         scan — the same cost ES pays. Runtime fields are honored
         (a Kibana count over a runtime filter works)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "query",
                                       "runtime_mappings"})
         if unknown:
             return jsonify({"error":
                             f"unsupported count keys: {unknown}"}), 400
-        try:
-            out = service.advanced_search(
-                body.get("table", INDEX_PREFIX + "*"),
-                body.get("query", {"match_all": {}}),
-                k=0, track_total_hits=True,
-                runtime_mappings=body.get("runtime_mappings"))
-            return jsonify({
-                "count": out["hits"]["total"]["value"],
-                # the official client reads _shards for success gating
-                "_shards": {"total": 1, "successful": 1,
-                            "skipped": 0, "failed": 0},
-            }), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = service.advanced_search(
+            body.get("table", INDEX_PREFIX + "*"),
+            body.get("query", {"match_all": {}}),
+            k=0, track_total_hits=True,
+            runtime_mappings=body.get("runtime_mappings"))
+        return jsonify({
+            "count": out["hits"]["total"]["value"],
+            # the official client reads _shards for success gating
+            "_shards": {"total": 1, "successful": 1,
+                        "skipped": 0, "failed": 0},
+        }), 200
 
     @app.route("/search/delete_by_query", methods=["POST"])
     def delete_by_query_route():
@@ -4645,8 +4589,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``conflicts`` abort/proceed is accepted-and-ignored (a
         snapshot lake rewrite has no concurrent versioning to
         conflict with)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "conflicts"})
@@ -4663,19 +4605,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not isinstance(body.get("query"), dict):
             return jsonify({"error": "delete_by_query requires a "
                                      "query object"}), 400
-        try:
-            return jsonify(service.delete_by_query(
-                table, body["query"])), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.delete_by_query(
+            table, body["query"])), 200
 
     @app.route("/search/update_by_query", methods=["POST"])
     def update_by_query_route():
         """ES ``_update_by_query`` (service.update_by_query): painless
         assignment subset over the matched set; no ``query`` means
         match_all, like ES."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "script", "conflicts"})
@@ -4692,11 +4629,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         q = body.get("query")
         if q is not None and not isinstance(q, dict):
             return jsonify({"error": "query must be an object"}), 400
-        try:
-            return jsonify(service.update_by_query(
-                table, q, body.get("script"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.update_by_query(
+            table, q, body.get("script"))), 200
 
     #: completed async searches kept for the GET/DELETE lifecycle
     #: (service-local, like the stored-scripts namespace)
@@ -4951,8 +4885,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``rows`` (+ ``cursor`` when more), cursor pages carry rows
         only, ``columnar: true`` transposes to per-column ``values``
         lists — all per the ES SQL REST docs."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"query", "fetch_size", "cursor",
                                       "columnar"})
@@ -4981,10 +4913,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             if not isinstance(body.get("query"), str):
                 return jsonify({"error": "sql requires a query "
                                          "string"}), 400
-            try:
-                cols, all_rows = service.sql_query(body["query"])
-            except DslError as ex:
-                return jsonify({"error": str(ex)}), 400
+            cols, all_rows = service.sql_query(body["query"])
             rows, rest = all_rows[:fs], all_rows[fs:]
             out = {"columns": cols}
         if columnar:
@@ -5015,8 +4944,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/search/reindex", methods=["POST"])
     def reindex_route():
         """ES ``_reindex`` (service.reindex)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"source", "dest", "script",
                                       "conflicts"})
@@ -5026,10 +4953,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if body.get("conflicts") not in (None, "abort", "proceed"):
             return jsonify({"error": "conflicts must be abort or "
                                      "proceed"}), 400
-        try:
-            return jsonify(service.reindex(body)), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.reindex(body)), 200
 
     @app.route("/search/msearch", methods=["POST"])
     def msearch_route():
@@ -5039,8 +4963,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         take ``index`` (table/pattern); bodies take the
         /search/advanced key set."""
         import json as _json
-
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
 
         raw = request.get_data(as_text=True) or ""
         lines = [ln for ln in raw.splitlines() if ln.strip()]
@@ -5149,48 +5071,36 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``_mget``: batch point lookups, one pushed-In scan per
         distinct table, misses reported per entry (never a request
         error)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "ids", "docs",
                                       "_source"})
         if unknown:
             return jsonify({"error":
                             f"unsupported mget keys: {unknown}"}), 400
-        try:
-            return jsonify(service.mget(
-                table=body.get("table") or body.get("index"),
-                ids=body.get("ids"), docs=body.get("docs"),
-                source=body.get("_source"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.mget(
+            table=body.get("table") or body.get("index"),
+            ids=body.get("ids"), docs=body.get("docs"),
+            source=body.get("_source"))), 200
 
     @app.route("/search/field_caps", methods=["POST", "GET"])
     def field_caps_route():
         """ES ``_field_caps``: schema capabilities for an index
         pattern — Kibana's first call. Footer metadata only, no job."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "fields"})
         if unknown:
             return jsonify({"error":
                             f"unsupported field_caps keys: {unknown}"}), 400
-        try:
-            return jsonify(service.field_caps(
-                table=body.get("table") or body.get("index")
-                or request.args.get("index"),
-                fields=body.get("fields")
-                or request.args.get("fields"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.field_caps(
+            table=body.get("table") or body.get("index")
+            or request.args.get("index"),
+            fields=body.get("fields")
+            or request.args.get("fields"))), 200
 
     @app.route("/search/terms_enum", methods=["POST"])
     def terms_enum_route():
         """ES ``_terms_enum``: prefix autocomplete over a keyword
         field (Kibana's field-value suggestions)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "field",
                                       "string", "size",
@@ -5204,25 +5114,20 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             size = int(body.get("size", 10))
         except (TypeError, ValueError):
             return jsonify({"error": "size must be an integer"}), 400
-        try:
-            return jsonify(service.terms_enum(
-                table=(body.get("table") or body.get("index")
-                       or INDEX_PREFIX + "*"),
-                field=body.get("field"),
-                string=str(body.get("string", "") or ""),
-                size=size,
-                case_insensitive=bool(body.get("case_insensitive",
-                                                False)),
-                search_after=body.get("search_after"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.terms_enum(
+            table=(body.get("table") or body.get("index")
+                   or INDEX_PREFIX + "*"),
+            field=body.get("field"),
+            string=str(body.get("string", "") or ""),
+            size=size,
+            case_insensitive=bool(body.get("case_insensitive",
+                                            False)),
+            search_after=body.get("search_after"))), 200
 
     @app.route("/search/analyze", methods=["POST"])
     def analyze_route():
         """ES ``_analyze``: the engine's one analysis chain, echoed
         with original-text offsets. Driver-side only."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"text", "analyzer"})
         if unknown:
@@ -5232,19 +5137,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                             "unimplemented)"}), 400
         if "text" not in body:
             return jsonify({"error": "analyze requires text"}), 400
-        try:
-            return jsonify(analyze_text(
-                body["text"], body.get("analyzer", "standard"))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(analyze_text(
+            body["text"], body.get("analyzer", "standard"))), 200
 
     @app.route("/search/explain", methods=["POST"])
     def explain_route():
         """ES ``_explain``: per-document match breakdown (membership
         explanation — the BM25 tree divergence is documented on the
         service method)."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         unknown = sorted(set(body) - {"table", "index", "id", "query"})
         if unknown:
@@ -5254,32 +5154,22 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not table or body.get("id") is None:
             return jsonify(
                 {"error": "explain requires table and id"}), 400
-        try:
-            out = service.explain(
-                table, body["id"],
-                body.get("query", {"match_all": {}}))
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        out = service.explain(
+            table, body["id"],
+            body.get("query", {"match_all": {}}))
         # ES returns the found:false envelope with a 404 status
         return jsonify(out), (200 if out.get("found") else 404)
 
     @app.route("/search/scroll", methods=["POST"])
     def scroll_continue():
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True)
         sid = body.get("scroll_id")
         if not isinstance(sid, str) or not sid:
             return jsonify({"error": "scroll_id is required"}), 400
         # "scroll" (the TTL refresh) is accepted-and-ignored —
         # stateless tokens don't expire (scroll_search docs)
-        try:
-            return jsonify(_wire_envelope(
-                service.scroll_search(scroll_id=sid))), 200
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(_wire_envelope(
+            service.scroll_search(scroll_id=sid))), 200
 
     @app.route("/search/scroll", methods=["DELETE"])
     def scroll_clear():
@@ -5292,8 +5182,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``POST /<index>/_pit``: mint a point-in-time id
         (open_pit docs — stateless token; keep_alive accepted and
         ignored). Body/query: {"table": ..., "keep_alive": ...}."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "keep_alive"})
         if unknown:
@@ -5301,13 +5189,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                             f"unsupported pit keys: {unknown}"}), 400
         table = (body.get("table") or body.get("index")
                  or request.args.get("table"))
-        try:
-            return jsonify(service.open_pit(
-                table, keep_alive=body.get("keep_alive"))), 200
-        except NotFoundError as ex:
-            return jsonify({"error": str(ex)}), 404
-        except DslError as ex:
-            return jsonify({"error": str(ex)}), 400
+        return jsonify(service.open_pit(
+            table, keep_alive=body.get("keep_alive"))), 200
 
     @app.route("/search/validate", methods=["POST"])
     def validate_query():

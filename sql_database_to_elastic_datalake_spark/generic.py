@@ -45,8 +45,3 @@ def sync_generic_table(
     # table's row silently lose in a shared content-keyed lake
     return out.withColumn("doc_id", content_hash(list(out.columns)))
 
-
-def dedup_by_content(df: DataFrame, doc_id_col: str = "doc_id") -> DataFrame:
-    """Idempotency view: one row per content id (any row — rows with the
-    same content id are identical by construction)."""
-    return df.dropDuplicates([doc_id_col])

@@ -23,7 +23,7 @@ bit-for-bit for differential testing. Production swaps in xxhash64.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sql_database_to_elastic_datalake_spark.functions.scalar import content_hash
@@ -170,114 +170,15 @@ def jaccard_pairs(
 # MinHash + LSH (scale path)
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str,
-    seeds: tuple[str, ...] = DEFAULT_SEEDS,
-) -> DataFrame:
-    """Per-doc MinHash signature: for each seed, the min md5 hex digest
-    of ``seed|shingle`` — hex-string order is a uniform permutation, so
-    P[minhash_a = minhash_b] = Jaccard(a, b)."""
-    aggs = [
-        F.min(F.md5(F.concat_ws("|", F.lit(s), F.col("shingle")))).alias(f"mh_{i}")
-        for i, s in enumerate(seeds)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    bands: int,
-    rows_per_band: int,
-    bucket_cap: int | None = None,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Band the signature and emit distinct (a < b) bucket-collision pairs.
-
-    Each band key is the md5 of its row concatenation. The bands are
-    melted to long form (id, band_idx, band_key) so candidate generation
-    is ONE self-join on (band_idx, band_key) — a per-band join loop
-    would shuffle the signature table once per band; melting costs a
-    single explode and a single shuffle regardless of band count.
-
-    ``bucket_cap`` (r13, r12 verdict #2) bounds pair EMISSION under
-    adversarial bucket density: a boilerplate-heavy corpus puts k
-    near-identical docs in the same band bucket and the all-pairs join
-    emits k(k-1)/2 rows per bucket — quadratic in clique size, the one
-    super-linear stage the sf10 rehearsal measured. A bucket larger
-    than the cap switches to STAR emission: every member pairs with the
-    bucket's minimum id (the hub) only — k-1 rows, linear — instead of
-    all pairs. Downstream cluster resolution (:func:`dedup_clusters`)
-    recovers the full clique through the hub by transitive closure, so
-    keep-one-per-cluster semantics are unchanged; what is lost is only
-    the explicit non-hub pair rows (and, for false-positive bucket
-    members whose hub pair fails verification, a possible member-member
-    link — the documented recall trade at pathological density). The
-    bucket-size pass is one groupBy + join on the SAME key the
-    candidate self-join shuffles on, so the exchange is reused.
-
-    ``metrics`` (filled via an Observation riding the bucket-stats
-    materialization — no extra job) records the no-silent-caps
-    accounting: ``capped_buckets`` (buckets that switched to star
-    emission) and ``capped_bucket_docs`` (their total membership rows).
-    Read it AFTER an action has materialized the result.
-    """
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_structs.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
-            )
-        )
-    melted = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bk")
-    ).select(
-        F.col(id_col), F.col("bk.band_idx").alias("band_idx"),
-        F.col("bk.band_key").alias("band_key"),
-    )
-    if bucket_cap is None:
-        left = melted.select(F.col(id_col).alias("a"), "band_idx", "band_key")
-        right = melted.select(F.col(id_col).alias("b"), "band_idx", "band_key")
-        return (
-            left.join(right, ["band_idx", "band_key"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-    # bucket size + hub via ONE window pass over the bucket key the
-    # candidate self-join shuffles on anyway — a groupBy+join-back
-    # form re-plans the shingle→signature subtree once per consumer
-    # (measured: 22 exchanges vs 6), while the windowed relation is
-    # one exchange every branch reuses
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_idx", "band_key")
-    keyed = melted.withColumn("__bsz", F.count("*").over(w)) \
-                  .withColumn("__hub", F.min(id_col).over(w))
-    sparse = keyed.filter(F.col("__bsz") <= bucket_cap)
-    left = sparse.select(F.col(id_col).alias("a"), "band_idx", "band_key")
-    right = sparse.select(F.col(id_col).alias("b"), "band_idx", "band_key")
-    all_pairs = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    # dense buckets: hub = bucket min, so hub < member always holds
-    star = (
-        keyed.filter(F.col("__bsz") > bucket_cap)
-        .filter(F.col(id_col) != F.col("__hub"))
-        .select(F.col("__hub").alias("a"), F.col(id_col).alias("b"))
-    )
-    if metrics is not None:
-        metrics["bucket_cap"] = bucket_cap
-        metrics["__dense_stats"] = keyed.filter(
-            (F.col("__bsz") > bucket_cap)
-            & (F.col(id_col) == F.col("__hub"))
-        ).select("__bsz")
-    return all_pairs.unionByName(star).distinct()
+#: per-band (MinHash) / per-chunk (SimHash) bucket membership above
+#: which pair emission switches to star edges: all-pairs inside a
+#: bucket is k(k-1)/2 — at boilerplate density (the sf10 rehearsal's
+#: 100-member cliques, and the realistic 100-TB crawl shape) that is the
+#: one super-linear stage in the pipeline. 32 is comfortably above any
+#: honest near-dup neighborhood at the oracle-checked scales (sf0.01/
+#: sf0.1 max bucket sizes are single-digit) while bounding adversarial
+#: buckets at k-1 emissions; accounting rides ``_dedup_metrics``.
+BUCKET_CAP = 32
 
 
 class _CapAccounting:
@@ -289,8 +190,8 @@ class _CapAccounting:
 
     _KEYS = ("bucket_cap", "capped_buckets", "capped_bucket_docs")
 
-    def __init__(self, cap: int, dense_stats: DataFrame) -> None:
-        self._cap, self._df, self._vals = cap, dense_stats, None
+    def __init__(self, dense_stats: DataFrame) -> None:
+        self._df, self._vals = dense_stats, None
 
     def _resolve(self) -> dict:
         if self._vals is None:
@@ -307,7 +208,7 @@ class _CapAccounting:
 
     def __getitem__(self, k):
         if k == "bucket_cap":
-            return self._cap
+            return BUCKET_CAP
         return self._resolve()[k]
 
     def __iter__(self):
@@ -370,24 +271,21 @@ def minhash_lsh_neardup(
     shingle_n: int = 1,
     seeds: tuple[str, ...] = DEFAULT_SEEDS,
     bands: int = 4,
-    collapse_exact: bool = False,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
-    """End-to-end near-dup detection: shingle → MinHash → LSH candidates
-    → exact-Jaccard verification of candidates only.
+    """End-to-end near-dup detection: exact-collapse → shingle → MinHash
+    → LSH band buckets → exact-Jaccard verification inside each bucket.
 
     Output: a, b, jaccard (verified ≥ threshold).
 
-    ``collapse_exact`` runs :func:`exact_representatives` first, so
-    byte-identical duplicates never reach banding (their pairs belong
-    to :func:`exact_dedup`); emitted pairs then reference representative
-    ids only. ``bucket_cap`` bounds per-bucket pair emission via star
-    edges (see :func:`lsh_candidate_pairs`); when set, the returned
+    :func:`exact_representatives` runs first, so byte-identical
+    duplicates never reach banding (their pairs belong to
+    :func:`exact_dedup`); emitted pairs reference representative ids
+    only. A band bucket holding more than :data:`BUCKET_CAP` docs emits
+    star edges (see :func:`_bucket_verified_pairs`), and the returned
     DataFrame carries a ``_dedup_metrics`` mapping with the capped-
-    bucket accounting (readable after an action). Both default OFF here
-    for drop-in compatibility; the registered corpus queries enable
-    both — that pairing is what holds emission ~linear in docs on a
-    boilerplate-heavy corpus (the 100-TB adversarial case).
+    bucket accounting (readable after an action). The collapse and the
+    cap together hold emission ~linear in docs on a boilerplate-heavy
+    corpus (the 100-TB adversarial case).
     """
     if len(seeds) % bands:
         # a non-divisible split would silently DROP the trailing seeds
@@ -396,25 +294,23 @@ def minhash_lsh_neardup(
             f"{len(seeds)} seeds do not split into {bands} bands"
         )
     rows_per_band = len(seeds) // bands
-    if collapse_exact:
-        df = exact_representatives(df, id_col, [text_col])
-    else:
-        df = widen_narrow_input(df, df)
-    # distinct=False: ids are unique here by contract (raw PK scan or
-    # the collapsed representatives), and the two consumers below
-    # (min per seed, collect_set) are duplicate-insensitive anyway —
-    # the guard exchange bought nothing (r14, guide §2.4).
+    df = exact_representatives(df, id_col, [text_col])
+    # distinct=False: the collapsed representatives' ids are unique, and
+    # the two consumers below (min per seed, collect_set) are
+    # duplicate-insensitive anyway — the guard exchange bought nothing
+    # (r14, guide §2.4).
     sh = word_shingles(df, id_col, text_col, n=shingle_n, distinct=False)
     # ONE groupBy computes signatures AND shingle sets, checkpointed
     # once (r14; refines the r13 two-checkpoint shape): the signature
-    # table feeds the melted band join's two sides plus the star/
-    # metrics branches, and the set table feeds both verification
-    # sides — without a checkpoint the whole scan→explode→groupBy
-    # subtree replans per consumer (r13 measured: 22 exchanges vs 7).
-    # Splitting sigs and sets into two groupBys additionally ran the
-    # scan→shingle-explode subtree twice; fusing them into one
-    # aggregation halves that (sf0.1 measured: 6.1 → 3.4 s, → 1.2 s
-    # combined with the narrow-input widening above).
+    # table feeds the band exchange plus the star/metrics branches, and
+    # the set table feeds the star verification — without a checkpoint
+    # the whole scan→explode→groupBy subtree replans per consumer (r13
+    # measured: 22 exchanges vs 7). Splitting sigs and sets into two
+    # groupBys additionally ran the scan→shingle-explode subtree twice;
+    # fusing them into one aggregation halves that (sf0.1 measured:
+    # 6.1 → 3.4 s, → 1.2 s combined with the narrow-input widening).
+    # mh_i is the min md5 hex digest of ``seed_i|shingle``: hex-string
+    # order is a uniform permutation, so P[mh_a = mh_b] = Jaccard(a, b).
     per_doc = (
         sh.groupBy(id_col)
         .agg(*[F.min(F.md5(F.concat_ws("|", F.lit(s), F.col("shingle"))))
@@ -422,24 +318,12 @@ def minhash_lsh_neardup(
              F.collect_set("shingle").alias("shset"))
         .localCheckpoint()
     )
-    if bucket_cap is not None:
-        # r15 (guide §4 + §2.3, the r14 verdict's #2): sparse band
-        # buckets are verified IN the bucket by one grouped map — see
-        # :func:`_bucket_verified_pairs` for the equivalence argument
-        # and the measured 1.57x at sf1.
-        return _bucket_verified_pairs(
-            per_doc, id_col, len(seeds), bands, rows_per_band,
-            float(threshold), int(bucket_cap))
-    sigs = per_doc.select(
-        id_col, *[f"mh_{i}" for i in range(len(seeds))])
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    # Verify ONLY the LSH candidates: join each pair to its two per-doc
-    # shingle sets (two hash joins keyed on doc id — linear in candidate
-    # count) and compute |A∩B| / |A∪B| on the arrays. Running the
-    # all-shared-shingle jaccard_pairs() here instead would be the O(n²)
-    # cost LSH exists to avoid.
-    return _verify_pairs_with_sets(
-        cands, per_doc.select(id_col, "shset"), id_col, threshold)
+    # r15 (guide §4 + §2.3, the r14 verdict's #2): sparse band buckets
+    # are verified IN the bucket by one grouped map — see
+    # :func:`_bucket_verified_pairs` for the equivalence argument and
+    # the measured 1.57x at sf1.
+    return _bucket_verified_pairs(
+        per_doc, id_col, bands, rows_per_band, float(threshold))
 
 
 def _verify_pairs_with_sets(
@@ -482,11 +366,9 @@ def _verify_pairs_with_sets(
 def _bucket_verified_pairs(
     per_doc: DataFrame,
     id_col: str,
-    n_seeds: int,
     bands: int,
     rows_per_band: int,
     threshold: float,
-    bucket_cap: int,
 ) -> DataFrame:
     """Candidate generation + verification fused per band bucket (r15,
     guide §4 + §2.3; the r14 verdict's directive #2).
@@ -495,7 +377,8 @@ def _bucket_verified_pairs(
     PAIR SIDE (two per-pair hash joins: ~490k set copies at sf1 for
     244k candidates) and ran an interpreted ``array_intersect`` per
     pair row. Here the sets ride the ONE band-key exchange — at most
-    ``bands`` copies per doc — and sparse buckets (2 ≤ size ≤ cap)
+    ``bands`` copies per doc — and sparse buckets (2 ≤ size ≤
+    :data:`BUCKET_CAP`)
     form and verify their pairs INSIDE one Arrow grouped map: Python
     set intersection over the same distinct-shingle sets, the same
     size-ratio prefilter, the same ``i / (na + nb - i)`` IEEE double.
@@ -507,7 +390,15 @@ def _bucket_verified_pairs(
     by the same window the cap accounting already runs — per-group
     Python overhead is paid only where a pair can exist.
 
-    DENSE buckets (size > cap) keep the relational star path: the
+    DENSE buckets (size > cap) emit STAR edges instead — every member
+    pairs with the bucket's minimum id (the hub) only, k-1 rows instead
+    of k(k-1)/2. Downstream cluster resolution (:func:`dedup_clusters`)
+    recovers the full clique through the hub by transitive closure, so
+    keep-one-per-cluster semantics are unchanged; what is lost is only
+    the explicit non-hub pair rows (and, for false-positive bucket
+    members whose hub pair fails verification, a possible member-member
+    link — the documented recall trade at pathological density). The
+    star pairs keep the relational verification path: the
     hub–member pairs are linear in bucket size but the bucket itself
     is unbounded, and verifying them inside one task would recreate
     the straggler the cap exists to bound — the distinct + set-join
@@ -515,10 +406,10 @@ def _bucket_verified_pairs(
     grouped map is bounded by cap²/2 intersections.
 
     The returned frame carries the ``_dedup_metrics`` cap accounting
-    (lazy, reads run one small job) exactly like the r13/r14 shapes.
+    (lazy, reads run one small job): ``capped_buckets`` (buckets that
+    switched to star emission) and ``capped_bucket_docs`` (their total
+    membership rows).
     """
-    from pyspark.sql import Window
-
     band_structs = []
     for b in range(bands):
         cols = [F.col(f"mh_{b * rows_per_band + r}")
@@ -544,10 +435,10 @@ def _bucket_verified_pairs(
     # narrow: neither selects shset, so only the sparse branch's
     # exchange carries the sets
     dense_stats = keyed.filter(
-        (F.col("__bsz") > bucket_cap) & (F.col(id_col) == F.col("__hub"))
+        (F.col("__bsz") > BUCKET_CAP) & (F.col(id_col) == F.col("__hub"))
     ).select("__bsz")
     star = (
-        keyed.filter(F.col("__bsz") > bucket_cap)
+        keyed.filter(F.col("__bsz") > BUCKET_CAP)
         .filter(F.col(id_col) != F.col("__hub"))
         .select(F.col("__hub").alias("a"), F.col(id_col).alias("b"))
         .distinct()
@@ -555,7 +446,6 @@ def _bucket_verified_pairs(
     star_verified = _verify_pairs_with_sets(
         star, per_doc.select(id_col, "shset"), id_col, threshold)
 
-    cap = int(bucket_cap)
     thr = float(threshold)
 
     def verify_bucket(pdf):  # pragma: no cover - executor-side
@@ -585,15 +475,14 @@ def _bucket_verified_pairs(
 
     id_sql = per_doc.schema[id_col].dataType.simpleString()
     sparse_verified = (
-        keyed.filter((F.col("__bsz") >= 2) & (F.col("__bsz") <= cap))
+        keyed.filter((F.col("__bsz") >= 2) & (F.col("__bsz") <= BUCKET_CAP))
         .select("band_idx", "band_key", id_col, "shset")
         .groupBy("band_idx", "band_key")
         .applyInPandas(verify_bucket,
                        f"a {id_sql}, b {id_sql}, jaccard double")
     )
     out = sparse_verified.unionByName(star_verified).distinct()
-    out._dedup_metrics = _CapAccounting(  # type: ignore[attr-defined]
-        cap, dense_stats)
+    out._dedup_metrics = _CapAccounting(dense_stats)  # type: ignore[attr-defined]
     return out
 
 
@@ -629,7 +518,9 @@ def simhash(
     ``.distinct()`` exchange is pure overhead — see
     :func:`word_shingles`).
     """
-    assert bits % 4 == 0 and bits <= 60, "bits must be a hex multiple ≤60"
+    if bits % 4 or not 0 < bits <= 60:
+        raise ValueError(f"simhash bits must be a multiple of 4 in 4..60, "
+                         f"got {bits}")
     sh = word_shingles(df, id_col, text_col, n=shingle_n,
                        distinct=distinct_shingles)
     tokval = sh.withColumn(
@@ -651,31 +542,23 @@ def simhash(
     return sums.select(F.col(id_col), sim.cast("long").alias("simhash"))
 
 
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit unigram SimHash (toy tier — see :func:`simhash` for why
-    32 bits over 3-gram shingles is the working configuration)."""
-    return simhash(df, id_col, text_col, bits=16, shingle_n=1)
-
-
 def simhash_pairs(
     hashes: DataFrame, id_col: str, max_hamming: int, bits: int,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Pairs within hamming distance ≤ d via pigeonhole banding.
-
-    ``bucket_cap`` (r13): same adversarial-density bound as
-    :func:`lsh_candidate_pairs` — a chunk bucket holding more than the
-    cap switches from all-pairs to STAR emission (every member pairs
-    with the bucket's min id), bounding per-bucket pair emission at
-    k-1 instead of k(k-1)/2; the true-hamming filter still verifies
-    every emitted pair, and cluster resolution recovers full cliques
-    through the hub. The returned DataFrame carries ``_dedup_metrics``
-    (capped-bucket accounting, readable after an action) when capped.
 
     The ``bits``-bit hash splits into d+1 chunks; any pair within
     distance d agrees on at least one chunk — each chunk is a join
     bucket, unioned, then the true hamming distance filters false
     positives.
+
+    A chunk bucket holding more than :data:`BUCKET_CAP` docs switches
+    from all-pairs to STAR emission (every member pairs with the
+    bucket's min id), bounding per-bucket pair emission at k-1 instead
+    of k(k-1)/2; the true-hamming filter still verifies every emitted
+    pair, and cluster resolution recovers full cliques through the hub.
+    The returned DataFrame carries ``_dedup_metrics`` (capped-bucket
+    accounting, readable after an action).
 
     ``bits`` is REQUIRED and must match the width the hashes were built
     with: chunking 16-bit hashes as 32-bit makes the two high chunks
@@ -707,58 +590,50 @@ def simhash_pairs(
         F.col("simhash"),
         F.explode(F.array(*parts)).alias("__c"),
     ).select(id_col, "simhash", F.col("__c.ck").alias("ck"), F.col("__c.cv").alias("cv"))
-    dense_stats = None
-    if bucket_cap is not None:
-        # one window pass on the chunk key (the join key) gives size
-        # AND the hub's (id, hash) — min of the struct orders by id
-        # first, so no hub-hash re-join is needed
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("ck", "cv")
-        keyed = (
-            keyed.withColumn("__bsz", F.count("*").over(w))
-            .withColumn(
-                "__hubrow",
-                F.min(F.struct(F.col(id_col), F.col("simhash"))).over(w),
-            )
+    # one window pass on the chunk key (the join key) gives size AND
+    # the hub's (id, hash) — min of the struct orders by id first, so
+    # no hub-hash re-join is needed
+    w = Window.partitionBy("ck", "cv")
+    keyed = (
+        keyed.withColumn("__bsz", F.count("*").over(w))
+        .withColumn(
+            "__hubrow",
+            F.min(F.struct(F.col(id_col), F.col("simhash"))).over(w),
         )
-        dense_stats = keyed.filter(
-            (F.col("__bsz") > bucket_cap)
-            & (F.col(id_col) == F.col("__hubrow")[id_col])
-        ).select("__bsz")
-    sparse = (keyed.filter(F.col("__bsz") <= bucket_cap)
-              if bucket_cap is not None else keyed)
+    )
+    dense_stats = keyed.filter(
+        (F.col("__bsz") > BUCKET_CAP)
+        & (F.col(id_col) == F.col("__hubrow")[id_col])
+    ).select("__bsz")
+    sparse = keyed.filter(F.col("__bsz") <= BUCKET_CAP)
     left = sparse.select(
         F.col(id_col).alias("a"), F.col("simhash").alias("ha"), "ck", "cv"
     )
     right = sparse.select(
         F.col(id_col).alias("b"), F.col("simhash").alias("hb"), "ck", "cv"
     )
+    star = (
+        keyed.filter(F.col("__bsz") > BUCKET_CAP)
+        .filter(F.col(id_col) != F.col("__hubrow")[id_col])
+        .select(F.col("__hubrow")[id_col].alias("a"),
+                F.col("__hubrow")["simhash"].alias("ha"),
+                F.col(id_col).alias("b"),
+                F.col("simhash").alias("hb"))
+    )
     cands = (
         left.join(right, ["ck", "cv"])
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "ha", "hb")
+        .unionByName(star)
+        .distinct()
     )
-    if bucket_cap is not None:
-        star = (
-            keyed.filter(F.col("__bsz") > bucket_cap)
-            .filter(F.col(id_col) != F.col("__hubrow")[id_col])
-            .select(F.col("__hubrow")[id_col].alias("a"),
-                    F.col("__hubrow")["simhash"].alias("ha"),
-                    F.col(id_col).alias("b"),
-                    F.col("simhash").alias("hb"))
-        )
-        cands = cands.unionByName(star)
-    cands = cands.distinct()
     dist = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     out = (
         cands.withColumn("hamming", dist.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )
-    if dense_stats is not None:
-        out._dedup_metrics = _CapAccounting(  # type: ignore[attr-defined]
-            bucket_cap, dense_stats)
+    out._dedup_metrics = _CapAccounting(dense_stats)  # type: ignore[attr-defined]
     return out
 
 

@@ -12,19 +12,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def count_duplicate_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """One row: total rows beyond the first in every duplicated key group
-    (0 when the key is unique). Composes :func:`duplicate_key_rows`, so
-    the cost is that one shuffle."""
-    return duplicate_key_rows(df, cols).agg(
-        F.coalesce(F.sum(F.col("__n") - 1), F.lit(0))
-        .cast("bigint")
-        .alias("n_duplicate_rows")
-    )
 
 
 def duplicate_key_rows(df: DataFrame, cols: Sequence[str]) -> DataFrame:

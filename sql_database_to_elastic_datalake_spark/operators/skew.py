@@ -93,19 +93,3 @@ def salted_join(
     cond = (F.col(fact_key) == F.col(dim_key)) & (F.col("_salt") == F.col("_dsalt"))
     return f.join(d, cond, how).drop("_salt", "_dsalt")
 
-
-def with_observed_counts(
-    df: DataFrame, name: str, conditions: dict[str, Column]
-) -> DataFrame:
-    """Attach ``observe()`` metrics: named row counts computed during the
-    job with zero extra passes — the engine-native replacement for the
-    reference's per-batch progress counters
-    (/root/reference/src/data_sync.py:66-171, SURVEY §2.4 A4).
-
-    Read results from ``QueryExecutionListener`` / ``observedMetrics``
-    after an action.
-    """
-    metrics = [F.count("*").alias("n_rows")]
-    for mname, cond in conditions.items():
-        metrics.append(F.sum(cond.cast("long")).alias(mname))
-    return df.observe(name, *metrics)

@@ -22,17 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Tiny per-language marker lists for the n-gram/stopword heuristic.
-#: Deliberately small and hand-picked: high-frequency closed-class words
-#: that rarely collide across these languages.
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "of", "and", "is"),
-    "de": ("der", "die", "das", "und", "ist"),
-    "es": ("el", "la", "los", "que", "es"),
-    "fr": ("le", "la", "les", "et", "est"),
-    "zh": ("的", "是", "了", "在", "和"),
-}
-
 #: Cavnar–Trenkle-style per-language character n-gram profiles (sizes
 #: 1–3, drawn from published frequency tables for each language). All
 #: profiles are exactly 20 entries, so plain set-overlap argmax equals
@@ -71,7 +60,9 @@ LANG_NGRAM_PROFILES: dict[str, tuple[str, ...]] = {
 #: non-alphanumeric-non-space marks (GPT-2-style digit splitting).
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
-STOPWORDS = LANG_MARKERS["en"]
+#: English high-frequency closed-class words for the stopword-ratio
+#: quality signal.
+STOPWORDS = ("the", "a", "of", "and", "is")
 
 
 def tokens(col: Column | str) -> Column:
@@ -132,12 +123,6 @@ def quality_score(col: Column | str) -> Column:
         + F.lit(0.3) * (F.lit(1.0) - punct_ratio(col))
         + F.lit(0.2) * F.least(F.lit(1.0), F.lit(10.0) * stopword_ratio(col))
     ).cast("double")
-
-
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language marker-hit counts (toy tier; see lang_scores_ngram)."""
-    toks = tokens(col)
-    return {lang: _count_in_list(toks, ws) for lang, ws in LANG_MARKERS.items()}
 
 
 def char_ngrams(col: Column | str, sizes: tuple[int, ...] = (1, 2, 3)) -> Column:
@@ -239,14 +224,6 @@ def lang_id(col: Column | str, min_hits: int = 2) -> Column:
     below ``min_hits``. Runs at scan speed — the profiles are literal
     arrays folded into whole-stage codegen."""
     return _argmax_lang(lang_scores_ngram(col), min_hits)
-
-
-def lang_id_markers(col: Column | str, min_hits: int = 1) -> Column:
-    """v1 marker-word heuristic, kept as the comparison tier: argmax
-    marker count over five closed-class words per language. Blind to
-    marker-free text (short snippets, morphology-only signal) — the
-    pytest differential vs :func:`lang_id` pins where v2 wins."""
-    return _argmax_lang(lang_scores(col), min_hits)
 
 
 def normalize_text(col: Column | str) -> Column:

@@ -511,22 +511,6 @@ def _wrap_spans(
     return "".join(parts)
 
 
-def highlight_value(
-    text, terms: list[str], pre: str = "<em>", post: str = "</em>"
-) -> str | None:
-    """Wrap every (case-insensitive, overlap-merged) occurrence of any
-    term in ``text``; None when nothing matches (ES omits the field).
-    The whole field value comes back as ONE fragment — the
-    fragment-windowed form is :func:`highlight_snippets`."""
-    if text is None or not terms:
-        return None
-    s = str(text)
-    merged = _match_spans(s, terms)
-    if not merged:
-        return None
-    return _wrap_spans(s, merged, pre, post)
-
-
 #: ES highlight boundary defaults (the SimpleBoundaryScanner contract:
 #: boundary_chars ".,!? \t\n", boundary_max_scan 20)
 BOUNDARY_CHARS = ".,!? \t\n"

@@ -246,15 +246,6 @@ _REPS_CTE = """
 """
 
 
-def _shingle3_cte(rep_collapsed: bool = False) -> str:
-    """The word-3-gram shingle + exact-jaccard CTE block, optionally
-    restricted to exact-text representatives (requires _REPS_CTE)."""
-    src = ("(SELECT * FROM documents "
-           "WHERE doc_id IN (SELECT doc_id FROM reps))"
-           if rep_collapsed else "documents")
-    return _SHINGLE3_JACCARD_CTE.replace("FROM documents)", f"FROM {src})", 1)
-
-
 _SHINGLE3_JACCARD_CTE = """
     tarr AS (SELECT doc_id,
                     regexp_split_to_array(trim(lower(replace(text, 'İ', 'i̇'))), '\\s+') AS toks
@@ -280,16 +271,22 @@ _SHINGLE3_JACCARD_CTE = """
     )
 """
 
+#: _REPS_CTE + the word-3-gram shingle/exact-jaccard block restricted to
+#: the exact-text representatives — the near-dup oracles' input stage
+_REPS_SHINGLE3_CTE = f"{_REPS_CTE}, " + _SHINGLE3_JACCARD_CTE.replace(
+    "FROM documents)",
+    "FROM (SELECT * FROM documents "
+    "WHERE doc_id IN (SELECT doc_id FROM reps)))", 1)
+
 
 def _minhash_oracle(
     seeds: tuple[str, ...], bands: int, threshold: float,
-    bucket_cap: int | None = None, rep_collapsed: bool = False,
 ) -> str:
     """Full-pipeline SQL replica of :func:`dedup.minhash_lsh_neardup`,
     including (r13) the exact-collapse pre-stage and the star-emission
-    bucket cap: a band bucket holding more than ``bucket_cap`` docs
-    contributes hub(min-id)→member pairs only, exactly like the Spark
-    path — the oracle implements the documented semantics, not a
+    bucket cap: a band bucket holding more than ``dedup.BUCKET_CAP``
+    docs contributes hub(min-id)→member pairs only, exactly like the
+    Spark path — the oracle implements the documented semantics, not a
     superset (r12 verdict #2)."""
     rows = len(seeds) // bands
     sig_cols = ", ".join(
@@ -301,37 +298,29 @@ def _minhash_oracle(
         + f")) AS band_{b}"
         for b in range(bands)
     )
-    if bucket_cap is None:
-        band_stats = ""
-        band_joins = "\nUNION\n".join(
+    cap = dedup.BUCKET_CAP
+    band_stats = "".join(
+        f", bstat_{b} AS (SELECT band_{b} AS key, COUNT(*) AS bsz, "
+        f"min(doc_id) AS hub FROM banded GROUP BY 1)"
+        for b in range(bands)
+    )
+    terms = []
+    for b in range(bands):
+        terms.append(
             f"SELECT x.doc_id AS a, y.doc_id AS b FROM banded x "
-            f"JOIN banded y ON x.band_{b} = y.band_{b} AND x.doc_id < y.doc_id"
-            for b in range(bands)
+            f"JOIN banded y ON x.band_{b} = y.band_{b} "
+            f"AND x.doc_id < y.doc_id "
+            f"JOIN bstat_{b} s ON s.key = x.band_{b} "
+            f"AND s.bsz <= {cap}"
         )
-    else:
-        band_stats = "".join(
-            f", bstat_{b} AS (SELECT band_{b} AS key, COUNT(*) AS bsz, "
-            f"min(doc_id) AS hub FROM banded GROUP BY 1)"
-            for b in range(bands)
+        terms.append(
+            f"SELECT s.hub AS a, x.doc_id AS b FROM banded x "
+            f"JOIN bstat_{b} s ON s.key = x.band_{b} "
+            f"WHERE s.bsz > {cap} AND x.doc_id <> s.hub"
         )
-        terms = []
-        for b in range(bands):
-            terms.append(
-                f"SELECT x.doc_id AS a, y.doc_id AS b FROM banded x "
-                f"JOIN banded y ON x.band_{b} = y.band_{b} "
-                f"AND x.doc_id < y.doc_id "
-                f"JOIN bstat_{b} s ON s.key = x.band_{b} "
-                f"AND s.bsz <= {bucket_cap}"
-            )
-            terms.append(
-                f"SELECT s.hub AS a, x.doc_id AS b FROM banded x "
-                f"JOIN bstat_{b} s ON s.key = x.band_{b} "
-                f"WHERE s.bsz > {bucket_cap} AND x.doc_id <> s.hub"
-            )
-        band_joins = "\nUNION\n".join(terms)
-    reps = f"{_REPS_CTE}," if rep_collapsed else ""
+    band_joins = "\nUNION\n".join(terms)
     return f"""
-    WITH {reps} {_shingle3_cte(rep_collapsed)},
+    WITH {_REPS_SHINGLE3_CTE},
     sig AS (SELECT doc_id, {sig_cols} FROM tok3 GROUP BY doc_id),
     banded AS (SELECT doc_id, {band_cols} FROM sig)
     {band_stats},
@@ -342,16 +331,6 @@ def _minhash_oracle(
       AND EXISTS (SELECT 1 FROM cand c WHERE c.a = j.a AND c.b = j.b)
     """
 
-
-#: per-band bucket membership above which pair emission switches to
-#: star edges (r13, r12 verdict #2): all-pairs inside a bucket is
-#: k(k-1)/2 — at boilerplate density (the sf10 rehearsal's 100-member
-#: cliques, and the realistic 100-TB crawl shape) that is the one
-#: super-linear stage in the pipeline. 32 is comfortably above any
-#: honest near-dup neighborhood at the oracle-checked scales (sf0.01/
-#: sf0.1 max bucket sizes are single-digit) while bounding adversarial
-#: buckets at k-1 emissions; accounting rides _dedup_metrics.
-_LSH_BUCKET_CAP = 32
 
 @register(
     "neardup_minhash_lsh",
@@ -364,22 +343,16 @@ _LSH_BUCKET_CAP = 32
     # r13: exact-collapse pre-stage + star-emission bucket cap — the
     # oracle replicates BOTH, so the differential checks the documented
     # capped semantics, not an uncapped superset.
-    oracle=_minhash_oracle(dedup.DEFAULT_SEEDS, bands=3, threshold=0.9,
-                           bucket_cap=_LSH_BUCKET_CAP,
-                           rep_collapsed=True),
+    oracle=_minhash_oracle(dedup.DEFAULT_SEEDS, bands=3, threshold=0.9),
 )
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_neardup(
         docs, "doc_id", "text", threshold=0.9, shingle_n=3, bands=3,
-        collapse_exact=True, bucket_cap=_LSH_BUCKET_CAP,
     )
 
 
-def _simhash_oracle(
-    max_hamming: int, bits: int = 32,
-    bucket_cap: int | None = None, rep_collapsed: bool = False,
-) -> str:
+def _simhash_oracle(max_hamming: int, bits: int) -> str:
     """SQL replica of :func:`dedup.simhash` + :func:`dedup.simhash_pairs`
     including (r13) the exact-collapse pre-stage and the star-emission
     chunk-bucket cap (see _minhash_oracle)."""
@@ -392,6 +365,7 @@ def _simhash_oracle(
     )
     chunks = max_hamming + 1
     width = bits // chunks
+    cap = dedup.BUCKET_CAP
     chunk_joins = []
     chunk_stats = []
     for c in range(chunks):
@@ -401,31 +375,24 @@ def _simhash_oracle(
         key = f"((simhash >> {shift}) & {mask})"
         xkey = f"((x.simhash >> {shift}) & {mask})"
         ykey = f"((y.simhash >> {shift}) & {mask})"
-        if bucket_cap is None:
-            chunk_joins.append(
-                f"SELECT x.doc_id AS a, x.simhash AS ha, y.doc_id AS b, y.simhash AS hb "
-                f"FROM sh x JOIN sh y ON {xkey} = {ykey} AND x.doc_id < y.doc_id"
-            )
-        else:
-            chunk_stats.append(
-                f", cstat_{c} AS (SELECT {key} AS key, COUNT(*) AS bsz, "
-                f"min(doc_id) AS hub FROM sh GROUP BY 1)"
-            )
-            chunk_joins.append(
-                f"SELECT x.doc_id AS a, x.simhash AS ha, y.doc_id AS b, y.simhash AS hb "
-                f"FROM sh x JOIN sh y ON {xkey} = {ykey} AND x.doc_id < y.doc_id "
-                f"JOIN cstat_{c} s ON s.key = {xkey} AND s.bsz <= {bucket_cap}"
-            )
-            chunk_joins.append(
-                f"SELECT s.hub AS a, hh.simhash AS ha, x.doc_id AS b, x.simhash AS hb "
-                f"FROM sh x JOIN cstat_{c} s ON s.key = {xkey} "
-                f"JOIN sh hh ON hh.doc_id = s.hub "
-                f"WHERE s.bsz > {bucket_cap} AND x.doc_id <> s.hub"
-            )
+        chunk_stats.append(
+            f", cstat_{c} AS (SELECT {key} AS key, COUNT(*) AS bsz, "
+            f"min(doc_id) AS hub FROM sh GROUP BY 1)"
+        )
+        chunk_joins.append(
+            f"SELECT x.doc_id AS a, x.simhash AS ha, y.doc_id AS b, y.simhash AS hb "
+            f"FROM sh x JOIN sh y ON {xkey} = {ykey} AND x.doc_id < y.doc_id "
+            f"JOIN cstat_{c} s ON s.key = {xkey} AND s.bsz <= {cap}"
+        )
+        chunk_joins.append(
+            f"SELECT s.hub AS a, hh.simhash AS ha, x.doc_id AS b, x.simhash AS hb "
+            f"FROM sh x JOIN cstat_{c} s ON s.key = {xkey} "
+            f"JOIN sh hh ON hh.doc_id = s.hub "
+            f"WHERE s.bsz > {cap} AND x.doc_id <> s.hub"
+        )
     cand = "\nUNION\n".join(chunk_joins)
-    reps = f"{_REPS_CTE}," if rep_collapsed else ""
     return f"""
-    WITH {reps} {_shingle3_cte(rep_collapsed)},
+    WITH {_REPS_SHINGLE3_CTE},
     tv AS (SELECT doc_id,
                   CAST(('0x' || substr(md5(w), 1, {bits // 4})) AS BIGINT) AS v
            FROM tok3),
@@ -449,9 +416,7 @@ def _simhash_oracle(
 # docs/bucket at sf1, so the cap is inert at real density and fires
 # only on adversarial cliques — the same profile as the MinHash tier.
 @register("simhash_hamming_pairs",
-          oracle=_simhash_oracle(max_hamming=3, bits=60,
-                                 bucket_cap=_LSH_BUCKET_CAP,
-                                 rep_collapsed=True))
+          oracle=_simhash_oracle(max_hamming=3, bits=60))
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     reps = dedup.exact_representatives(docs, "doc_id", ["text"])
@@ -459,8 +424,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle rows are already distinct (r14 — drops one exchange)
     hashes = dedup.simhash(reps, "doc_id", "text", bits=60, shingle_n=3,
                            distinct_shingles=False)
-    return dedup.simhash_pairs(hashes, "doc_id", max_hamming=3, bits=60,
-                               bucket_cap=_LSH_BUCKET_CAP)
+    return dedup.simhash_pairs(hashes, "doc_id", max_hamming=3, bits=60)
 
 
 # ---------------------------------------------------------------------------

@@ -27,8 +27,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sql_database_to_elastic_datalake_spark.functions.scalar import document_id
-
 
 def write_lake(
     df: DataFrame,
@@ -74,18 +72,6 @@ def write_lake(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
-
-
-def with_history_columns(
-    df: DataFrame, id_col: str, indexed_at: str
-) -> DataFrame:
-    """Stamp the append-only history columns: one literal timestamp per
-    run (not per row) + the versioned document id.
-    Reference: /root/reference/src/ticket_sync.py:133-139."""
-    ts = F.lit(indexed_at)
-    return df.withColumn("indexed_at", ts).withColumn(
-        "doc_id", document_id(F.col(id_col), ts)
-    )
 
 
 def write_bucketed_table(
@@ -170,26 +156,6 @@ def compact_lake(
     os.rename(tmp, path)
     shutil.rmtree(old_dir)
     return n_files
-
-
-def analyze_table(spark, table_name: str, columns: Sequence[str] = ()) -> dict:
-    """Collect catalog statistics (row count + size, optionally per-column
-    NDV/min/max/null counts) so the cost-based optimizer can reorder
-    joins and pick broadcast sides from real numbers instead of file
-    sizes. Run after large writes; cheap relative to the write itself.
-    Returns the gathered table stats for observability.
-    """
-    spark.sql(f"ANALYZE TABLE {table_name} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(columns)
-        spark.sql(
-            f"ANALYZE TABLE {table_name} COMPUTE STATISTICS FOR COLUMNS {cols}"
-        )
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
-    stats = next(
-        (r["data_type"] for r in rows if r["col_name"] == "Statistics"), None
-    )
-    return {"table": table_name, "statistics": stats}
 
 
 def zorder_key(

@@ -61,20 +61,6 @@ def validate_split(
     return accepted, rejected
 
 
-def required_field_rules(
-    entity_type: str, columns: Sequence[str] | None = None
-) -> list[tuple[Column, str]]:
-    """Build missing-required-field rules for an entity type."""
-    fields = REQUIRED_FIELDS.get(entity_type, REQUIRED_FIELDS["default"])
-    rules = []
-    for f in fields:
-        if columns is None or f in columns:
-            rules.append(
-                (F.col(f).isNull(), f"missing required field: {f}")
-            )
-    return rules
-
-
 def ingest_summary(df: DataFrame, rules: Sequence[tuple[Column, str]]) -> DataFrame:
     """Per-reason accounting for a batch — the HTTP-207 style report.
 

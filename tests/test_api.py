@@ -330,17 +330,20 @@ def test_advanced_highlight(client, service):
 
 def test_highlight_merges_overlapping_terms():
     from sql_database_to_elastic_datalake_spark.plans.search import (
-        highlight_value,
+        highlight_snippets,
     )
 
+    def whole(text, terms):
+        # no fragment size: the whole value comes back as one fragment
+        return highlight_snippets(text, terms, "<em>", "</em>", None, None)
+
     # overlapping occurrences merge into one span; case-insensitive
-    assert highlight_value("Sparkly spark", ["spark", "sparkly"]) \
-        == "<em>Sparkly</em> <em>spark</em>"
+    assert whole("Sparkly spark", ["spark", "sparkly"]) \
+        == ["<em>Sparkly</em> <em>spark</em>"]
     # "abca"@0 and "cab"@2 overlap -> one merged span [0,5)
-    assert highlight_value("abcabc", ["abca", "cab"]) \
-        == "<em>abcab</em>c"
-    assert highlight_value("no hit here", ["zzz"]) is None
-    assert highlight_value(None, ["x"]) is None
+    assert whole("abcabc", ["abca", "cab"]) == ["<em>abcab</em>c"]
+    assert whole("no hit here", ["zzz"]) is None
+    assert whole(None, ["x"]) is None
 
 
 def test_advanced_collapse(client, service):
@@ -534,7 +537,6 @@ def test_generic_table_sync_idempotent(spark):
     from pyspark.sql import Row
 
     from sql_database_to_elastic_datalake_spark.generic import (
-        dedup_by_content,
         sync_generic_table,
     )
 
@@ -548,7 +550,6 @@ def test_generic_table_sync_idempotent(spark):
     assert len(rows) == 2  # soft-deleted dropped
     assert rows[0]["doc_id"] == rows[1]["doc_id"]  # same content, same id
     assert out.columns == ["t_id", "t_name", "t_deletedAt", "table", "doc_id"]
-    assert dedup_by_content(out).count() == 1
 
 
 def test_search_skips_numeric_only_tables(service, spark, tmp_path):

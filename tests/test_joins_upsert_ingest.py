@@ -12,13 +12,9 @@ from sql_database_to_elastic_datalake_spark.operators.joins import (
     semi_join,
 )
 from sql_database_to_elastic_datalake_spark.sinks.upsert import merge_latest_wins
-from sql_database_to_elastic_datalake_spark.sinks.writer import (
-    with_history_columns,
-    write_lake,
-)
+from sql_database_to_elastic_datalake_spark.sinks.writer import write_lake
 from sql_database_to_elastic_datalake_spark.sources.ingest import (
     ingest_summary,
-    required_field_rules,
     validate_split,
 )
 
@@ -65,8 +61,9 @@ def test_validate_split_and_summary(spark):
     df = spark.createDataFrame(
         [Row(name="ok", v=1), Row(name=None, v=2), Row(name="neg", v=-1)]
     )
-    rules = required_field_rules("default", df.columns) + [
-        (F.col("v") < 0, "negative value")
+    rules = [
+        (F.col("name").isNull(), "missing required field: name"),
+        (F.col("v") < 0, "negative value"),
     ]
     accepted, rejected = validate_split(df, rules)
     assert [r["name"] for r in accepted.collect()] == ["ok"]
@@ -90,9 +87,6 @@ def test_write_modes(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1  # overwrite reset
     write_lake(df, path, mode="ensure")
     assert spark.read.parquet(path).count() == 1  # ignore: no-op
-
-    hist = with_history_columns(df, "id", "2026-01-01T00:00:00").collect()[0]
-    assert hist["doc_id"] == "1_2026-01-01T00:00:00"
 
 
 def test_partitioned_write_prunes(spark, tmp_path):

@@ -8,7 +8,6 @@ from sql_database_to_elastic_datalake_spark.operators.skew import (
     add_salt,
     salted_agg,
     salted_join,
-    with_observed_counts,
 )
 from sql_database_to_elastic_datalake_spark.sinks.writer import write_bucketed_table
 
@@ -93,40 +92,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert joined.count() == 300
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_observe_metrics(spark, skewed):
-    observed = with_observed_counts(
-        skewed, "ingest", {"n_hot": F.col("k") == "hot"}
-    )
-    # collect() executes THIS DataFrame's queryExecution — metrics attach
-    # to it (count() would build and run a separate plan)
-    observed.collect()
-    m = observed._jdf.queryExecution().observedMetrics()
-    row = m.get("ingest").get()
-    assert row.getLong(0) == 100  # n_rows
-    assert row.getLong(1) == 90   # n_hot
-
-
-def test_analyze_table_populates_catalog_stats(spark):
-    from sql_database_to_elastic_datalake_spark.sinks.writer import (
-        analyze_table,
-    )
-
-    spark.range(0, 5000).selectExpr(
-        "id AS k", "id % 7 AS grp"
-    ).write.mode("overwrite").saveAsTable("stats_probe")
-    try:
-        out = analyze_table(spark, "stats_probe", columns=["k", "grp"])
-        assert out["statistics"] and "5000 rows" in out["statistics"]
-        # column-level NDV visible to the optimizer
-        desc = spark.sql("DESCRIBE EXTENDED stats_probe grp").collect()
-        ndv = {r["info_name"]: r["info_value"] for r in desc}.get(
-            "distinct_count"
-        )
-        assert ndv is not None and int(ndv) >= 6
-    finally:
-        spark.sql("DROP TABLE IF EXISTS stats_probe")
 
 
 def test_runtime_bloom_filter_semi_join_reduction(spark, tmp_path):

@@ -44,39 +44,27 @@ def test_lang_id_and_quality(spark, docs):
     assert 0.0 <= got[4]["q"] <= got[1]["q"] <= 1.0
 
 
-def test_lang_id_trigram_beats_markers(spark):
-    """v2 (character n-gram profiles) vs v1 (five marker words per
-    language) on real-ish text. Marker-free snippets — short sentences
-    whose signal is morphology, not closed-class words — are exactly
-    where v1 returns 'und'; v2 must classify them correctly and lose
-    nothing on the cases v1 already gets right."""
+def test_lang_id_trigram_accuracy(spark):
+    """Character n-gram profiles classify real-ish text, including
+    marker-free snippets — short sentences whose signal is morphology,
+    not closed-class words."""
     rows = [
-        # v1-solvable (contains marker words) — v2 must not regress
+        # contain closed-class marker words
         Row(lang="en", text="the cat is on the roof of the house"),
         Row(lang="de", text="der hund und die katze sind im garten"),
         Row(lang="es", text="el perro es muy grande y la casa es bonita"),
-        # marker-free — v1 is blind here
+        # marker-free
         Row(lang="de", text="ich gehe schnell nach hause"),
         Row(lang="fr", text="nous avons mangé une pomme rouge"),
         Row(lang="es", text="queremos comprar una bicicleta"),
         Row(lang="zh", text="我们在中国学习和工作"),
-        # genuinely undetermined — both must say 'und'
+        # genuinely undetermined
         Row(lang="und", text="zzz qqq xxx"),
     ]
     df = spark.createDataFrame(rows)
-    out = df.select(
-        "lang",
-        "text",
-        text.lang_id("text").alias("v2"),
-        text.lang_id_markers("text").alias("v1"),
-    ).collect()
-    acc_v1 = sum(r["v1"] == r["lang"] for r in out)
-    acc_v2 = sum(r["v2"] == r["lang"] for r in out)
-    assert acc_v2 == len(rows), [(r["lang"], r["v2"]) for r in out]
-    assert acc_v2 > acc_v1
-    # the marker tier is blind to every marker-free snippet
-    blind = [r for r in out if r["lang"] in ("fr", "zh")]
-    assert all(r["v1"] == "und" for r in blind)
+    out = df.select("lang", text.lang_id("text").alias("got")).collect()
+    assert all(r["got"] == r["lang"] for r in out), \
+        [(r["lang"], r["got"]) for r in out]
 
 
 def test_lang_scores_contains_equals_ngram_intersection(spark, docs):
@@ -107,22 +95,18 @@ def test_lang_scores_contains_equals_ngram_intersection(spark, docs):
 
 
 def test_lang_id_null_text_is_und(spark):
-    """Both classifier tiers must call NULL text 'und' — an un-coalesced
-    NULL score poisons the argmax struct comparison and returned an
-    arbitrary language (observed: 'de') before the guard."""
+    """NULL text must be 'und' — an un-coalesced NULL score poisons the
+    argmax struct comparison and returned an arbitrary language
+    (observed: 'de') before the guard."""
     df = spark.createDataFrame(
         [Row(doc_id=1, text=None), Row(doc_id=2, text="the cat is here")]
     )
     out = {
-        r["doc_id"]: (r["v2"], r["v1"])
+        r["doc_id"]: r["lang"]
         for r in df.select(
-            "doc_id",
-            text.lang_id("text").alias("v2"),
-            text.lang_id_markers("text").alias("v1"),
-        ).collect()
+            "doc_id", text.lang_id("text").alias("lang")).collect()
     }
-    assert out[1] == ("und", "und")
-    assert out[2][0] == "en" and out[2][1] == "en"
+    assert out == {1: "und", 2: "en"}
 
 
 def test_fingerprint_normalization_invariance(spark, docs):
@@ -147,14 +131,18 @@ def test_jaccard_and_minhash_agree(spark, docs):
         for r in dedup.jaccard_pairs(sh, "doc_id", threshold=0.99).collect()
     }
     assert (1, 5) in exact and exact[(1, 5)] == 1.0
+    # identical docs collapse to their min-id representative before
+    # banding, so the LSH tier reports exactly the exact tier's
+    # representative pairs
+    reps = dedup.exact_representatives(docs, "doc_id", ["text"])
+    assert sorted(r["doc_id"] for r in reps.collect()) == [1, 2, 3, 4]
     lsh = {
         (r["a"], r["b"])
         for r in dedup.minhash_lsh_neardup(
             docs, "doc_id", "text", threshold=0.99
         ).collect()
     }
-    # identical docs always collide in every band
-    assert (1, 5) in lsh
+    assert lsh == {p for p in exact if 5 not in p}
 
 
 def test_minhash_lsh_verifies_candidates_only(spark, docs):
@@ -197,18 +185,14 @@ def test_simhash_identical_and_pairs(spark, docs):
         assert all(
             r["hamming"] == 0 for r in pairs if (r["a"], r["b"]) == (1, 5)
         )
-    # the legacy 16-bit entry point stays wired to the same math
-    legacy = {
-        r["doc_id"]: r["simhash"]
-        for r in dedup.simhash16(docs, "doc_id", "text").collect()
-    }
-    narrow = {
-        r["doc_id"]: r["simhash"]
-        for r in dedup.simhash(
-            docs, "doc_id", "text", bits=16, shingle_n=1
-        ).collect()
-    }
-    assert legacy == narrow
+
+
+@pytest.mark.parametrize("bits", [0, 30, 64])
+def test_simhash_rejects_bad_width(spark, docs, bits):
+    """The width check is an exception, not an assert, so it holds
+    under ``python -O`` too."""
+    with pytest.raises(ValueError, match="bits"):
+        dedup.simhash(docs, "doc_id", "text", bits=bits)
 
 
 @pytest.fixture(scope="module")
@@ -506,7 +490,9 @@ def test_minhash_size_ratio_prefilter_sound_and_effective(spark):
     docs = spark.createDataFrame([
         Row(doc_id=1, text=base),
         Row(doc_id=2, text=base + " " + tail),
-        Row(doc_id=3, text=base),          # true dup of 1
+        # true near-dup of 1: the same word set, reordered (an exact
+        # copy would collapse before banding)
+        Row(doc_id=3, text="gamma alpha beta"),
     ])
     out = {(r["a"], r["b"]): r["jaccard"]
            for r in dedup.minhash_lsh_neardup(
@@ -559,25 +545,6 @@ def test_quantize_int8_zero_vector(spark):
     }
     assert out[1]["scale"] == 1.0 and out[1]["q8"] == [0, 0]
     assert out[2]["scale"] == 63.5 and out[2]["q8"] == [64, -127]
-
-
-def test_count_duplicate_keys_composes(spark):
-    """count_duplicate_keys honors its (df, cols) signature and returns
-    0 (not NULL / AnalysisException) on a unique key."""
-    from pyspark.sql import Row
-
-    from sql_database_to_elastic_datalake_spark.operators import quality
-
-    df = spark.createDataFrame(
-        [Row(k=1), Row(k=1), Row(k=1), Row(k=2), Row(k=3)]
-    )
-    assert quality.count_duplicate_keys(df, ["k"]).collect()[0][
-        "n_duplicate_rows"
-    ] == 2
-    uniq = spark.createDataFrame([Row(k=1), Row(k=2)])
-    assert quality.count_duplicate_keys(uniq, ["k"]).collect()[0][
-        "n_duplicate_rows"
-    ] == 0
 
 
 def test_dedup_clusters_long_chain_converges(spark):
@@ -745,23 +712,18 @@ def test_exact_representatives_collapse(spark):
     ])
     reps = dedup.exact_representatives(docs, "doc_id", ["text"])
     assert sorted(r["doc_id"] for r in reps.collect()) == [1, 4]
-    # with collapse_exact on, the identical-pair clique never appears
-    out = dedup.minhash_lsh_neardup(
-        docs, "doc_id", "text", threshold=0.9, collapse_exact=True)
-    assert out.collect() == []
-    # without it the 3-clique emits all three identical pairs
+    # the near-dup tier collapses first: the identical-pair clique
+    # never reaches banding
     out = dedup.minhash_lsh_neardup(docs, "doc_id", "text", threshold=0.9)
-    assert {(r["a"], r["b"]) for r in out.collect()} == \
-        {(1, 2), (1, 3), (2, 3)}
+    assert out.collect() == []
 
 
 def test_lsh_grouped_verify_matches_relational_tier(spark):
-    """r15 (guide §4, r14 verdict #2): with ``bucket_cap`` set, sparse
-    band buckets verify inside one grouped map (Python set
-    intersection) instead of per-pair set joins. With an inert cap (no
-    bucket over it) the output must equal the uncapped relational
-    tier EXACTLY — same (a, b) pairs AND bit-identical jaccard
-    doubles (int division is IEEE-identical in both tiers)."""
+    """r15 (guide §4, r14 verdict #2): sparse band buckets verify inside
+    one grouped map (Python set intersection). Below the cap the output
+    must equal the exact all-pairs relational tier (``jaccard_pairs``)
+    EXACTLY — same (a, b) pairs AND bit-identical jaccard doubles (the
+    same ``i / (na + nb - i)`` IEEE division in both tiers)."""
     from pyspark.sql import Row
 
     base = " ".join(f"w{i}" for i in range(49))
@@ -769,73 +731,73 @@ def test_lsh_grouped_verify_matches_relational_tier(spark):
         [Row(doc_id=i, text=f"{base} tail{i}") for i in range(1, 7)]
         + [Row(doc_id=10, text="zz yy xx ww vv uu tt ss")]
     )
-    relational = dedup.minhash_lsh_neardup(
-        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3)
+    sh = dedup.word_shingles(docs, "doc_id", "text", n=3)
+    exact = dedup.jaccard_pairs(sh, "doc_id", threshold=0.5)
     grouped = dedup.minhash_lsh_neardup(
-        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3,
-        bucket_cap=32)
-    rel = sorted((r["a"], r["b"], r["jaccard"])
-                 for r in relational.collect())
+        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3)
+    ref = sorted((r["a"], r["b"], r["jaccard"]) for r in exact.collect())
     grp = sorted((r["a"], r["b"], r["jaccard"])
                  for r in grouped.collect())
-    assert rel == grp and len(rel) == 15
-    # the inert cap reports zero capped buckets
+    assert grp == ref and len(ref) == 15
+    # no bucket exceeds the cap, so none is reported capped
     m = dict(grouped._dedup_metrics)
     assert m["capped_buckets"] == 0 and m["capped_bucket_docs"] == 0
 
 
 def test_lsh_bucket_cap_star_emission(spark):
-    """r13 (r12 verdict #2): a band bucket denser than bucket_cap
+    """r13 (r12 verdict #2): a band bucket denser than BUCKET_CAP
     switches to star emission — hub(min-id)→member pairs only, bounding
     per-bucket emission at k-1 instead of k(k-1)/2 — with the capped
     accounting riding _dedup_metrics, and cluster resolution still
     recovering the FULL clique through the hub."""
     from pyspark.sql import Row
 
-    # a 6-member near-dup clique of DISTINCT texts (suffix word keeps
-    # them near, not exact; the long shared base makes the per-seed
-    # chance that a tail shingle wins the minhash ~3/51, so every pair
-    # collides in ≥1 band with near-certainty under the fixed seeds)
+    # a near-dup clique of DISTINCT texts larger than the cap (suffix
+    # word keeps them near, not exact; the long shared base makes the
+    # per-seed chance that a tail shingle wins the minhash ~1/48, so
+    # every doc lands in the clique's bucket of ≥1 band under the fixed
+    # seeds)
+    n = dedup.BUCKET_CAP + 8
     base = " ".join(f"w{i}" for i in range(49))
     docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"{base} tail{i}") for i in range(1, 7)]
+        [Row(doc_id=i, text=f"{base} tail{i}") for i in range(1, n + 1)]
     )
-    uncapped = dedup.minhash_lsh_neardup(
-        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3)
-    assert uncapped.count() == 15  # all 6·5/2 pairs
     capped = dedup.minhash_lsh_neardup(
-        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3,
-        bucket_cap=4)
+        docs, "doc_id", "text", threshold=0.5, shingle_n=3, bands=3)
     rows = capped.collect()
-    # star: only hub (doc 1) pairs survive
-    assert {(r["a"], r["b"]) for r in rows} == {(1, b) for b in range(2, 7)}
+    # star: only hub (doc 1) pairs survive, not all n(n-1)/2
+    assert {(r["a"], r["b"]) for r in rows} == {(1, b) for b in range(2, n + 1)}
+    assert len(rows) == n - 1
     m = dict(capped._dedup_metrics)
-    assert m["bucket_cap"] == 4
-    assert m["capped_buckets"] >= 1
-    assert m["capped_bucket_docs"] >= 6
-    # transitive closure recovers the full 6-clique from star edges
+    # one dense bucket per band; 113 = the three buckets' memberships
+    assert m == {"bucket_cap": dedup.BUCKET_CAP, "capped_buckets": 3,
+                 "capped_bucket_docs": 113}
+    # transitive closure recovers the full clique from star edges
     clusters = dedup.dedup_clusters(docs, capped, "doc_id")
     got = {r["doc_id"]: r["cluster_id"] for r in clusters.collect()}
-    assert got == {i: 1 for i in range(1, 7)}
+    assert got == {i: 1 for i in range(1, n + 1)}
 
 
 def test_simhash_bucket_cap_star_emission(spark):
-    """Same star-cap contract on the pigeonhole chunk buckets."""
+    """Same star-cap contract on the pigeonhole chunk buckets. The
+    clique is built on the hash relation directly: docs 1..n share one
+    hash, doc n+1 differs from it in one bit of chunk 0, and doc 99 is
+    far from all of them. Every chunk bucket holding the clique is
+    denser than the cap, so only hub-anchored pairs come out."""
     from pyspark.sql import Row
 
-    base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11"
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"{base} tail{i}") for i in range(1, 7)]
+    n = dedup.BUCKET_CAP + 8
+    h = 0x0F0F0F0F
+    hashes = spark.createDataFrame(
+        [Row(doc_id=i, simhash=h) for i in range(1, n + 1)]
+        + [Row(doc_id=n + 1, simhash=h ^ 1),
+           Row(doc_id=99, simhash=h ^ 0xFFFFFFFF)]
     )
-    hashes = dedup.simhash(docs, "doc_id", "text", bits=32, shingle_n=3)
-    uncapped = {(r["a"], r["b"]) for r in dedup.simhash_pairs(
-        hashes, "doc_id", max_hamming=8, bits=32).collect()}
-    capped_df = dedup.simhash_pairs(
-        hashes, "doc_id", max_hamming=8, bits=32, bucket_cap=4)
-    capped = {(r["a"], r["b"]) for r in capped_df.collect()}
-    # star set ⊆ uncapped set and every surviving pair is hub-anchored
-    # unless it came from a sparse bucket
-    assert capped <= uncapped
-    assert all(a == 1 for a, _ in capped - uncapped) or capped <= uncapped
+    capped_df = dedup.simhash_pairs(hashes, "doc_id", max_hamming=8, bits=32)
+    got = {(r["a"], r["b"]): r["hamming"] for r in capped_df.collect()}
+    assert got == {**{(1, b): 0 for b in range(2, n + 1)}, (1, n + 1): 1}
     m = dict(capped_df._dedup_metrics)
-    assert m["bucket_cap"] == 4 and m["capped_buckets"] >= 1
+    # 9 chunks, one dense bucket each: chunk 0 holds docs 1..n, the
+    # other eight also hold doc n+1
+    assert m == {"bucket_cap": dedup.BUCKET_CAP, "capped_buckets": 9,
+                 "capped_bucket_docs": n + 8 * (n + 1)}
