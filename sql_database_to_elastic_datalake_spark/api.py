@@ -27,6 +27,7 @@ and merge operators, so semantics are identical.
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import os
 import re
@@ -36,7 +37,8 @@ from dataclasses import dataclass
 from datetime import date, datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_database_to_elastic_datalake_spark.fs import path_exists
@@ -109,6 +111,36 @@ def _has_feature_scorer(node) -> bool:
 
 def _utcnow_iso() -> str:
     return datetime.now(timezone.utc).isoformat()
+
+
+def _tolerant_resolver(df: DataFrame, null_type: str = "string"):
+    """The field resolver every lake-table compile uses: a column of
+    ``df``, or a typed NULL for a field the table lacks — ES's "a
+    query on a field an index lacks matches nothing there" under
+    two-valued null semantics. ``null_type`` is ``"double"`` where the
+    value feeds arithmetic (runtime fields, update scripts)."""
+    columns = set(df.columns)
+    return lambda f: (F.col(f) if f in columns
+                      else F.lit(None).cast(null_type))
+
+
+def _id_column(columns) -> str | None:
+    """The engine's document-id convention: the ``id`` column, else the
+    first ``*_id`` column, else None."""
+    if "id" in columns:
+        return "id"
+    return next((c for c in columns if c.endswith("_id")), None)
+
+
+def _id_lookup(df: DataFrame, table: str, ids) -> tuple[Column, str]:
+    """(predicate selecting the documents whose id is in ``ids``, the id
+    column) — the one point-lookup shape: an ``In`` on the id column
+    cast to string, pushed into the scan. A table with no id column is
+    a named 400."""
+    idc = _id_column(df.columns)
+    if idc is None:
+        raise DslError(f"table {table!r} has no id column")
+    return F.col(idc).cast("string").isin([str(i) for i in ids]), idc
 
 
 #: Spark simpleString → ES field-caps type. Arrays of scalars
@@ -198,10 +230,48 @@ class LakeService:
         #: corpus-scale form is the registered percolate_orders query.
         self.percolator_queries: dict[str, dict] = {}
 
-    # -- helpers ----------------------------------------------------------
+    # -- lake tables: every route names, reads and 404s one way -----------
 
-    def _table_path(self, entity_type: str) -> str:
-        return os.path.join(self.lake_dir, f"{INDEX_PREFIX}{entity_type.lower()}")
+    def _tables(self, spec: str) -> list[str]:
+        """The tables an index expression names, resolved like
+        Elasticsearch: a wildcard (``*``/``?``) gives the sorted
+        matching table directories, possibly none; a concrete name
+        gives ``[spec]``. A missing concrete table is the
+        ``NotFoundError`` :meth:`_read` raises when it is read — the
+        hit path makes no separate existence call."""
+        if "*" not in spec and "?" not in spec:
+            return [spec]
+        if not os.path.isdir(self.lake_dir):
+            return []  # nothing has been written to the lake yet
+        return sorted(
+            d for d in os.listdir(self.lake_dir)
+            if fnmatch.fnmatchcase(d, spec)
+            and os.path.isdir(os.path.join(self.lake_dir, d)))
+
+    def _read(self, name: str) -> DataFrame:
+        """One lake table as a DataFrame; a missing table (or a name
+        Spark would expand as a path glob) is
+        ``NotFoundError("no such table 'X'")`` — the route's 404."""
+        if re.search(r"[*?\[\]{}\\]", name):
+            raise NotFoundError(f"no such table {name!r}")
+        try:
+            return self.spark.read.parquet(
+                os.path.join(self.lake_dir, name))
+        except AnalysisException as ex:
+            if ex.getCondition() == "PATH_NOT_FOUND":
+                raise NotFoundError(f"no such table {name!r}") from None
+            raise
+
+    def _read_or_none(self, name: str) -> DataFrame | None:
+        """:meth:`_read`, with an absent table as None — for callers
+        where absence is an answer (mget's ``found: false``, join-field
+        siblings under ``ignore_unmapped``)."""
+        try:
+            return self._read(name)
+        except NotFoundError:
+            return None
+
+    # -- helpers ----------------------------------------------------------
 
     def _validate_and_default(
         self, entity_type: str, item: dict[str, Any], index: int
@@ -266,7 +336,8 @@ class LakeService:
                 self.spark, normalized,
                 ", ".join(f"`{c}` string" for c in cols)
             )
-            df.write.mode("append").parquet(self._table_path(entity_type))
+            df.write.mode("append").parquet(os.path.join(
+                self.lake_dir, f"{INDEX_PREFIX}{entity_type.lower()}"))
         ok = sum(1 for r in results if r.ok)
         err = len(results) - ok
         status = 200 if err == 0 else (207 if ok else 400)
@@ -328,13 +399,14 @@ class LakeService:
             entities["TicketLabel"], entities["Label"],
             indexed_at, ticket_id=ticket_id,
         )
-        path = self._table_path("denormalized_ticket")
+        name = f"{INDEX_PREFIX}denormalized_ticket"
+        path = os.path.join(self.lake_dir, name)
         # existence check, not try/except-everything: a transient read
         # failure on an EXISTING table must raise, not silently rebuild
         # the lake table from this one document. Hadoop-FS existence so
         # hdfs://s3a:// lake dirs don't always look absent (fs.py).
         if path_exists(self.spark, path):
-            base = self.spark.read.parquet(path)
+            base = self._read(name)
             merged = merge_latest_wins(
                 base, doc, keys=["ticket_id"], version_col="indexed_at"
             )
@@ -373,28 +445,16 @@ class LakeService:
         inside one rewrite)."""
         import time as _time
 
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            compile_dsl,
-        )
-
         t0 = _time.monotonic()
-        path = os.path.join(self.lake_dir, table)
-        if not path_exists(self.spark, path):
-            raise DslError(f"unknown table {table!r}")
-        df = self.spark.read.parquet(path)
-
-        def resolve(field: str, _df=df):
-            return (F.col(field) if field in _df.columns
-                    else F.lit(None).cast("string"))
-
-        pred = compile_dsl(dsl, field_resolver=resolve,
+        df = self._read(table)
+        pred = compile_dsl(dsl, field_resolver=_tolerant_resolver(df),
                            schema_fields=df.schema)
         matched = F.coalesce(pred, F.lit(False))
         deleted = int(df.filter(matched).count())
         if deleted:
             survivors = df.filter(~matched)
             survivors.localCheckpoint(eager=True).write.mode(
-                "overwrite").parquet(path)
+                "overwrite").parquet(os.path.join(self.lake_dir, table))
         return {
             "took": int((_time.monotonic() - t0) * 1000),
             "timed_out": False, "total": deleted, "deleted": deleted,
@@ -434,17 +494,10 @@ class LakeService:
             raise DslError("update_by_query requires a script object")
         if not isinstance(script.get("source"), str):
             raise DslError("script requires a source string")
-        path = os.path.join(self.lake_dir, table)
-        if not path_exists(self.spark, path):
-            raise DslError(f"unknown table {table!r}")
-        df = self.spark.read.parquet(path)
-
-        def resolve(field: str):
-            return (F.col(field) if field in df.columns
-                    else F.lit(None).cast("string"))
-
+        df = self._read(table)
         pred = (F.lit(True) if dsl is None else
-                F.coalesce(compile_dsl(dsl, field_resolver=resolve,
+                F.coalesce(compile_dsl(dsl,
+                                       field_resolver=_tolerant_resolver(df),
                                        schema_fields=df.schema),
                            F.lit(False)))
         out = df.withColumn("__match", pred)
@@ -452,7 +505,7 @@ class LakeService:
         out = _apply_update_script(out, script)
         if updated:
             out.drop("__match").localCheckpoint(eager=True).write.mode(
-                "overwrite").parquet(path)
+                "overwrite").parquet(os.path.join(self.lake_dir, table))
         return {
             "took": int((_time.monotonic() - t0) * 1000),
             "timed_out": False, "total": updated, "updated": updated,
@@ -493,20 +546,15 @@ class LakeService:
         bad = sorted(set(dst_spec) - {"index"})
         if bad:
             raise DslError(f"unsupported reindex dest keys: {bad}")
-        src_path = os.path.join(self.lake_dir, str(src_spec["index"]))
-        dst_path = os.path.join(self.lake_dir, str(dst_spec["index"]))
-        if src_path == dst_path:
+        src, dst = str(src_spec["index"]), str(dst_spec["index"])
+        dst_path = os.path.join(self.lake_dir, dst)
+        if src == dst:
             raise DslError("reindex source and dest must differ")
-        if not path_exists(self.spark, src_path):
-            raise DslError(f"unknown table {src_spec['index']!r}")
-        df = self.spark.read.parquet(src_path)
+        df = self._read(src)
         q = src_spec.get("query")
         if q is not None:
-            def resolve(field: str, _df=df):
-                return (F.col(field) if field in _df.columns
-                        else F.lit(None).cast("string"))
             df = df.filter(F.coalesce(
-                compile_dsl(q, field_resolver=resolve,
+                compile_dsl(q, field_resolver=_tolerant_resolver(df),
                             schema_fields=df.schema), F.lit(False)))
         script = body.get("script")
         if script is not None:
@@ -517,8 +565,9 @@ class LakeService:
             ).drop("__match")
         total = int(df.count())
         created, updated = total, 0
+        # existence decides create-versus-merge (fs.py)
         if total and path_exists(self.spark, dst_path):
-            dest = self.spark.read.parquet(dst_path)
+            dest = self._read(dst)
             # appending a different shape would silently mix schemas
             # in one directory — refuse by name instead
             have = {f.name: f.dataType.simpleString()
@@ -539,8 +588,7 @@ class LakeService:
                     f"{sorted(set(want) - set(have))} / retyped "
                     f"{retyped} — reindex appends, it does not "
                     "migrate schemas")
-            id_col = "id" if "id" in dest.columns else next(
-                (c for c in dest.columns if c.endswith("_id")), None)
+            id_col = _id_column(dest.columns)
             if id_col is not None:
                 # ES op_type index: same-_id docs are OVERWRITTEN.
                 # Counts are INCOMING-side (r12 ADVICE: counting dest
@@ -618,10 +666,8 @@ class LakeService:
         SQL wire format is a page protocol, an unbounded SELECT
         belongs on the lake, not an HTTP response)."""
         _assert_read_only_sql(self.spark, query)
-        for name in sorted(os.listdir(self.lake_dir)):
-            p = os.path.join(self.lake_dir, name)
-            if os.path.isdir(p):
-                self.spark.read.parquet(p).createOrReplaceTempView(name)
+        for name in self._tables("*"):
+            self._read(name).createOrReplaceTempView(name)
         df = self.spark.sql(query)
         cols = [
             {"name": f.name,
@@ -699,21 +745,18 @@ class LakeService:
         anything else is a named 400 (this engine has no scores for
         filter-context trees).
         """
-        import fnmatch as _fn
         import json as _json
 
         if from_ < 0:
             raise DslError("from must be a non-negative integer")
         _validate_rescore_options(rescore)
-        names = tables or [
-            d for d in sorted(os.listdir(self.lake_dir))
-            if d.startswith(INDEX_PREFIX)
-        ]
+        names = [n for spec in (tables or [INDEX_PREFIX + "*"])
+                 for n in self._tables(spec)]
         if fields == ["*"]:
             fields = None  # the reference's default-everything shape
         scored: list[DataFrame] = []
         for name in names:
-            df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+            df = self._read(name)
             cols = None
             if fields is not None:
                 from sql_database_to_elastic_datalake_spark.plans.es_dsl \
@@ -727,7 +770,7 @@ class LakeService:
                     nm, w = split_field_boost(f, "search field")
                     if "*" in nm or "?" in nm:
                         for c in df.columns:
-                            if _fn.fnmatchcase(c, nm):
+                            if fnmatch.fnmatchcase(c, nm):
                                 seen.setdefault(c, w)
                     elif nm in df.columns:
                         seen.setdefault(nm, w)
@@ -847,14 +890,10 @@ class LakeService:
         if not field or not isinstance(qv, list) or not qv:
             raise DslError("knn requires field and query_vector")
         kk = int(knn.get("k", k))
-        df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+        df = self._read(name)
         if field not in df.columns:
             raise DslError(f"unknown knn field {field!r}")
-
-        def resolve(f: str, _df=df):
-            return (F.col(f) if f in _df.columns
-                    else F.lit(None).cast("string"))
-
+        resolve = _tolerant_resolver(df)
         pred = None
         if knn.get("filter") is not None:
             pred = compile_dsl(knn["filter"], field_resolver=resolve,
@@ -945,16 +984,9 @@ class LakeService:
             if not table or doc_id is None:
                 raise DslError(
                     "index-based percolate requires both index and id")
-            path = os.path.join(self.lake_dir, str(table))
-            if not path_exists(self.spark, path):
-                raise NotFoundError(f"no such table {table!r}")
-            df = self.spark.read.parquet(path)
-            idc = "id" if "id" in df.columns else next(
-                (c for c in df.columns if c.endswith("_id")), None)
-            if idc is None:
-                raise DslError(f"table {table!r} has no id column")
-            rows = (df.filter(F.col(idc).cast("string")
-                              == str(doc_id)).limit(1).collect())
+            df = self._read(str(table))
+            rows = df.filter(_id_lookup(df, table, [doc_id])[0]) \
+                .limit(1).collect()
             if not rows:
                 raise NotFoundError(
                     f"document {doc_id!r} not found in {table!r}")
@@ -993,8 +1025,6 @@ class LakeService:
         column; ``{"doc": {…}}`` is ES's artificial-document form and
         needs no lookup. Only the mlt ``fields`` contribute text,
         like ES."""
-        import fnmatch as _fn
-
         if isinstance(node, list):
             return [self._resolve_mlt_likes(x, default_table)
                     for x in node]
@@ -1025,7 +1055,7 @@ class LakeService:
                         str(val) for f, val in doc.items()
                         if val is not None
                         and (not fields or any(
-                            _fn.fnmatchcase(f, p) for p in fields)))
+                            fnmatch.fnmatchcase(f, p) for p in fields)))
                     continue
                 if "_id" not in e:
                     raise DslError(
@@ -1038,21 +1068,13 @@ class LakeService:
                         "more_like_this {'_id': …} entries need an "
                         "_index (or a single concrete request table)"
                     )
-                df = self.spark.read.parquet(
-                    os.path.join(self.lake_dir, str(table)))
-                idc = "id" if "id" in df.columns else next(
-                    (c for c in df.columns if c.endswith("_id")), None)
-                if idc is None:
-                    raise DslError(
-                        f"table {table!r} has no id column for "
-                        "more_like_this doc lookup"
-                    )
+                df = self._read(str(table))
+                pred, idc = _id_lookup(df, table, [e["_id"]])
                 cols = [c for c in df.columns
                         if not fields or any(
-                            _fn.fnmatchcase(c, p) for p in fields)]
-                rows = df.filter(
-                    F.col(idc).cast("string") == str(e["_id"])
-                ).select(*(cols or [idc])).limit(1).collect()
+                            fnmatch.fnmatchcase(c, p) for p in fields)]
+                rows = df.filter(pred).select(
+                    *(cols or [idc])).limit(1).collect()
                 if rows:  # absent docs are ignored, like ES
                     texts.extend(str(rows[0][c]) for c in cols
                                  if rows[0][c] is not None)
@@ -1093,23 +1115,14 @@ class LakeService:
                         "terms lookup needs an index (or a single "
                         "concrete request table)"
                     )
-                df = self.spark.read.parquet(
-                    os.path.join(self.lake_dir, str(table)))
+                df = self._read(str(table))
                 path = str(spec["path"])
                 if path not in df.columns:
                     raise DslError(
                         f"terms lookup path {path!r} is not a column "
                         f"of {table!r}")
-                idc = "id" if "id" in df.columns else next(
-                    (c for c in df.columns if c.endswith("_id")),
-                    None)
-                if idc is None:
-                    raise DslError(
-                        f"table {table!r} has no id column for a "
-                        "terms lookup")
-                rows = df.filter(
-                    F.col(idc).cast("string") == str(spec["id"])
-                ).select(path).limit(1).collect()
+                rows = df.filter(_id_lookup(df, table, [spec["id"]])[0]) \
+                    .select(path).limit(1).collect()
                 val = rows[0][path] if rows else None
                 if val is None:
                     body[f] = []
@@ -1220,13 +1233,8 @@ class LakeService:
         total_value = 0
         aggregations = suggestions = None
         for name in names:
-            df = self.spark.read.parquet(
-                os.path.join(self.lake_dir, name))
-
-            def resolve(f: str, _df=df):
-                return (F.col(f) if f in _df.columns
-                        else F.lit(None).cast("string"))
-
+            df = self._read(name)
+            resolve = _tolerant_resolver(df)
             date_fields = {
                 f.name for f in df.schema.fields
                 if isinstance(f.dataType, (
@@ -1265,11 +1273,9 @@ class LakeService:
                 if len(names) == 1:
                     raise
                 continue  # pattern member that can't express the query
-            import fnmatch as _fn2
-
             if boost_by_pattern:
                 for pat, factor in boost_by_pattern:
-                    if _fn2.fnmatchcase(name, pat):
+                    if fnmatch.fnmatchcase(name, pat):
                         score = score * F.lit(factor)
                         break
             # a null score (missing field, log of a non-positive …)
@@ -1452,16 +1458,6 @@ class LakeService:
         import base64
         import json as _json
 
-        from pyspark.sql.types import (
-            ArrayType,
-            BinaryType,
-            StructType,
-        )
-
-        from sql_database_to_elastic_datalake_spark.operators.similarity import (
-            tiebreak_columns,
-        )
-
         if scroll_id is not None:
             try:
                 st = _json.loads(
@@ -1485,28 +1481,7 @@ class LakeService:
                     "(per-table drains compose; a cross-pattern "
                     "cursor would re-merge every page)"
                 )
-            df = self.spark.read.parquet(
-                os.path.join(self.lake_dir, table))
-            clauses: list = []
-            seen: set[str] = set()
-            for s in sort or []:
-                f = s if isinstance(s, str) else next(iter(s))
-                if f == "_doc":
-                    continue  # arbitrary order → the tie-break below
-                clauses.append({f: s[f]} if isinstance(s, dict)
-                               else {s: "asc"})
-                seen.add(f)
-            atomic = [
-                c for c in tiebreak_columns(df)
-                if not isinstance(df.schema[c].dataType,
-                                  (ArrayType, StructType, BinaryType))
-            ]
-            clauses.extend({c: "asc"} for c in atomic
-                           if c not in seen)
-            if not clauses:
-                raise DslError(
-                    "scroll needs at least one sortable column")
-            sort = clauses
+            sort = self.pit_total_sort(table, sort)
             after = None
         dsl = dsl or {"match_all": {}}
         out = self.advanced_search(
@@ -1549,37 +1524,29 @@ class LakeService:
         PITs compose, a cross-table cursor would re-merge every page.
         A missing table is the route's 404, like ES."""
         import base64
-        import fnmatch as _fn
         import json as _json
 
         if not isinstance(table, str) or not table:
             raise DslError("pit requires a table")
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-            if not names:
-                raise NotFoundError(f"no table matches {table!r}")
-            if len(names) > 1:
-                raise DslError(
-                    f"pit pattern {table!r} matches {len(names)} "
-                    "tables; open one pit per table (per-table drains "
-                    "compose; a cross-table cursor would re-merge "
-                    "every page)")
-            table = names[0]
-        elif not path_exists(self.spark,
-                             os.path.join(self.lake_dir, table)):
-            raise NotFoundError(f"no such table {table!r}")
+        names = self._tables(table)
+        if not names:
+            raise NotFoundError(f"no table matches {table!r}")
+        if len(names) > 1:
+            raise DslError(
+                f"pit pattern {table!r} matches {len(names)} "
+                "tables; open one pit per table (per-table drains "
+                "compose; a cross-table cursor would re-merge "
+                "every page)")
+        table = names[0]
+        self._read(table)  # a missing concrete table is the 404
         token = base64.urlsafe_b64encode(_json.dumps(
             {"v": 1, "pit": table}).encode()).decode()
         return {"id": token}
 
     def resolve_pit(self, pit: dict | str) -> str:
         """The table a ``pit.id`` token names (malformed → named
-        400; the table may have been dropped since open → 404, the
-        closest analogue of ES's expired-context error)."""
+        400). A table dropped since open is the 404 its first read
+        raises — the closest analogue of ES's expired-context error."""
         import base64
         import json as _json
 
@@ -1595,25 +1562,22 @@ class LakeService:
             raise DslError(
                 "malformed pit id (tokens are opaque — pass the id "
                 "returned by the _pit open verbatim)") from None
-        if not path_exists(self.spark,
-                           os.path.join(self.lake_dir, table)):
-            raise NotFoundError(
-                f"pit target table {table!r} no longer exists")
         return table
 
     def pit_total_sort(self, table: str, sort: list | None) -> list:
-        """The request sort totalized for PIT paging: ES appends an
-        implicit ``_shard_doc`` tiebreak to every PIT search — this
-        engine appends the table's atomic orderable tie-break columns
-        (the scroll convention), so consecutive ``search_after`` pages
-        can never overlap or gap whatever the caller sorts by."""
+        """The request sort totalized for PIT and scroll paging: ES
+        appends an implicit ``_shard_doc`` tiebreak to every PIT search
+        — this engine drops ``_doc``/``_shard_doc`` (arbitrary orders)
+        and appends the table's atomic orderable tie-break columns, so
+        consecutive ``search_after`` pages can never overlap or gap
+        whatever the caller sorts by."""
         from pyspark.sql.types import ArrayType, BinaryType, StructType
 
         from sql_database_to_elastic_datalake_spark.operators.similarity import (
             tiebreak_columns,
         )
 
-        df = self.spark.read.parquet(os.path.join(self.lake_dir, table))
+        df = self._read(table)
         clauses: list = []
         seen: set[str] = set()
         for s in sort or []:
@@ -1630,7 +1594,8 @@ class LakeService:
         ]
         clauses.extend({c: "asc"} for c in atomic if c not in seen)
         if not clauses:
-            raise DslError("pit needs at least one sortable column")
+            raise DslError(
+                "a paging cursor needs at least one sortable column")
         return clauses
 
     def termvectors(
@@ -1661,17 +1626,9 @@ class LakeService:
             token_spans,
         )
 
-        path = os.path.join(self.lake_dir, table)
-        if not path_exists(self.spark, path):
-            raise NotFoundError(f"no such table {table!r}")
-        df = self.spark.read.parquet(path)
-        id_col = "id" if "id" in df.columns else next(
-            (c for c in df.columns if c.endswith("_id")), None)
-        if id_col is None:
-            raise DslError(
-                f"table {table!r} has no id column for a point lookup")
-        rows = df.filter(
-            F.col(id_col).cast("string") == str(doc_id)).limit(2).collect()
+        df = self._read(table)
+        pred, id_col = _id_lookup(df, table, [doc_id])
+        rows = df.filter(pred).limit(2).collect()
         out: dict[str, Any] = {"_index": table, "_id": str(doc_id),
                                "found": bool(rows)}
         if not rows:
@@ -1795,22 +1752,18 @@ class LakeService:
             by_table.setdefault(e["_index"], []).append(i)
         out_docs: list = [None] * len(entries)
         for t, idxs in by_table.items():
-            path = os.path.join(self.lake_dir, t)
-            if not path_exists(self.spark, path):
+            df = self._read_or_none(t)
+            if df is None:
                 for i in idxs:
                     out_docs[i] = {"_index": t,
                                    "_id": str(entries[i]["_id"]),
                                    "found": False}
                 continue
-            df = self.spark.read.parquet(path)
-            idc = "id" if "id" in df.columns else next(
-                (c for c in df.columns if c.endswith("_id")), None)
-            if idc is None:
-                raise DslError(f"table {t!r} has no id column for mget")
-            wanted = sorted({str(entries[i]["_id"]) for i in idxs})
+            pred, idc = _id_lookup(
+                df, t, sorted({str(entries[i]["_id"]) for i in idxs}))
             # one job: the In() filter pushes into the scan; output
             # is bounded by the id list, so the collect is driver-safe
-            rows = (df.filter(F.col(idc).cast("string").isin(wanted))
+            rows = (df.filter(pred)
                     .orderBy(F.col(idc).asc_nulls_first())
                     .collect())
             by_id = {}
@@ -1835,7 +1788,7 @@ class LakeService:
                    fields=None) -> dict:
         """ES ``_field_caps`` — Kibana's first call against any index
         pattern. Pure metadata: schemas come from the parquet footers
-        (``spark.read.parquet(...).schema``), NO job runs.
+        (``_read(table).schema``), NO job runs.
 
         Every engine column is both searchable and aggregatable (the
         lake has no unindexed fields), so the caps object's value is
@@ -1846,20 +1799,7 @@ class LakeService:
         carries different types across matched tables, each type entry
         lists its ``indices`` like ES; a single agreeing type omits
         the key, also like ES."""
-        import fnmatch as _fn
-
-        pattern = table or INDEX_PREFIX + "*"
-        if "*" in pattern or "?" in pattern:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, pattern)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-        else:
-            if not path_exists(self.spark,
-                               os.path.join(self.lake_dir, pattern)):
-                raise DslError(f"no such table {pattern!r}")
-            names = [pattern]
+        names = self._tables(table or INDEX_PREFIX + "*")
         if fields is None:
             pats = ["*"]
         elif isinstance(fields, str):
@@ -1872,10 +1812,8 @@ class LakeService:
         # field -> es_type -> [tables]
         by_field: dict[str, dict[str, list[str]]] = {}
         for t in names:
-            schema = self.spark.read.parquet(
-                os.path.join(self.lake_dir, t)).schema
-            for f in schema.fields:
-                if not any(_fn.fnmatchcase(f.name, p) for p in pats):
+            for f in self._read(t).schema.fields:
+                if not any(fnmatch.fnmatchcase(f.name, p) for p in pats):
                     continue
                 et = _es_field_type(f.dataType.simpleString())
                 by_field.setdefault(f.name, {}).setdefault(
@@ -1910,30 +1848,18 @@ class LakeService:
         walk produces. Always ``complete: true``: the walk is exact,
         never budget-truncated (divergence: ES may report false under
         its shard timeout)."""
-        import fnmatch as _fn
+        from sql_database_to_elastic_datalake_spark.plans.search import (
+            terms_enum_frame,
+        )
 
         if not field:
             raise DslError("terms_enum requires a field")
         if size < 1:
             raise DslError("terms_enum size must be >= 1")
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-        else:
-            names = [table]
-        from sql_database_to_elastic_datalake_spark.plans.search import (
-            terms_enum_frame,
-        )
-
+        names = self._tables(table)
         terms: set[str] = set()
         for t in names:
-            path = os.path.join(self.lake_dir, t)
-            if not path_exists(self.spark, path):
-                continue
-            df = self.spark.read.parquet(path)
+            df = self._read(t)
             if field not in df.columns:
                 continue
             rows = terms_enum_frame(
@@ -1974,14 +1900,8 @@ class LakeService:
             compile_score,
         )
 
-        path = os.path.join(self.lake_dir, table)
-        if not path_exists(self.spark, path):
-            raise NotFoundError(f"no such table {table!r}")
-        df = self.spark.read.parquet(path)
-        idc = "id" if "id" in df.columns else next(
-            (c for c in df.columns if c.endswith("_id")), None)
-        if idc is None:
-            raise DslError(f"table {table!r} has no id column")
+        df = self._read(table)
+        id_pred, _ = _id_lookup(df, table, [doc_id])
         pred = compile_dsl(query, schema_fields=df.schema)
         score = compile_score(query, schema_fields=df.schema)
         probes = [pred.cast("boolean").alias("__m"),
@@ -2012,8 +1932,7 @@ class LakeService:
                     clause_descs.append((
                         f"{occur}: {_json.dumps(spec, sort_keys=True)}",
                         scored))
-        rows = (df.filter(F.col(idc).cast("string")
-                          == str(doc_id)).select(*probes).collect())
+        rows = df.filter(id_pred).select(*probes).collect()
         if not rows:
             return {"_index": table, "_id": str(doc_id),
                     "found": False, "matched": False}
@@ -2146,8 +2065,6 @@ class LakeService:
         k``); sorted pages are always exact (the Observation rides the
         TakeOrdered for free — a strictly-more-accurate divergence
         from ES's 10k default bound)."""
-        import fnmatch as _fn
-
         # r13 (ADVICE): malformed bodies must be named 400s, not 500s
         # — a non-dict collapse reached `.get` in the routing
         # condition, a scalar indices_boost raised on iteration, and
@@ -2162,14 +2079,7 @@ class LakeService:
                 "{index: factor} objects")
         _validate_rescore_options(rescore)
 
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(self.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(self.lake_dir, d))
-            )
-        else:
-            names = [table]
+        names = self._tables(table)
         if isinstance(dsl, dict) and len(dsl) == 1 \
                 and next(iter(dsl)) == "percolate":
             # r13 reverse search: the percolate query matches STORED
@@ -2421,7 +2331,7 @@ class LakeService:
         merged: list[dict] = []
         total_value, total_exact = 0, True
         for name in names:
-            df = self.spark.read.parquet(os.path.join(self.lake_dir, name))
+            df = self._read(name)
             orig_cols = df.columns
             if rt_specs:
                 # runtime fields become real columns of this table's
@@ -2435,11 +2345,8 @@ class LakeService:
                     import runtime_column
 
                 for rt_name, rt_spec in rt_specs.items():
-                    def rt_resolve(f: str, _df=df):
-                        return (F.col(f) if f in _df.columns
-                                else F.lit(None).cast("double"))
-                    df = df.withColumn(
-                        rt_name, runtime_column(rt_spec, rt_resolve))
+                    df = df.withColumn(rt_name, runtime_column(
+                        rt_spec, _tolerant_resolver(df, "double")))
             # _source is the original document — runtime/script fields
             # surface only through `fields` (ES's contract)
             src_cols = resolve_source_columns(orig_cols, source)
@@ -2459,20 +2366,12 @@ class LakeService:
             # response (plans/join_field.py)
             table_dsl, jf_flags = dsl, []
             from sql_database_to_elastic_datalake_spark.plans.join_field \
-                import has_join_field, lake_sibling_loader, \
-                rewrite_join_field
+                import has_join_field, rewrite_join_field
 
             if has_join_field(dsl):
                 df, table_dsl, jf_flags = rewrite_join_field(
-                    df, dsl, name,
-                    lake_sibling_loader(self.spark, self.lake_dir))
-
-            def resolve(field: str, _df=df):
-                # ES: a query on a field an index lacks matches nothing
-                # there — two-valued null semantics do exactly that
-                return (F.col(field) if field in _df.columns
-                        else F.lit(None).cast("string"))
-
+                    df, dsl, name, self._read_or_none)
+            resolve = _tolerant_resolver(df)
             try:
                 pred = compile_dsl(table_dsl, field_resolver=resolve,
                                    schema_fields=df.schema)
@@ -2489,14 +2388,10 @@ class LakeService:
                 from sql_database_to_elastic_datalake_spark.plans.es_aggs \
                     import run_aggs
 
-                from sql_database_to_elastic_datalake_spark.plans \
-                    .join_field import lake_sibling_loader as _lsl
-
                 aggregations = run_aggs(
                     matched, aggs, schema_fields=df.schema,
                     background=df, background_pred=pred,
-                    relation_ctx=(name, _lsl(self.spark,
-                                             self.lake_dir)))
+                    relation_ctx=(name, self._read_or_none))
             if suggest:
                 # ES computes suggestions against the INDEX, not the
                 # query's match set — pass the unfiltered table
@@ -2877,8 +2772,7 @@ def _apply_update_script(out: DataFrame, script: dict) -> DataFrame:
         val = script_column(
             {"source": rhs, "params": script.get("params"),
              "lang": script.get("lang")},
-            lambda f, _o=out: (F.col(f) if f in _o.columns
-                               else F.lit(None).cast("double")),
+            _tolerant_resolver(out, "double"),
             base_score=None,
         )
         if op != "=":
@@ -2988,13 +2882,11 @@ def _highlight_plan(highlight: dict, columns: list[str]) -> list[tuple]:
 def _expand_patterns(names: list[str], columns: list[str]) -> list[str]:
     """Highlight field names/patterns → concrete columns of one table
     (a pattern matching nothing highlights nothing, like ES)."""
-    import fnmatch as _fn
-
     out: list[str] = []
     for n in names:
         n = str(n)
         if "*" in n or "?" in n:
-            out.extend(c for c in columns if _fn.fnmatchcase(c, n))
+            out.extend(c for c in columns if fnmatch.fnmatchcase(c, n))
         elif n in columns:
             out.append(n)
     return list(dict.fromkeys(out))
@@ -3059,15 +2951,10 @@ def _rescore_expr(rescore: dict | None, df: "DataFrame"):
         compile_score,
     )
 
-    def resolve(f: str):
-        # a field this table lacks contributes nothing (ES's
-        # missing-field behavior), instead of failing analysis
-        return (F.col(f) if f in df.columns
-                else F.lit(None).cast("string"))
-
     # r12: boosts (leaf + per-field ^suffix) are honored — the score
-    # compiler shares the leaf semantics with the ranked pages
-    return compile_score(rq, field_resolver=resolve,
+    # compiler shares the leaf semantics with the ranked pages; a field
+    # this table lacks contributes nothing (ES's missing-field behavior)
+    return compile_score(rq, field_resolver=_tolerant_resolver(df),
                          schema_fields=df.schema).cast("double")
 
 
@@ -3135,12 +3022,8 @@ def _rescore_match_expr(rescore: dict | None, df: "DataFrame"):
             isinstance(body, dict) and body.get("fields")):
         return F.lit(False)  # no requested field → nothing matches
 
-    def resolve(f: str):
-        return (F.col(f) if f in df.columns
-                else F.lit(None).cast("string"))
-
     return F.coalesce(
-        compile_dsl(rq, field_resolver=resolve,
+        compile_dsl(rq, field_resolver=_tolerant_resolver(df),
                     schema_fields=df.schema),
         F.lit(False))
 
@@ -3156,16 +3039,11 @@ _RANK_EVAL_METRICS = {
 
 
 def _hit_id(hit: dict) -> str | None:
-    """A hit's document id under the engine's id convention (the mget
-    rule): the ``id`` column if the table has one, else the first
-    ``*_id`` column."""
+    """A hit's document id under the engine's id convention
+    (:func:`_id_column`, the mget rule)."""
     src = hit.get("_source") or {}
-    if "id" in src:
-        return None if src["id"] is None else str(src["id"])
-    for c in src:
-        if c.endswith("_id"):
-            return None if src[c] is None else str(src[c])
-    return None
+    c = _id_column(src)
+    return None if c is None or src[c] is None else str(src[c])
 
 
 def _rank_eval_score(mname: str, mspec: dict, ranked: list[str | None],
@@ -3540,8 +3418,6 @@ def _resolve_fields_option(fields_opt, columns: list[str]) -> list:
     Entries are names or ``{"field": …, "format": …}`` objects;
     wildcard patterns expand against the table schema; a pattern
     matching nothing contributes nothing (like ES)."""
-    import fnmatch as _fn
-
     from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
 
     if fields_opt is None:
@@ -3563,7 +3439,7 @@ def _resolve_fields_option(fields_opt, columns: list[str]) -> list:
             raise DslError(f"malformed fields entry {e!r}")
         if "*" in name or "?" in name:
             out.extend((c, fmt) for c in columns
-                       if _fn.fnmatchcase(c, name))
+                       if fnmatch.fnmatchcase(c, name))
         elif name in columns:
             out.append((name, fmt))
     seen = set()
@@ -4726,7 +4602,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         create_index_body — one source of truth for wire mappings).
         ``table`` supports the usual wildcard; response keyed per
         index like ES."""
-        import fnmatch as _fn
         import json as _json
 
         from sql_database_to_elastic_datalake_spark.sinks.bulk_export import (
@@ -4739,21 +4614,23 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if not table:
             return jsonify({"error": "mapping requires a table/index "
                                      "(query param or body)"}), 400
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(service.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(service.lake_dir, d)))
-        else:
-            names = [table]
-        out = {}
-        for name in names:
-            p = os.path.join(service.lake_dir, name)
-            if not path_exists(service.spark, p):
-                return jsonify({"error": f"unknown table {name!r}"}), 404
-            df = service.spark.read.parquet(p)
-            out[name] = _json.loads(create_index_body(df))
-        return jsonify(out), 200
+        return jsonify({
+            name: _json.loads(create_index_body(service._read(name)))
+            for name in service._tables(table)}), 200
+
+    def _table_stats(name: str) -> tuple[int, int, int]:
+        """(docs, store bytes, data files) of one lake table: one
+        metadata-cheap count job, then a walk of its directory
+        (Spark's ``_SUCCESS``/``.crc`` side files excluded)."""
+        n = service._read(name).count()
+        size = files = 0
+        for root, _dirs, fnames in os.walk(
+                os.path.join(service.lake_dir, name)):
+            for fn in fnames:
+                if not fn.startswith(("_", ".")):
+                    size += os.path.getsize(os.path.join(root, fn))
+                    files += 1
+        return n, size, files
 
     @app.route("/search/stats", methods=["GET", "POST"])
     def stats_route():
@@ -4762,31 +4639,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         metadata-cheap count job) and on-disk byte/file totals from
         the parquet directory listing. Wildcard tables like
         _mapping."""
-        import fnmatch as _fn
-
         body = request.get_json(silent=True) or {}
         table = request.args.get("table") or body.get("table") \
             or body.get("index") or "*"
-        if "*" in table or "?" in table:
-            names = sorted(
-                d for d in os.listdir(service.lake_dir)
-                if _fn.fnmatchcase(d, table)
-                and os.path.isdir(os.path.join(service.lake_dir, d)))
-        else:
-            names = [table]
         indices = {}
         total_docs, total_bytes = 0, 0
-        for name in names:
-            p = os.path.join(service.lake_dir, name)
-            if not path_exists(service.spark, p):
-                return jsonify({"error": f"unknown table {name!r}"}), 404
-            n = service.spark.read.parquet(p).count()
-            size = files = 0
-            for root, _dirs, fnames in os.walk(p):
-                for fn in fnames:
-                    if not fn.startswith(("_", ".")):
-                        size += os.path.getsize(os.path.join(root, fn))
-                        files += 1
+        for name in service._tables(table):
+            n, size, files = _table_stats(name)
             total_docs += n
             total_bytes += size
             indices[name] = {
@@ -4813,26 +4672,14 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ES prints. ``index`` query param filters by pattern. Health/
         status are constant green/open (no shard states to report);
         uuid/pri/rep are the lake's honest equivalents."""
-        import fnmatch as _fn
-
         pat = request.args.get("index") or "*"
         fmt = request.args.get("format", "text")
         if fmt not in ("text", "json"):
             return jsonify({"error":
                             "format must be text or json"}), 400
-        names = sorted(
-            d for d in os.listdir(service.lake_dir)
-            if _fn.fnmatchcase(d, pat)
-            and os.path.isdir(os.path.join(service.lake_dir, d)))
         rows = []
-        for name in names:
-            p = os.path.join(service.lake_dir, name)
-            n = service.spark.read.parquet(p).count()
-            size = 0
-            for root, _dirs, fnames in os.walk(p):
-                for fn in fnames:
-                    if not fn.startswith(("_", ".")):
-                        size += os.path.getsize(os.path.join(root, fn))
+        for name in service._tables(pat):
+            n, size, _ = _table_stats(name)
             rows.append({
                 "health": "green", "status": "open", "index": name,
                 "uuid": hashlib.md5(name.encode()).hexdigest()[:22],
@@ -4857,7 +4704,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def cat_count_route():
         """ES ``GET _cat/count[?index=pattern]``: epoch, timestamp,
         total doc count — the monitoring one-liner."""
-        import fnmatch as _fn
         import time as _time
 
         pat = request.args.get("index") or "*"
@@ -4865,11 +4711,8 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if fmt not in ("text", "json"):
             return jsonify({"error":
                             "format must be text or json"}), 400
-        total = 0
-        for name in sorted(os.listdir(service.lake_dir)):
-            p = os.path.join(service.lake_dir, name)
-            if _fn.fnmatchcase(name, pat) and os.path.isdir(p):
-                total += service.spark.read.parquet(p).count()
+        total = sum(service._read(name).count()
+                    for name in service._tables(pat))
         epoch = int(_time.time())
         ts = _time.strftime("%H:%M:%S", _time.gmtime(epoch))
         if fmt == "json":
@@ -4955,20 +4798,21 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                                      "proceed"}), 400
         return jsonify(service.reindex(body)), 200
 
-    @app.route("/search/msearch", methods=["POST"])
-    def msearch_route():
-        """ES ``_msearch``: NDJSON header/body line pairs → one
-        response per search, errors inline per-item (a bad body fails
-        its slot, not the batch — the multi-API contract). Headers
-        take ``index`` (table/pattern); bodies take the
-        /search/advanced key set."""
+    def _multi_search(route: str, prepare):
+        """The _msearch / _msearch_template loop over NDJSON
+        header/body line pairs: ``prepare`` turns a body line into an
+        advanced-search body, the header's ``index`` (table/pattern)
+        names the tables. Errors stay inline per slot — a missing
+        table or document is ITS slot's 404, a malformed or
+        unsupported body its 400 — so a bad slot fails only itself
+        (the multi-API contract)."""
         import json as _json
 
         raw = request.get_data(as_text=True) or ""
         lines = [ln for ln in raw.splitlines() if ln.strip()]
         if len(lines) % 2:
             return jsonify({"error":
-                            "msearch needs header/body line pairs"}), 400
+                            f"{route} needs header/body line pairs"}), 400
         responses = []
         for i in range(0, len(lines), 2):
             try:
@@ -4979,64 +4823,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                                   "status": 400})
                 continue
             try:
-                k = _page_size(body)
-                if k is None:
-                    raise DslError("k/size must be a non-negative "
-                                   "integer")
-                try:
-                    from_ = int(body.get("from", 0))
-                except (TypeError, ValueError):
-                    # a malformed `from` is ITS slot's 400, never an
-                    # unhandled ValueError -> request-level 500
-                    raise DslError(
-                        "from must be a non-negative integer") from None
-                out = service.advanced_search(
-                    header.get("index",
-                               body.get("table", INDEX_PREFIX + "*")),
-                    body.get("query", {"match_all": {}}), k=k,
-                    aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=body.get("sort"),
-                    from_=from_,
-                    source=body.get("_source"),
-                    track_total_hits=body.get("track_total_hits"),
-                    runtime_mappings=body.get("runtime_mappings"),
-                )
-                responses.append({**_wire_envelope(out), "status": 200})
-            except DslError as ex:
-                responses.append({"error": str(ex), "status": 400})
-        return jsonify({"responses": responses}), 200
-
-    @app.route("/search/msearch_template", methods=["POST"])
-    def msearch_template_route():
-        """ES ``_msearch/template`` (r11): NDJSON header/template-body
-        line pairs — each body carries {source|id, params} and renders
-        through the one mustache engine, then runs as its pair's
-        search. Errors stay inline per-item like _msearch (a missing
-        stored template 404s ITS slot, not the batch)."""
-        import json as _json
-
-        from sql_database_to_elastic_datalake_spark.plans.templates import (
-            render_search_template,
-        )
-
-        raw = request.get_data(as_text=True) or ""
-        lines = [ln for ln in raw.splitlines() if ln.strip()]
-        if len(lines) % 2:
-            return jsonify({"error":
-                            "msearch_template needs header/body line "
-                            "pairs"}), 400
-        responses = []
-        for i in range(0, len(lines), 2):
-            try:
-                header = _json.loads(lines[i])
-                tbody = _json.loads(lines[i + 1])
-            except ValueError:
-                responses.append({"error": "malformed NDJSON line",
-                                  "status": 400})
-                continue
-            try:
-                source, params = _resolve_template(tbody)
-                body = render_search_template(source, params)
+                body = prepare(body)
                 k = _page_size(body)
                 if k is None:
                     raise DslError("k/size must be a non-negative "
@@ -5065,6 +4852,28 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             except DslError as ex:
                 responses.append({"error": str(ex), "status": 400})
         return jsonify({"responses": responses}), 200
+
+    @app.route("/search/msearch", methods=["POST"])
+    def msearch_route():
+        """ES ``_msearch``: one response per header/body pair; bodies
+        take the /search/advanced key set (:func:`_multi_search`)."""
+        return _multi_search("msearch", lambda body: body)
+
+    @app.route("/search/msearch_template", methods=["POST"])
+    def msearch_template_route():
+        """ES ``_msearch/template`` (r11): each body carries {source|id,
+        params} and renders through the one mustache engine, then runs
+        as its pair's search (:func:`_multi_search` — a missing stored
+        template 404s ITS slot, not the batch)."""
+        from sql_database_to_elastic_datalake_spark.plans.templates import (
+            render_search_template,
+        )
+
+        return _multi_search(
+            "msearch_template",
+            lambda tbody: render_search_template(
+                *_resolve_template(tbody),
+                partials=service.stored_templates))
 
     @app.route("/search/mget", methods=["POST"])
     def mget_route():
@@ -5200,11 +5009,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         schema — ``valid`` plus, with ``explain=true``, the ES-shaped
         per-"shard" explanation carrying the error text. Nothing
         executes: compilation only, no Spark job."""
-        from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-            DslError,
-            compile_dsl,
-        )
-
         body = request.get_json(force=True, silent=True) or {}
         unknown = sorted(set(body) - {"table", "index", "query",
                                       "explain", "rewrite"})
@@ -5214,11 +5018,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         table = body.get("table") or body.get("index")
         fields = None
         if table and "*" not in table and "?" not in table:
-            path = os.path.join(service.lake_dir, table)
-            if not path_exists(service.spark, path):
-                return jsonify(
-                    {"error": f"no such table {table!r}"}), 404
-            fields = service.spark.read.parquet(path).columns
+            fields = service._read(table).columns
         err = None
         try:
             compile_dsl(body.get("query", {"match_all": {}}),
@@ -5297,12 +5097,13 @@ def resync_entity(
     src = entities[entity_key].filter(F.col("id") == entity_id)
     doc = getattr(sync_mod, ENTITY_SYNC_FNS[entity_type])(src, indexed_at)
     id_out = f"{entity_type}_id"
-    path = service._table_path(f"denorm_{entity_type}")
+    name = f"{INDEX_PREFIX}denorm_{entity_type}"
+    path = os.path.join(service.lake_dir, name)
     # existence check, not try/except-everything (same data-loss class
     # as resync_ticket: a transient read error must raise, not rebuild
     # the table from one document); Hadoop-FS so URI schemes resolve
     if path_exists(service.spark, path):
-        base = service.spark.read.parquet(path)
+        base = service._read(name)
         merged = merge_latest_wins(base, doc, keys=[id_out], version_col="indexed_at")
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
     else:

@@ -298,6 +298,15 @@ _AGG_BODY_KEYS = {
     "matrix_stats": {"fields", "missing"},
 }
 
+#: Grid aggregation kind → (cell function in functions/geo.py,
+#: precision range lo..hi, default precision, range-error note).
+_GRID_AGGS = {
+    "geohash_grid": ("geohash", 1, 8, 5,
+                     " (9+ exceeds the exact-arithmetic cell width "
+                     "this engine guarantees)"),
+    "geotile_grid": ("geotile", 0, 29, 7, ""),
+}
+
 
 def check_agg_keys(kind: str, body) -> None:
     """400 on agg-body keys with unimplemented RESULT-CHANGING
@@ -4446,90 +4455,50 @@ def run_aggs(
                 )
                 _graft_sibling(merged, tree_s, levels_s, 0, d)
             out[name] = merged
-        elif kind == "geohash_grid":
-            # r13 (r12 verdict stretch #9): per-geohash-cell doc
-            # counts — the cell is EXACT bit arithmetic
-            # (functions/geo.py), one groupBy shuffle, buckets by
-            # (doc_count desc, key asc) like ES. Sub-aggregations are
-            # a named 400 (bucket chains belong to the nested-levels
-            # machinery; grafting geo cells there is future work, and
-            # silently dropping subs would return wrong envelopes).
-            from sql_database_to_elastic_datalake_spark.functions.geo import (
-                geohash,
+        elif kind in _GRID_AGGS:
+            # r13 (r12 verdict stretch #9): per-cell doc counts over
+            # geohash cells or (r13 late) OSM slippy-map tiles ("z/x/y"
+            # keys, the Kibana Maps default grid) — the cell is EXACT
+            # bit arithmetic (functions/geo.py), one groupBy shuffle,
+            # buckets by (doc_count desc, key asc) like ES; geotile
+            # `bounds` is unlisted in _AGG_BODY_KEYS → named 400
+            # (boundary-stability note on functions/geo.py:geotile).
+            # Sub-aggregations are a named 400 (bucket chains belong to
+            # the nested-levels machinery; grafting geo cells there is
+            # future work, and silently dropping subs would return
+            # wrong envelopes).
+            from sql_database_to_elastic_datalake_spark.functions import (
+                geo,
             )
             from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
                 _geo_field_cols,
             )
 
+            cell, lo, hi, default, why = _GRID_AGGS[kind]
             if sub:
                 raise DslError(
-                    "geohash_grid sub-aggregations are not supported")
+                    f"{kind} sub-aggregations are not supported")
             field = body.get("field")
             if not field:
-                raise DslError("geohash_grid requires a field")
-            precision = body.get("precision", 5)
+                raise DslError(f"{kind} requires a field")
+            precision = body.get("precision", default)
             if isinstance(precision, bool) or not isinstance(
-                    precision, int) or not 1 <= precision <= 8:
+                    precision, int) or not lo <= precision <= hi:
                 raise DslError(
-                    "geohash_grid precision must be an integer in "
-                    "[1, 8] (9+ exceeds the exact-arithmetic cell "
-                    "width this engine guarantees)")
+                    f"{kind} precision must be an integer in "
+                    f"[{lo}, {hi}]{why}")
             size = body.get("size", 10000)
             if isinstance(size, bool) or not isinstance(size, int) \
                     or size < 1:
-                raise DslError("geohash_grid size must be a positive "
+                raise DslError(f"{kind} size must be a positive "
                                "integer")
             lat_c, lon_c = _geo_field_cols(
                 field, F.col, schema_fields or df.columns,
                 schema=df.schema)
             rows = (
                 df.filter(lat_c.isNotNull() & lon_c.isNotNull())
-                .groupBy(geohash(lat_c, lon_c, precision).alias("key"))
-                .agg(F.count(F.lit(1)).alias("doc_count"))
-                .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-                .limit(size)
-                .collect()
-            )
-            out[name] = {"buckets": [
-                {"key": r["key"], "doc_count": r["doc_count"]}
-                for r in rows
-            ]}
-        elif kind == "geotile_grid":
-            # r13 late: OSM slippy-map tiles ("z/x/y" keys) — the
-            # Kibana Maps default grid. Same shape as geohash_grid
-            # (one groupBy shuffle, buckets by doc_count desc / key
-            # asc); `bounds` is unlisted in _AGG_BODY_KEYS → named
-            # 400. Boundary-stability note on functions/geo.py:geotile.
-            from sql_database_to_elastic_datalake_spark.functions.geo import (
-                geotile,
-            )
-            from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
-                _geo_field_cols,
-            )
-
-            if sub:
-                raise DslError(
-                    "geotile_grid sub-aggregations are not supported")
-            field = body.get("field")
-            if not field:
-                raise DslError("geotile_grid requires a field")
-            precision = body.get("precision", 7)
-            if isinstance(precision, bool) or not isinstance(
-                    precision, int) or not 0 <= precision <= 29:
-                raise DslError(
-                    "geotile_grid precision must be an integer in "
-                    "[0, 29]")
-            size = body.get("size", 10000)
-            if isinstance(size, bool) or not isinstance(size, int) \
-                    or size < 1:
-                raise DslError("geotile_grid size must be a positive "
-                               "integer")
-            lat_c, lon_c = _geo_field_cols(
-                field, F.col, schema_fields or df.columns,
-                schema=df.schema)
-            rows = (
-                df.filter(lat_c.isNotNull() & lon_c.isNotNull())
-                .groupBy(geotile(lat_c, lon_c, precision).alias("key"))
+                .groupBy(getattr(geo, cell)(lat_c, lon_c, precision)
+                         .alias("key"))
                 .agg(F.count(F.lit(1)).alias("doc_count"))
                 .orderBy(F.col("doc_count").desc(), F.col("key").asc())
                 .limit(size)

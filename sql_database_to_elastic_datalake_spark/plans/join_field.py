@@ -41,7 +41,6 @@ a membership engine must not silently drop a requested ranking.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -310,16 +309,3 @@ def rewrite_join_field(
         )
     return state["df"], rewritten, state["flags"]
 
-
-def lake_sibling_loader(spark, lake_dir: str):
-    """The API's ``load_sibling``: a lake-namespace parquet reader
-    that returns None for an absent table (the named 400 / the
-    ``ignore_unmapped`` skip happen at the leaf)."""
-
-    def load(name: str) -> DataFrame | None:
-        path = os.path.join(lake_dir, name)
-        if not os.path.isdir(path):
-            return None
-        return spark.read.parquet(path)
-
-    return load

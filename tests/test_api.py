@@ -2345,11 +2345,11 @@ def test_field_caps_types_and_conflicts(client, service):
                     data=json.dumps({"include_unmapped": True}),
                     content_type="application/json")
     assert r.status_code == 400
-    # concrete missing table → 400 with the table named
+    # concrete missing table → 404 with the table named
     r = client.post("/search/field_caps",
                     data=json.dumps({"table": "data_lake_nope"}),
                     content_type="application/json")
-    assert r.status_code == 400
+    assert r.status_code == 404
     assert "data_lake_nope" in r.get_json()["error"]
 
 
@@ -2923,7 +2923,7 @@ def test_delete_by_query_route_contract(client, service, spark):
     r = client.post("/search/delete_by_query", data=json.dumps(
         {"index": "data_lake_nope", "query": {"match_all": {}}}),
         content_type="application/json")
-    assert r.status_code == 400 and "unknown table" in r.get_json()["error"]
+    assert r.status_code == 404 and "no such table" in r.get_json()["error"]
 
 
 def test_update_by_query_assignment_subset(service, spark):
@@ -3736,3 +3736,143 @@ def test_explain_route(client, service, spark):
         content_type="application/json")
     assert r.status_code == 400
     assert "unsupported explain keys" in r.get_json()["error"]
+
+
+_MISSING = "data_lake_missing"
+
+#: every route that takes a table, each naming the missing one
+_MISSING_TABLE_REQUESTS = {
+    "search": ("POST", "/search", {"query": "x", "tables": [_MISSING]}),
+    "advanced": ("POST", "/search/advanced",
+                 {"table": _MISSING, "query": {"term": {"t": "x"}}}),
+    "advanced_ranked": ("POST", "/search/advanced",
+                        {"table": _MISSING, "query": {"match": {"t": "x"}}}),
+    "advanced_knn": ("POST", "/search/advanced", {
+        "table": _MISSING,
+        "knn": {"field": "vec", "query_vector": [1.0, 0.0]}}),
+    "advanced_scroll": ("POST", "/search/advanced",
+                        {"table": _MISSING, "scroll": "1m"}),
+    "advanced_mlt_like_id": ("POST", "/search/advanced", {
+        "table": _MISSING, "query": {"more_like_this": {
+            "fields": ["t"], "like": [{"_id": 1}]}}}),
+    "advanced_terms_lookup": ("POST", "/search/advanced", {
+        "table": _MISSING,
+        "query": {"terms": {"t": {"id": 1, "path": "t"}}}}),
+    "percolate_index_ref": ("POST", "/search/advanced", {
+        "query": {"percolate": {"field": "query", "index": _MISSING,
+                                "id": 1}}}),
+    "count": ("POST", "/search/count", {"table": _MISSING}),
+    "delete_by_query": ("POST", "/search/delete_by_query",
+                        {"table": _MISSING, "query": {"match_all": {}}}),
+    "update_by_query": ("POST", "/search/update_by_query", {
+        "table": _MISSING, "script": {"source": "ctx._source.v = 1"}}),
+    "reindex_source": ("POST", "/search/reindex", {
+        "source": {"index": _MISSING}, "dest": {"index": "data_lake_d"}}),
+    "field_caps": ("POST", "/search/field_caps", {"table": _MISSING}),
+    "terms_enum": ("POST", "/search/terms_enum",
+                   {"table": _MISSING, "field": "t"}),
+    "termvectors": ("POST", "/search/termvectors",
+                    {"table": _MISSING, "id": 1}),
+    "explain": ("POST", "/search/explain", {"table": _MISSING, "id": 1}),
+    "pit": ("POST", "/search/pit", {"table": _MISSING}),
+    "validate": ("POST", "/search/validate",
+                 {"table": _MISSING, "query": {"match_all": {}}}),
+    "mapping": ("GET", f"/search/mapping?table={_MISSING}", None),
+    "stats": ("GET", f"/search/stats?table={_MISSING}", None),
+    "cat_indices": ("GET", f"/cat/indices?index={_MISSING}", None),
+    "cat_count": ("GET", f"/cat/count?index={_MISSING}", None),
+}
+
+
+@pytest.mark.parametrize("route", sorted(_MISSING_TABLE_REQUESTS))
+def test_missing_table_is_404(client, service, route):
+    """A missing concrete table is Elasticsearch's 404 in every route
+    that takes one, with the same error body — one resolver
+    (LakeService._tables/_read) names, reads and 404s every table."""
+    _write_lake_table(service, "data_lake_here", [(1, "x")],
+                      "id long, t string")
+    method, url, body = _MISSING_TABLE_REQUESTS[route]
+    if method == "GET":
+        r = client.get(url)
+    else:
+        r = client.post(url, data=json.dumps(body),
+                        content_type="application/json")
+    assert r.status_code == 404, r.get_data(as_text=True)
+    assert r.get_json()["error"] == f"no such table {_MISSING!r}"
+
+
+def test_missing_table_fails_only_its_msearch_slot(client, service):
+    """A slot naming a missing table — directly or through a percolate
+    index reference — is ITS slot's 404; the batch still answers 200."""
+    _write_lake_table(service, "data_lake_here", [(1, "x")],
+                      "id long, t string")
+    nd = "\n".join(json.dumps(x) for x in [
+        {"index": "data_lake_here"}, {"query": {"match_all": {}}},
+        {"index": _MISSING}, {"query": {"match_all": {}}},
+        {}, {"query": {"percolate": {"field": "query",
+                                     "index": _MISSING, "id": 1}}},
+    ]) + "\n"
+    r = client.post("/search/msearch", data=nd,
+                    content_type="application/x-ndjson")
+    assert r.status_code == 200
+    rs = r.get_json()["responses"]
+    assert [x["status"] for x in rs] == [200, 404, 404]
+    assert rs[1]["error"] == f"no such table {_MISSING!r}"
+
+
+def test_empty_wildcard_is_an_empty_result(client, service):
+    """A wildcard matching no table stays an empty answer, and mget
+    keeps found: false per entry — only a CONCRETE missing name 404s."""
+    _write_lake_table(service, "data_lake_here", [(1, "x")],
+                      "id long, t string")
+    r = client.post("/search/advanced", data=json.dumps(
+        {"table": "data_lake_nomatch*", "query": {"match_all": {}}}),
+        content_type="application/json")
+    assert r.status_code == 200
+    assert r.get_json()["hits"]["hits"] == []
+    r = client.get("/cat/count?index=data_lake_nomatch*&format=json")
+    assert r.status_code == 200 and r.get_json()[0]["count"] == "0"
+    r = client.post("/search/mget", data=json.dumps(
+        {"table": _MISSING, "ids": [1]}), content_type="application/json")
+    assert r.status_code == 200
+    assert r.get_json()["docs"] == [
+        {"_index": _MISSING, "_id": "1", "found": False}]
+    # a lake directory nothing was written to yet holds no table
+    fresh = create_app(LakeService(
+        service.spark, os.path.join(service.lake_dir, "fresh")))
+    r = fresh.test_client().get("/cat/indices?format=json")
+    assert r.status_code == 200 and r.get_json() == []
+
+
+def test_msearch_template_resolves_stored_partials(client, service):
+    """An _msearch/template slot renders exactly like _search/template:
+    a ``{{>name}}`` partial resolves against the stored templates."""
+    _write_lake_table(service, "data_lake_here", [(1, "x")],
+                      "id long, t string")
+    client.put("/scripts/all", data=json.dumps({"script": {
+        "lang": "mustache", "source": '{"match_all": {}}'}}),
+        content_type="application/json")
+    nd = "\n".join(json.dumps(x) for x in [
+        {"index": "data_lake_here"},
+        {"source": '{"query": {{>all}} }', "params": {}},
+    ]) + "\n"
+    r = client.post("/search/msearch_template", data=nd,
+                    content_type="application/x-ndjson")
+    slot = r.get_json()["responses"][0]
+    assert slot["status"] == 200, slot
+    assert slot["hits"]["total"] == {"value": 1, "relation": "eq"}
+
+
+def test_glob_name_is_no_table_for_a_single_table_route(client, service):
+    """A route that rewrites ONE table never lets Spark expand a glob
+    in its name into several tables: the name is no table (404), and
+    every table it would have matched is left as it was."""
+    for name in ("data_lake_g1", "data_lake_g2"):
+        _write_lake_table(service, name, [(1, "x")], "id long, t string")
+    r = client.post("/search/delete_by_query", data=json.dumps(
+        {"table": "data_lake_g*", "query": {"match_all": {}}}),
+        content_type="application/json")
+    assert r.status_code == 404
+    assert r.get_json()["error"] == "no such table 'data_lake_g*'"
+    r = client.get("/cat/count?index=data_lake_g*&format=json")
+    assert r.get_json()[0]["count"] == "2"
