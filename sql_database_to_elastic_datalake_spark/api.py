@@ -41,7 +41,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_database_to_elastic_datalake_spark.fs import path_exists
 from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
     DslError,
     GeoResolutionError,
@@ -53,6 +52,10 @@ from sql_database_to_elastic_datalake_spark.plans.search import (
     string_columns,
 )
 from sql_database_to_elastic_datalake_spark.sources.ingest import REQUIRED_FIELDS
+from sql_database_to_elastic_datalake_spark.sources.parquet import (
+    cached_scan,
+    forget_scan,
+)
 
 #: Lake table name prefix (reference /root/reference/src/config.py:29).
 INDEX_PREFIX = "data_lake_"
@@ -107,6 +110,11 @@ def _has_feature_scorer(node) -> bool:
     if kind == "boosting" and isinstance(body, dict):
         return _has_feature_scorer(body.get("positive"))
     return False
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The scan loader of a lake table (``LakeService._read``)."""
+    return spark.read.parquet(path)
 
 
 def _utcnow_iso() -> str:
@@ -237,8 +245,7 @@ class LakeService:
         Elasticsearch: a wildcard (``*``/``?``) gives the sorted
         matching table directories, possibly none; a concrete name
         gives ``[spec]``. A missing concrete table is the
-        ``NotFoundError`` :meth:`_read` raises when it is read — the
-        hit path makes no separate existence call."""
+        ``NotFoundError`` :meth:`_read` raises when it is read."""
         if "*" not in spec and "?" not in spec:
             return [spec]
         if not os.path.isdir(self.lake_dir):
@@ -251,16 +258,26 @@ class LakeService:
     def _read(self, name: str) -> DataFrame:
         """One lake table as a DataFrame; a missing table (or a name
         Spark would expand as a path glob) is
-        ``NotFoundError("no such table 'X'")`` — the route's 404."""
+        ``NotFoundError("no such table 'X'")`` — the route's 404. The
+        plan is reused while the table directory's modification time
+        is unchanged (``sources.parquet.cached_scan``); every action
+        on it still reads the files."""
         if re.search(r"[*?\[\]{}\\]", name):
             raise NotFoundError(f"no such table {name!r}")
         try:
-            return self.spark.read.parquet(
-                os.path.join(self.lake_dir, name))
+            df = cached_scan(self.spark, os.path.join(self.lake_dir, name),
+                             _read_parquet)
         except AnalysisException as ex:
-            if ex.getCondition() == "PATH_NOT_FOUND":
-                raise NotFoundError(f"no such table {name!r}") from None
-            raise
+            if ex.getCondition() != "PATH_NOT_FOUND":
+                raise
+            df = None  # deleted between the status call and the read
+        if df is None:
+            raise NotFoundError(f"no such table {name!r}")
+        return df
+
+    def _wrote(self, name: str) -> None:
+        """Forget ``name``'s cached plan after this service rewrote it."""
+        forget_scan(os.path.join(self.lake_dir, name))
 
     def _read_or_none(self, name: str) -> DataFrame | None:
         """:meth:`_read`, with an absent table as None — for callers
@@ -336,8 +353,9 @@ class LakeService:
                 self.spark, normalized,
                 ", ".join(f"`{c}` string" for c in cols)
             )
-            df.write.mode("append").parquet(os.path.join(
-                self.lake_dir, f"{INDEX_PREFIX}{entity_type.lower()}"))
+            name = f"{INDEX_PREFIX}{entity_type.lower()}"
+            df.write.mode("append").parquet(os.path.join(self.lake_dir, name))
+            self._wrote(name)
         ok = sum(1 for r in results if r.ok)
         err = len(results) - ok
         status = 200 if err == 0 else (207 if ok else 400)
@@ -401,18 +419,18 @@ class LakeService:
         )
         name = f"{INDEX_PREFIX}denormalized_ticket"
         path = os.path.join(self.lake_dir, name)
-        # existence check, not try/except-everything: a transient read
-        # failure on an EXISTING table must raise, not silently rebuild
-        # the lake table from this one document. Hadoop-FS existence so
-        # hdfs://s3a:// lake dirs don't always look absent (fs.py).
-        if path_exists(self.spark, path):
-            base = self._read(name)
+        # only absence means "create": a transient read failure on an
+        # EXISTING table must raise, not silently rebuild the lake
+        # table from this one document
+        base = self._read_or_none(name)
+        if base is not None:
             merged = merge_latest_wins(
                 base, doc, keys=["ticket_id"], version_col="indexed_at"
             )
             merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
         else:
             doc.write.mode("overwrite").parquet(path)
+        self._wrote(name)
         n = doc.count()
         # superset of the reference's sync response
         # (ticket_routes.py:240-245: status/ticket_id/message)
@@ -455,6 +473,7 @@ class LakeService:
             survivors = df.filter(~matched)
             survivors.localCheckpoint(eager=True).write.mode(
                 "overwrite").parquet(os.path.join(self.lake_dir, table))
+            self._wrote(table)
         return {
             "took": int((_time.monotonic() - t0) * 1000),
             "timed_out": False, "total": deleted, "deleted": deleted,
@@ -506,6 +525,7 @@ class LakeService:
         if updated:
             out.drop("__match").localCheckpoint(eager=True).write.mode(
                 "overwrite").parquet(os.path.join(self.lake_dir, table))
+            self._wrote(table)
         return {
             "took": int((_time.monotonic() - t0) * 1000),
             "timed_out": False, "total": updated, "updated": updated,
@@ -565,9 +585,9 @@ class LakeService:
             ).drop("__match")
         total = int(df.count())
         created, updated = total, 0
-        # existence decides create-versus-merge (fs.py)
-        if total and path_exists(self.spark, dst_path):
-            dest = self._read(dst)
+        # existence decides create-versus-merge
+        dest = self._read_or_none(dst) if total else None
+        if dest is not None:
             # appending a different shape would silently mix schemas
             # in one directory — refuse by name instead
             have = {f.name: f.dataType.simpleString()
@@ -626,6 +646,7 @@ class LakeService:
                 merged.localCheckpoint(eager=True).write.mode(
                     "overwrite").option(
                     "compression", "zstd").parquet(dst_path)
+                self._wrote(dst)
                 return {
                     "took": int((_time.monotonic() - t0) * 1000),
                     "timed_out": False, "total": total,
@@ -639,6 +660,7 @@ class LakeService:
         if total:
             df.write.mode("append").option(
                 "compression", "zstd").parquet(dst_path)
+            self._wrote(dst)
         return {
             "took": int((_time.monotonic() - t0) * 1000),
             "timed_out": False, "total": total, "created": created,
@@ -4061,6 +4083,18 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         if term is None:
             return jsonify(
                 {"error": "missing query/search_term"}), 400
+        if not isinstance(term, str):
+            return jsonify(
+                {"error": "query/search_term must be a string"}), 400
+        # a string is one index expression, as in ES's ``index``
+        tables = body.get("tables")
+        if isinstance(tables, str):
+            tables = [tables]
+        elif tables is not None and not (
+                isinstance(tables, list)
+                and all(isinstance(t, str) for t in tables)):
+            return jsonify({"error": "tables must be a string or a "
+                                     "list of strings"}), 400
         # ES's offset idiom works WITHOUT a sort here: the ranked
         # path's _score order is total (r7 — it used to be rejected)
         try:
@@ -4076,7 +4110,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             return jsonify(
                 {"error": "min_score must be a number"}), 400
         return jsonify(_wire_envelope(
-            service.search(term, body.get("tables"), k=k,
+            service.search(term, tables, k=k,
                            fields=body.get("fields"), from_=from_,
                            min_score=ms,
                            rescore=body.get("rescore")),
@@ -5099,15 +5133,14 @@ def resync_entity(
     id_out = f"{entity_type}_id"
     name = f"{INDEX_PREFIX}denorm_{entity_type}"
     path = os.path.join(service.lake_dir, name)
-    # existence check, not try/except-everything (same data-loss class
-    # as resync_ticket: a transient read error must raise, not rebuild
-    # the table from one document); Hadoop-FS so URI schemes resolve
-    if path_exists(service.spark, path):
-        base = service._read(name)
+    # only absence means "create" (same data-loss class as resync_ticket)
+    base = service._read_or_none(name)
+    if base is not None:
         merged = merge_latest_wins(base, doc, keys=[id_out], version_col="indexed_at")
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
     else:
         doc.write.mode("overwrite").parquet(path)
+    service._wrote(name)
     n = doc.count()
     # superset of the reference's per-entity sync response shape
     # (user_routes.py:221-227: status/<entity>_id/message)

@@ -23,3 +23,23 @@ def path_exists(spark, path: str) -> bool:
     hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
     fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hadoop_path))
+
+
+def modification_time(spark, path: str) -> int | None:
+    """Last-modified time of ``path`` in ms since the epoch, or None
+    when it does not exist — one ``getFileStatus`` on the Hadoop
+    ``FileSystem`` ``path`` resolves to, so local, ``hdfs://`` and
+    ``s3a://`` paths all answer. A store without directory times
+    (object stores report 0 for a prefix) answers 0."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        return int(fs.getFileStatus(hadoop_path).getModificationTime())
+    except Py4JJavaError as ex:
+        if ex.java_exception.getClass().getName() == \
+                "java.io.FileNotFoundException":
+            return None
+        raise

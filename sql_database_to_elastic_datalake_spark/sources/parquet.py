@@ -12,10 +12,14 @@ are declared by callers and pushed down by Catalyst into the scan
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sql_database_to_elastic_datalake_spark.fs import modification_time
 
 #: The harness's table inventory (TESTDATA.md). Analogous to the
 #: reference's ``tables_to_sync`` allow-list
@@ -74,12 +78,52 @@ def _iso_to_micros(iso: str) -> int:
     return (td.days * 86400 + td.seconds) * 1_000_000 + td.microseconds
 
 
-#: Scan cache: (applicationId, path, mtime) → DataFrame. A DataFrame is
-#: an immutable logical plan, so reusing one skips the JVM round-trips
-#: for file listing + footer schema reads (~80 ms per table per build —
-#: over half of a complex query's plan-construction time). mtime in the
-#: key invalidates on rewrite; applicationId scopes to the session.
-_SCAN_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+#: Scan cache: (applicationId, path, loader) → (modification time,
+#: DataFrame). A DataFrame is an immutable logical plan whose file index
+#: was listed when it was built, so reusing one skips the JVM
+#: round-trips for the file listing and the footer schema read (~80 ms
+#: per table). Only plans are kept: every action still reads the files.
+#: An entry is reused while the path's modification time is unchanged;
+#: a miss replaces every entry of its path, so a long-lived service
+#: that rewrites tables holds one plan per path, not one per rewrite.
+_SCANS: dict[tuple[str, str, Callable], tuple[int, DataFrame]] = {}
+_SCANS_LOCK = threading.Lock()
+
+
+def cached_scan(
+    spark: SparkSession, path: str,
+    loader: Callable[[SparkSession, str], DataFrame],
+) -> DataFrame | None:
+    """``loader(spark, path)``, reused while ``path``'s modification
+    time (``fs.modification_time``) is unchanged; None when
+    ``path`` does not exist. A store without directory times is read
+    afresh every time — nothing there would tell a rewrite apart."""
+    mtime = modification_time(spark, path)
+    if mtime is None:
+        return None
+    if not mtime:
+        return loader(spark, path)
+    key = (spark.sparkContext.applicationId, path, loader)
+    hit = _SCANS.get(key)
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
+    df = loader(spark, path)
+    with _SCANS_LOCK:
+        _drop(path)
+        _SCANS[key] = (mtime, df)
+    return df
+
+
+def forget_scan(path: str) -> None:
+    """Drop ``path``'s cached plan — for a writer that has just
+    rewritten it, so the next read lists the new files."""
+    with _SCANS_LOCK:
+        _drop(path)
+
+
+def _drop(path: str) -> None:
+    for k in [k for k in _SCANS if k[1] == path]:
+        del _SCANS[k]
 
 
 def load_table(
@@ -89,7 +133,8 @@ def load_table(
     ts_range: dict[str, tuple[str | None, str | None]] | None = None,
 ) -> DataFrame:
     """Scan one lake table. Plain ``spark.read.parquet`` so that filter
-    pushdown, column pruning and partition pruning all apply.
+    pushdown, column pruning and partition pruning all apply. Without
+    ``ts_range`` the scan's plan is reused through :func:`cached_scan`.
 
     Nanosecond-precision parquet timestamps (which Spark's vectorized
     reader rejects, PARQUET_TYPE_ILLEGAL) are read as raw nanos via
@@ -111,21 +156,18 @@ def load_table(
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if ts_range is None:
-        try:
-            key = (spark.sparkContext.applicationId, path, os.path.getmtime(path))
-        except OSError:
-            key = None
-        if key is not None:
-            cached = _SCAN_CACHE.get(key)
-            if cached is None:
-                cached = load_table(spark, sf_dir, name, ts_range={})
-                # supersede entries for the same path (older mtimes or
-                # dead applicationIds): without eviction a long-lived
-                # service that rewrites tables leaks one plan per rewrite
-                for k in [k for k in _SCAN_CACHE if k[1] == path and k != key]:
-                    del _SCAN_CACHE[k]
-                _SCAN_CACHE[key] = cached
-            return cached
+        df = cached_scan(spark, path, _scan)
+        if df is not None:
+            return df
+    return _scan(spark, path, ts_range)
+
+
+def _scan(
+    spark: SparkSession,
+    path: str,
+    ts_range: dict[str, tuple[str | None, str | None]] | None = None,
+) -> DataFrame:
+    """:func:`load_table`'s read of one parquet path."""
     nanos = _nanos_timestamp_cols(path)
     if not nanos:
         df = spark.read.parquet(path)

@@ -717,6 +717,36 @@ def test_search_route_accepts_from(client, service):
     assert r.status_code == 400 and "from" in r.get_json()["error"]
 
 
+def test_search_string_tables_is_one_index_expression(client, service):
+    service.ingest("label", [{"name": "spark label"}])
+    service.ingest("user", [{"name": "spark user", "email": "u@x.io",
+                             "username": "u"}])
+    for tables, want in (("data_lake_label", {"data_lake_label"}),
+                         ("data_lake_*", {"data_lake_label",
+                                          "data_lake_user"})):
+        r = client.post("/search", json={"query": "spark",
+                                         "tables": tables})
+        assert r.status_code == 200, r.get_json()
+        assert {h["_index"] for h in r.get_json()["hits"]["hits"]} == want
+
+
+@pytest.mark.parametrize("tables", [5, {"data_lake_label": 1},
+                                    ["data_lake_label", 5], [None]])
+def test_search_malformed_tables_is_named_400(client, service, tables):
+    service.ingest("label", [{"name": "spark label"}])
+    r = client.post("/search", json={"query": "spark", "tables": tables})
+    assert r.status_code == 400 and "tables" in r.get_json()["error"]
+
+
+@pytest.mark.parametrize("body", [{"query": 5}, {"search_term": 5},
+                                  {"query": ["spark"]},
+                                  {"query": {"match_all": {}}}])
+def test_search_non_string_query_is_named_400(client, service, body):
+    service.ingest("label", [{"name": "spark label"}])
+    r = client.post("/search", json=body)
+    assert r.status_code == 400 and "query" in r.get_json()["error"]
+
+
 def test_collapse_dedupes_across_index_pattern(service):
     """r6 advisory: ES field collapsing guarantees ONE hit per key
     globally across indices — a pattern request must re-collapse the
