@@ -41,6 +41,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_database_to_elastic_datalake_spark.fs import list_dirs
 from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
     DslError,
     GeoResolutionError,
@@ -130,6 +131,15 @@ def _tolerant_resolver(df: DataFrame, null_type: str = "string"):
     columns = set(df.columns)
     return lambda f: (F.col(f) if f in columns
                       else F.lit(None).cast(null_type))
+
+
+def _scope_total(matched: DataFrame, scope_obs) -> int:
+    """A size-0 request's hit total: the row count ``run_aggs``
+    observed on ``matched``, else a count job."""
+    from sql_database_to_elastic_datalake_spark.plans.es_aggs import observed
+
+    seen = observed(scope_obs) if scope_obs is not None else None
+    return seen["n"] if seen is not None else matched.count()
 
 
 def _id_column(columns) -> str | None:
@@ -245,15 +255,14 @@ class LakeService:
         Elasticsearch: a wildcard (``*``/``?``) gives the sorted
         matching table directories, possibly none; a concrete name
         gives ``[spec]``. A missing concrete table is the
-        ``NotFoundError`` :meth:`_read` raises when it is read."""
+        ``NotFoundError`` :meth:`_read` raises when it is read. The
+        lake is listed through its Hadoop ``FileSystem``, so a lake
+        given as a URI (``file://``, ``hdfs://``, ``s3a://``) lists
+        too; a lake nothing has been written to yet lists none."""
         if "*" not in spec and "?" not in spec:
             return [spec]
-        if not os.path.isdir(self.lake_dir):
-            return []  # nothing has been written to the lake yet
-        return sorted(
-            d for d in os.listdir(self.lake_dir)
-            if fnmatch.fnmatchcase(d, spec)
-            and os.path.isdir(os.path.join(self.lake_dir, d)))
+        return sorted(d for d in list_dirs(self.spark, self.lake_dir)
+                      if fnmatch.fnmatchcase(d, spec))
 
     def _read(self, name: str) -> DataFrame:
         """One lake table as a DataFrame; a missing table (or a name
@@ -2406,14 +2415,24 @@ class LakeService:
                 continue  # pattern member that can't express the query
             if jf_flags:
                 matched = matched.drop(*jf_flags)
+            scope_obs = None
             if aggs:
                 from sql_database_to_elastic_datalake_spark.plans.es_aggs \
                     import run_aggs
 
+                if k == 0 and track_total_hits is not False \
+                        and post_filter is None and search_after is None:
+                    # size:0's hit total is the aggs scope's row count:
+                    # run_aggs' first job observes it when that job
+                    # consumes the whole scope
+                    from pyspark.sql import Observation
+
+                    scope_obs = Observation()
                 aggregations = run_aggs(
                     matched, aggs, schema_fields=df.schema,
                     background=df, background_pred=pred,
-                    relation_ctx=(name, self._read_or_none))
+                    relation_ctx=(name, self._read_or_none),
+                    scope_obs=scope_obs)
             if suggest:
                 # ES computes suggestions against the INDEX, not the
                 # query's match set — pass the unfiltered table
@@ -2443,9 +2462,9 @@ class LakeService:
                     # size:0 is ES's aggs-only/total-only request;
                     # limit(0) + Observation assert-fails (the limit-0
                     # optimizer rule prunes CollectMetrics), so the
-                    # total is just a count here
+                    # total is the aggs' observation or a count
                     if track_total_hits is not False:
-                        total_value += matched.count()
+                        total_value += _scope_total(matched, scope_obs)
                     continue
                 # sorted page: TakeOrdered consumes every matched row,
                 # so an Observation yields the exact total in-job
@@ -2506,7 +2525,7 @@ class LakeService:
                 # report the useless bound {0, "gte"} — a count per
                 # table is what the client asked for
                 if track_total_hits is not False:
-                    total_value += matched.count()
+                    total_value += _scope_total(matched, scope_obs)
             elif track_total_hits is None:
                 # ONE job per table: an unranked filter stops scanning
                 # at the limit; k+1 rows give the exact total when the

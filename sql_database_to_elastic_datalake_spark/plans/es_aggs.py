@@ -906,6 +906,17 @@ def histogram_frame(
     frame's min/max (a bucket-count-sized input), left-joined back —
     no driver round trip; empty buckets carry doc_count 0 and null
     metrics, exactly ES's envelope."""
+    return _histogram_buckets(df, kind, body, sub_aggs).orderBy(
+        F.col("key").asc())
+
+
+def _histogram_buckets(
+    df: DataFrame, kind: str, body: dict, sub_aggs: dict | None = None
+) -> DataFrame:
+    """:func:`histogram_frame`'s rows in no order. ``run_aggs``
+    collects every bucket row anyway and sorts them by key on the
+    driver, which saves the global sort's range-sampling job and its
+    exchange."""
     key = bucket_key(kind, body)
     min_dc = int(body.get("min_doc_count", 1))
     grouped = (
@@ -915,7 +926,7 @@ def histogram_frame(
              *_metric_cols(sub_aggs))
     )
     if min_dc != 0:
-        return grouped.orderBy(F.col("key").asc())
+        return grouped
     step = _histogram_step(kind, body)
     ext = body.get("extended_bounds") or {}
     b = grouped.agg(F.min("key").alias("mn"), F.max("key").alias("mx"))
@@ -988,7 +999,6 @@ def histogram_frame(
         full.join(grouped, "key", "left")
         .withColumn("doc_count",
                     F.coalesce(F.col("doc_count"), F.lit(0)))
-        .orderBy(F.col("key").asc())
     )
 
 
@@ -4309,6 +4319,35 @@ def _apply_cumulative_cardinality(
             b[pname] = {"value": run}
 
 
+#: Top-level agg kinds whose first job consumes the whole scope (a
+#: grouping or a global aggregate, never a ``limit`` below one), so
+#: that job can observe the scope's row count for ``run_aggs``'
+#: ``scope_obs``.
+_WHOLE_SCOPE_KINDS = frozenset(
+    ("terms", "histogram", "date_histogram", *_FUSABLE_METRIC_KINDS))
+
+
+def observed(obs) -> dict | None:
+    """The metrics ``obs`` collected, or None when it holds none: it
+    was never attached to a frame, or AQE replaced the observed stage.
+    An empty grouped result (an empty scope, or one whose keys are all
+    null) propagates as an empty relation that drops the
+    CollectMetrics node, and pyspark 4.1's ``Observation.get`` then
+    fails in ``toPyRow`` with a Java ``AssertionError``. None is not
+    0: the caller counts instead."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return obs.get
+    except AssertionError:  # pyspark's NO_OBSERVE_BEFORE_GET
+        return None
+    except Py4JJavaError as ex:
+        if ex.java_exception.getClass().getName() != \
+                "java.lang.AssertionError":
+            raise
+        return None
+
+
 def run_aggs(
     df: DataFrame,
     aggs: dict,
@@ -4316,6 +4355,7 @@ def run_aggs(
     background: DataFrame | None = None,
     background_pred: Column | None = None,
     relation_ctx: tuple | None = None,
+    scope_obs=None,
 ) -> dict:
     """Execute an ES ``aggs`` section and assemble the documented
     response envelope: ``{name: {"buckets": [...]}}`` for bucket aggs,
@@ -4326,7 +4366,12 @@ def run_aggs(
     table's full DataFrame). ``background_pred`` is the predicate
     that produced ``df`` FROM ``background`` — ``significant_text``
     needs it to count both scopes in one tokenized scan (a flag
-    column beats re-tokenizing the foreground)."""
+    column beats re-tokenizing the foreground).
+
+    ``scope_obs`` (an ``Observation`` not yet attached) asks for the
+    scope's row count ``n`` without a count job: when every top-level
+    agg is one of ``_WHOLE_SCOPE_KINDS``, the first job observes it.
+    Read it with :func:`observed`; None there means count ``df``."""
     from sql_database_to_elastic_datalake_spark.plans.es_dsl import (
         _norm_schema_fields,
     )
@@ -4335,6 +4380,19 @@ def run_aggs(
     if not isinstance(aggs, dict):
         raise DslError("aggs must be an object")
     out: dict[str, Any] = {}
+    if not (aggs and all(_agg_kind(s) in _WHOLE_SCOPE_KINDS
+                         for s in aggs.values())):
+        scope_obs = None
+
+    def first_input() -> DataFrame:
+        # the observation rides the first job only: a later job over
+        # the same frame could fulfil it from part of the scope after
+        # AQE dropped it from the first one
+        nonlocal scope_obs
+        if scope_obs is None:
+            return df
+        obs, scope_obs = scope_obs, None
+        return df.observe(obs, F.count(F.lit(1)).alias("n"))
 
     # all TOP-LEVEL metric aggs share one job
     top_metrics = {
@@ -4342,7 +4400,7 @@ def run_aggs(
         if _agg_kind(s) in _FUSABLE_METRIC_KINDS
     }
     if top_metrics:
-        row = df.agg(*_metric_cols(top_metrics)).collect()[0]
+        row = first_input().agg(*_metric_cols(top_metrics)).collect()[0]
         out.update(_metric_envelope(row, top_metrics))
 
     sibling_pipes: dict[str, tuple[str, dict]] = {}
@@ -4431,7 +4489,8 @@ def run_aggs(
             chains = _split_chains(name, kind, body, sub)
             trees = []
             for levels, per_level, ths in chains:
-                frame = nested_levels_frame(df, levels, per_level)
+                frame = nested_levels_frame(first_input(), levels,
+                                            per_level)
                 rows = frame.limit(_NESTED_FLAT_BUDGET + 1).collect()
                 if len(rows) > _NESTED_FLAT_BUDGET:
                     raise DslError(
@@ -4579,18 +4638,27 @@ def run_aggs(
             metrics = {n: s for n, s in (sub or {}).items()
                        if n not in top_hits and n not in parent_pipes
                        and n not in top_mets}
-            rows = terms_frame(df, body, metrics).collect()
-            returned = sum(r["doc_count"] for r in rows)
             # bucket_key, not the raw column: a `missing` value means
             # null-key docs belong to a bucket and count in the total;
             # include/exclude scopes the total the same way it scopes
-            # the buckets (ES's sum_other counts only included terms)
+            # the buckets (ES's sum_other counts only included terms).
+            # The bucket job observes it; a count job only when that
+            # observation comes back empty.
             tkey = bucket_key("terms", body)
             tpred = tkey.isNotNull()
             ie = _include_exclude_pred(tkey, body)
             if ie is not None:
                 tpred = tpred & ie
-            total = df.filter(tpred).count()
+            from pyspark.sql import Observation
+
+            tobs = Observation()
+            src = first_input().observe(
+                tobs, F.count_if(tpred).alias("t"))
+            rows = terms_frame(src, body, metrics).collect()
+            returned = sum(r["doc_count"] for r in rows)
+            seen = observed(tobs)
+            total = seen["t"] if seen is not None \
+                else df.filter(tpred).count()
             buckets = [
                 {"key": _key_envelope(r["key"]),
                  "doc_count": r["doc_count"],
@@ -4729,7 +4797,10 @@ def run_aggs(
                     rate_comp[n] = comp
                 else:
                     rate_comp[n] = None  # doc_count-based rate
-            rows = histogram_frame(df, kind, body, sub).collect()
+            rows = sorted(
+                _histogram_buckets(first_input(), kind, body, sub)
+                .collect(),
+                key=lambda r: r["key"])
             buckets = []
             # strip ONLY the tracked synthetic rate components, not
             # anything that merely looks like one — a user sub-agg

@@ -75,6 +75,20 @@ _DEFAULT_CONF = {
     # effect at JVM launch; on an externally created session (the driver
     # harness's) it is a silent no-op, which is the desired behavior.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # pyspark's per-Column call-site capture (errors/utils.py
+    # `_with_origin`) costs every Column function, when on, a session
+    # lookup, a conf read, a JVM origin set and clear and a Python
+    # stack walk. Off, the median py4j calls of a REST request fell
+    # by 38-75% (pyspark 4.1.2, perfbench's lake_sync_search lake,
+    # seed 1: search_all 2,004 -> 675, scored_page 765 -> 190,
+    # bool_page 336 -> 136, match_highlight 156 -> 96), most of them
+    # from es_dsl.tf_score's Column per field and token. The cost:
+    # Spark error messages lose their "== DataFrame ==" call-site
+    # fragment. Static conf, and pyspark reads it once per process
+    # when the first Column is built: it takes effect only through
+    # the builder of the first session, so a session built elsewhere
+    # keeps its own setting (ensure_session_conf cannot change it).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Streaming state store: RocksDB BY DEFAULT since r5. The HDFS
     # provider keeps every state row on the executor heap — a GC spiral
     # when stateful operators hold billions of keys at 100 TB; RocksDB
@@ -206,6 +220,9 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
         "spark.sql.streaming.stateStore.providerClass",
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled",
+        # not "spark.python.sql.dataFrameDebugging.enabled": a static
+        # conf (CANNOT_MODIFY_STATIC_CONFIG on a live session), see
+        # its _DEFAULT_CONF entry
     ):
         try:
             spark.conf.set(key, _DEFAULT_CONF[key])

@@ -19,7 +19,10 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_database_to_elastic_datalake_spark.fs import modification_time
+from sql_database_to_elastic_datalake_spark.fs import (
+    modification_time,
+    path_exists,
+)
 
 #: The harness's table inventory (TESTDATA.md). Analogous to the
 #: reference's ``tables_to_sync`` allow-list
@@ -202,11 +205,13 @@ def load_tables(
 
     The reference intersects discovered tables with an allow-list
     (/root/reference/src/db_connector.py:41-53); here the allow-list is
-    ``names`` and existence is checked on the filesystem.
+    ``names`` and existence is checked on the Hadoop ``FileSystem``
+    ``sf_dir`` resolves to, so a URI ``sf_dir`` loads as a local path
+    does.
     """
     out: dict[str, DataFrame] = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
+        if path_exists(spark, path):
             out[name] = load_table(spark, sf_dir, name)
     return out

@@ -3906,3 +3906,258 @@ def test_glob_name_is_no_table_for_a_single_table_route(client, service):
     assert r.get_json()["error"] == "no such table 'data_lake_g*'"
     r = client.get("/cat/count?index=data_lake_g*&format=json")
     assert r.get_json()[0]["count"] == "2"
+
+
+# -- size-0 aggs: the hit total and sum_other_doc_count ride the bucket job
+
+_FUSED_ROWS = [
+    # (grp, k, n, day, v)
+    ("a", "x", 1, 1, 1.0), ("a", "x", 2, 1, 2.0), ("a", "y", 12, 3, 3.0),
+    ("a", "z", 25, 3, 4.0), ("a", None, None, None, 5.0),
+    ("a", None, 7, 4, 6.0),
+    ("nulls", None, None, None, 1.0), ("nulls", None, None, None, 2.0),
+    ("b", "x", 3, 2, 7.0),
+]
+
+#: scope name -> (query, grp value the scope keeps)
+_FUSED_SCOPES = {
+    "matches": ({"term": {"grp": "a"}}, "a"),
+    "empty": ({"term": {"grp": "none"}}, "none"),
+    "all_null_keys": ({"term": {"grp": "nulls"}}, "nulls"),
+}
+
+#: agg case -> (aggs body, the key column a terms case counts or None)
+_FUSED_AGGS = {
+    "terms": ({"t": {"terms": {"field": "k", "size": 1}}}, None),
+    "terms_include_exclude": (
+        {"t": {"terms": {"field": "k", "size": 1,
+                         "include": ["x", "y"], "exclude": ["x"]}}},
+        lambda k: k == "y"),
+    "terms_missing": (
+        {"t": {"terms": {"field": "k", "size": 1, "missing": "none"}}},
+        lambda k: True),
+    "date_histogram": (
+        {"d": {"date_histogram": {"field": "ts",
+                                  "calendar_interval": "day"}}}, None),
+    "date_histogram_gap_fill": (
+        {"d": {"date_histogram": {"field": "ts", "calendar_interval": "day",
+                                  "min_doc_count": 0}}}, None),
+    "histogram": ({"h": {"histogram": {"field": "n", "interval": 10}}}, None),
+    "metric": ({"m": {"avg": {"field": "v"}}}, None),
+}
+
+
+def _fused_lake(spark, service):
+    import datetime as dt
+
+    rows = [(g, k, n, None if d is None else dt.datetime(2024, 1, d, 5), v)
+            for g, k, n, d, v in _FUSED_ROWS]
+    spark.createDataFrame(
+        rows, "grp string, k string, n bigint, ts timestamp, v double",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_fused"))
+
+
+@pytest.mark.parametrize("scope", sorted(_FUSED_SCOPES))
+@pytest.mark.parametrize("case", sorted(_FUSED_AGGS))
+def test_size0_aggs_totals_are_exact(client, service, spark, case, scope):
+    """A size-0 request's hits.total and a terms agg's
+    sum_other_doc_count come from observations on the bucket job;
+    they must equal explicit counts over a scope with matches, an
+    empty scope and a scope whose keys are all null."""
+    _fused_lake(spark, service)
+    aggs, term_pred = _FUSED_AGGS[case]
+    query, grp = _FUSED_SCOPES[scope]
+    r = client.post("/search/advanced", data=json.dumps({
+        "table": "data_lake_fused", "size": 0, "query": query,
+        "aggs": aggs}), content_type="application/json")
+    assert r.status_code == 200, r.get_json()
+    body = r.get_json()
+    in_scope = [row for row in _FUSED_ROWS if row[0] == grp]
+    assert body["hits"]["total"] == {"value": len(in_scope),
+                                     "relation": "eq"}
+    env = body["aggregations"][next(iter(aggs))]
+    if "t" in aggs:
+        keep = term_pred or (lambda k: k is not None)
+        keys = [k if k is not None else aggs["t"]["terms"].get("missing")
+                for _, k, *_ in in_scope]
+        counted = sum(1 for k in keys if k is not None and keep(k))
+        returned = sum(b["doc_count"] for b in env["buckets"])
+        assert env["sum_other_doc_count"] == counted - returned
+    if "buckets" in env:
+        keys = [b["key"] for b in env["buckets"]]
+        if "t" not in aggs:
+            assert keys == sorted(keys)
+            assert sum(b["doc_count"] for b in env["buckets"]) == sum(
+                1 for row in in_scope
+                if row[2 if "h" in aggs else 3] is not None)
+
+
+@pytest.mark.parametrize("scope", sorted(_FUSED_SCOPES))
+@pytest.mark.parametrize("case", sorted(_FUSED_AGGS))
+def test_size0_scope_count_falls_back_when_unobserved(
+        service, spark, case, scope):
+    """Where AQE drops the observed stage (the grouped result is
+    empty: an empty scope, or all keys null) the observation is None,
+    never 0, and the caller counts; elsewhere it is the scope count."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from sql_database_to_elastic_datalake_spark.plans.es_aggs import (
+        observed,
+        run_aggs,
+    )
+
+    _fused_lake(spark, service)
+    aggs, _ = _FUSED_AGGS[case]
+    grp = _FUSED_SCOPES[scope][1]
+    df = service._read("data_lake_fused")
+    obs = Observation()
+    run_aggs(df.filter(F.col("grp") == grp), aggs, schema_fields=df.schema,
+             scope_obs=obs)
+    n = sum(1 for row in _FUSED_ROWS if row[0] == grp)
+    seen = observed(obs)
+    if case == "date_histogram_gap_fill" and scope != "matches":
+        # the gap-fill join reads the grouped frame twice, and AQE may
+        # keep one observed stage: an observation, when there is one,
+        # is the exact count
+        assert seen in (None, {"n": n})
+        return
+    # a global aggregate always yields its row, and a `missing` bucket
+    # holds the null keys
+    observable = (scope == "matches" or case == "metric"
+                  or (case, scope) == ("terms_missing", "all_null_keys"))
+    assert seen == ({"n": n} if observable else None)
+
+
+def test_size0_total_stays_exact_off_the_fused_path(client, service, spark):
+    """A post_filter, or a top-level agg outside the whole-scope kinds,
+    keeps the count job: the totals stay exact."""
+    from pyspark.sql import Observation
+
+    from sql_database_to_elastic_datalake_spark.plans.es_aggs import (
+        observed,
+        run_aggs,
+    )
+
+    _fused_lake(spark, service)
+
+    def post(extra):
+        r = client.post("/search/advanced", data=json.dumps({
+            "table": "data_lake_fused", "size": 0,
+            "query": {"term": {"grp": "a"}}, **extra}),
+            content_type="application/json")
+        assert r.status_code == 200, r.get_json()
+        return r.get_json()
+
+    got = post({"post_filter": {"term": {"k": "x"}},
+                "aggs": {"t": {"terms": {"field": "k"}}}})
+    assert got["hits"]["total"] == {"value": 2, "relation": "eq"}
+    assert {b["key"]: b["doc_count"]
+            for b in got["aggregations"]["t"]["buckets"]} \
+        == {"x": 2, "y": 1, "z": 1}
+    got = post({"aggs": {"r": {"rare_terms": {"field": "k"}}}})
+    assert got["hits"]["total"] == {"value": 6, "relation": "eq"}
+    got = post({"aggs": {"r": {"rare_terms": {"field": "k"}},
+                         "m": {"avg": {"field": "v"}}}})
+    assert got["hits"]["total"] == {"value": 6, "relation": "eq"}
+    # run_aggs leaves the observation unattached for such a body
+    obs = Observation()
+    run_aggs(service._read("data_lake_fused"),
+             {"r": {"rare_terms": {"field": "k"}}}, scope_obs=obs)
+    assert observed(obs) is None
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through the job group ``group``
+    (a name not used before)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_size0_aggs_job_budget(client, service, spark):
+    """Job budget of the two size-0 aggs request shapes the REST
+    benchmark times, on a warm lake (plans cached, schemas known). A
+    size-0 terms request is its bucket job alone (the hit total and
+    sum_other_doc_count are observed on it); the date_histogram +
+    percentiles + moving_percentiles request is the bucket job plus
+    the moving-percentiles job: a shuffle-map job and a result job
+    each, plus one that broadcasts the bucket ordinals. A change that
+    adds a job fails here; one that removes a job re-pins the number."""
+    import datetime as dt
+
+    spark.createDataFrame(
+        [(i % 25, float(i), ("BUILDING", "MACHINERY", "HOUSEHOLD")[i % 3])
+         for i in range(300)],
+        "nationkey bigint, acctbal double, mktsegment string",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_cust"))
+    spark.createDataFrame(
+        [(("click", "view")[i % 2],
+          dt.datetime(2024, 1, 1) + dt.timedelta(hours=7 * i), float(i))
+         for i in range(300)],
+        "event_type string, ts timestamp, value double",
+    ).write.parquet(os.path.join(service.lake_dir, "data_lake_ev"))
+    terms = {
+        "table": "data_lake_cust", "size": 0,
+        "query": {"bool": {"must_not": [
+            {"term": {"mktsegment": "BUILDING"}}]}},
+        "aggs": {"by_nation": {
+            "terms": {"field": "nationkey", "size": 10},
+            "aggs": {"bal": {"avg": {"field": "acctbal"}},
+                     "top": {"max": {"field": "acctbal"}}}}}}
+    pipeline = {
+        "table": "data_lake_ev", "size": 0,
+        "query": {"term": {"event_type": "click"}},
+        "aggs": {"daily": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {"v": {"percentiles": {"field": "value",
+                                           "percents": [50.0]}},
+                     "mp": {"moving_percentiles": {
+                         "buckets_path": "v", "window": 5}}}}}}
+
+    def post(body):
+        r = client.post("/search/advanced", data=json.dumps(body),
+                        content_type="application/json")
+        assert r.status_code == 200, r.get_json()
+        return r.get_json()
+
+    for body in (terms, pipeline):
+        post(body)  # warm: the scan cache holds the plans
+    got = {}
+    assert _jobs_of(spark, "budget-terms",
+                    lambda: got.update(terms=post(terms))) == 2
+    assert _jobs_of(spark, "budget-pipeline",
+                    lambda: got.update(pipe=post(pipeline))) == 5
+    assert got["terms"]["hits"]["total"]["value"] == 200
+    assert got["terms"]["aggregations"]["by_nation"][
+        "sum_other_doc_count"] == 200 - sum(
+            b["doc_count"]
+            for b in got["terms"]["aggregations"]["by_nation"]["buckets"])
+    assert got["pipe"]["hits"]["total"]["value"] == 150
+
+
+def test_wildcard_over_uri_lake(spark, tmp_path):
+    """A wildcard lists the lake through its Hadoop FileSystem, so a
+    lake given as a ``file://`` URI finds its tables."""
+    flask = pytest.importorskip("flask")  # noqa: F841
+    spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, name string") \
+        .write.parquet(str(tmp_path / "data_lake_uri"))
+    (tmp_path / "not_a_table.txt").write_text("x")
+    service = LakeService(spark, tmp_path.as_uri())
+    assert service._tables("data_lake_*") == ["data_lake_uri"]
+    assert LakeService(spark, (tmp_path / "absent").as_uri())._tables(
+        "data_lake_*") == []
+    app = create_app(service)
+    app.testing = True
+    r = app.test_client().post("/search/advanced", data=json.dumps({
+        "table": "data_lake_*", "query": {"match_all": {}}, "size": 5,
+        "sort": [{"id": "asc"}]}), content_type="application/json")
+    assert r.status_code == 200, r.get_json()
+    assert [h["_source"]["name"] for h in r.get_json()["hits"]["hits"]] \
+        == ["a", "b"]

@@ -186,6 +186,20 @@ def test_load_table_reuses_until_rewritten(spark, tmp_path):
     assert again is not first and again.count() == 5
 
 
+def test_load_tables_reads_a_uri_sf_dir(spark, sf_dir):
+    """Existence is asked of the Hadoop FileSystem, so the test lake
+    given as a ``file://`` URI loads the tables its plain path does."""
+    from pathlib import Path
+
+    names = ("region", "nation", "orders")
+    uri = Path(sf_dir).as_uri()
+    got = parquet.load_tables(spark, uri, names + ("no_such_table",))
+    assert sorted(got) == sorted(names)
+    for name in names:
+        assert got[name].count() == \
+            parquet.load_table(spark, sf_dir, name).count()
+
+
 def test_one_entry_per_path(spark, service):
     path = os.path.join(service.lake_dir, "data_lake_a")
     for n in range(3):

@@ -24,6 +24,20 @@ def test_engine_conf_applied(spark):
     )
 
 
+def test_dataframe_debugging_off(spark):
+    """get_spark turns pyspark's per-Column call-site capture off. The
+    conf is static, so it takes effect only through the builder of the
+    process's first session; ensure_session_conf leaves it alone."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert is_debugging_enabled() is False
+    assert not spark.conf.isModifiable(key)
+    ensure_session_conf(spark)
+    assert spark.conf.get(key) == "false"
+
+
 def test_rocksdb_state_store_tier(spark, tmp_path):
     """The production streaming tier — THE DEFAULT since r5 (decided by
     the sf1 A/B in scripts/bench_streaming_state.py): engine sessions
