@@ -161,6 +161,102 @@ def _id_lookup(df: DataFrame, table: str, ids) -> tuple[Column, str]:
     return F.col(idc).cast("string").isin([str(i) for i in ids]), idc
 
 
+# -- the request-body contract -------------------------------------------
+# Every route reads its JSON body through ``create_app``'s ``_json_body``
+# and its fields through these accessors, so a malformed body is the
+# caller's named 400, never a 500. A JSON null reads as an absent key.
+
+
+def _keys(body: dict, allowed, what: str) -> None:
+    """Reject every key of ``body`` outside ``allowed`` by name. The
+    reference forwards bodies verbatim to Elasticsearch, where every
+    key has live semantics: a key this engine does not implement must
+    400, not vanish (silently ignoring ``from`` once returned page 1
+    forever)."""
+    unknown = sorted(set(body) - set(allowed))
+    if unknown:
+        raise DslError(f"unsupported {what} keys: {unknown} "
+                       f"(supported: {sorted(allowed)})")
+
+
+def _int_opt(container: dict, key: str, default, minimum: int = 0):
+    """The one integer rule for a request option: a JSON integer, or a
+    string holding one, of at least ``minimum``; absent is
+    ``default``. A bool, a float or any other type is a named 400 —
+    never silently truncated."""
+    v = container.get(key)
+    if v is None:
+        return default
+    if isinstance(v, str):
+        try:
+            v = int(v)
+        except ValueError:
+            pass
+    if isinstance(v, bool) or not isinstance(v, int) or v < minimum:
+        raise DslError(f"{key} must be an integer >= {minimum}")
+    return v
+
+
+def _names(body: dict, default=None, keys=("table", "index")):
+    """The index expression a body names under the first of ``keys``
+    present: a string or a list of strings; absent (or empty) is
+    ``default``."""
+    for key in keys:
+        v = body.get(key)
+        if v is None or v == "" or v == []:
+            continue
+        if isinstance(v, str) or (isinstance(v, list) and all(
+                isinstance(x, str) for x in v)):
+            return v
+        raise DslError(f"{key} must be a string or a list of strings")
+    return default
+
+
+def _obj(body: dict, key: str, required: bool = False) -> dict | None:
+    """``body[key]`` as a JSON object; absent is None unless
+    ``required``."""
+    v = body.get(key)
+    if v is None:
+        if required:
+            raise DslError(f"{key} is required")
+        return None
+    if not isinstance(v, dict):
+        raise DslError(f"{key} must be an object")
+    return v
+
+
+def _query(body: dict) -> dict:
+    """A body's ``query`` object; ES defaults an omitted query to
+    ``match_all`` (aggs-only bodies are a standard Kibana shape)."""
+    q = _obj(body, "query")
+    return {"match_all": {}} if q is None else q
+
+
+def _list(body: dict, key: str) -> list | None:
+    """``body[key]`` as a JSON list; absent is None."""
+    v = body.get(key)
+    if v is not None and not isinstance(v, list):
+        raise DslError(f"{key} must be a list")
+    return v
+
+
+def _choice(body, key: str, values: tuple):
+    """``body[key]``, one of ``values``; absent is ``values[0]``."""
+    v = body.get(key)
+    if v is None:
+        return values[0]
+    if v not in values:
+        raise DslError(f"{key} must be {' or '.join(values)}")
+    return v
+
+
+def _page(body: dict) -> tuple[int, int]:
+    """(size, from) of a search body: ``k`` or ES's ``size`` (default
+    10), and ``from`` (default 0)."""
+    return (_int_opt(body, "k", _int_opt(body, "size", 10)),
+            _int_opt(body, "from", 0))
+
+
 #: Spark simpleString → ES field-caps type. Arrays of scalars
 #: dissolve to the element type (ES mappings have no array kind);
 #: float arrays are the embedding convention → dense_vector.
@@ -250,15 +346,22 @@ class LakeService:
 
     # -- lake tables: every route names, reads and 404s one way -----------
 
-    def _tables(self, spec: str) -> list[str]:
+    def _tables(self, spec: str | list[str]) -> list[str]:
         """The tables an index expression names, resolved like
         Elasticsearch: a wildcard (``*``/``?``) gives the sorted
         matching table directories, possibly none; a concrete name
-        gives ``[spec]``. A missing concrete table is the
-        ``NotFoundError`` :meth:`_read` raises when it is read. The
-        lake is listed through its Hadoop ``FileSystem``, so a lake
-        given as a URI (``file://``, ``hdfs://``, ``s3a://``) lists
-        too; a lake nothing has been written to yet lists none."""
+        gives ``[spec]``; a list gives each entry's tables in order. A
+        missing concrete table is the ``NotFoundError`` :meth:`_read`
+        raises when it is read; a name that is not a string is a named
+        400. The lake is listed through its Hadoop ``FileSystem``, so a
+        lake given as a URI (``file://``, ``hdfs://``, ``s3a://``)
+        lists too; a lake nothing has been written to yet lists
+        none."""
+        if isinstance(spec, list):
+            return [n for one in spec for n in self._tables(one)]
+        if not isinstance(spec, str):
+            raise DslError(f"table must be a string or a list of "
+                           f"strings, not {spec!r}")
         if "*" not in spec and "?" not in spec:
             return [spec]
         return sorted(d for d in list_dirs(self.spark, self.lake_dir)
@@ -270,7 +373,10 @@ class LakeService:
         ``NotFoundError("no such table 'X'")`` — the route's 404. The
         plan is reused while the table directory's modification time
         is unchanged (``sources.parquet.cached_scan``); every action
-        on it still reads the files."""
+        on it still reads the files. A name that is not a string is a
+        named 400."""
+        if not isinstance(name, str):
+            raise DslError(f"table name must be a string, not {name!r}")
         if re.search(r"[*?\[\]{}\\]", name):
             raise NotFoundError(f"no such table {name!r}")
         try:
@@ -305,6 +411,9 @@ class LakeService:
         """Per-item required-field check + id/timestamp defaulting
         (reference /root/reference/src/utils.py:82-111). Driver-side on a
         single dict — the batch path below is the DataFrame equivalent."""
+        if not isinstance(item, dict):
+            return None, ItemResult(index, False, None,
+                                    "item must be a JSON object")
         required = REQUIRED_FIELDS.get(entity_type, REQUIRED_FIELDS["default"])
         for f in required:
             if item.get(f) in (None, ""):
@@ -563,18 +672,14 @@ class LakeService:
         import time as _time
 
         t0 = _time.monotonic()
-        src_spec = body.get("source")
-        dst_spec = body.get("dest")
-        if not isinstance(src_spec, dict) or not src_spec.get("index"):
+        src_spec = _obj(body, "source", required=True)
+        dst_spec = _obj(body, "dest", required=True)
+        if not src_spec.get("index"):
             raise DslError("reindex requires source.index")
-        if not isinstance(dst_spec, dict) or not dst_spec.get("index"):
+        if not dst_spec.get("index"):
             raise DslError("reindex requires dest.index")
-        bad = sorted(set(src_spec) - {"index", "query"})
-        if bad:
-            raise DslError(f"unsupported reindex source keys: {bad}")
-        bad = sorted(set(dst_spec) - {"index"})
-        if bad:
-            raise DslError(f"unsupported reindex dest keys: {bad}")
+        _keys(src_spec, ("index", "query"), "reindex source")
+        _keys(dst_spec, ("index",), "reindex dest")
         src, dst = str(src_spec["index"]), str(dst_spec["index"])
         dst_path = os.path.join(self.lake_dir, dst)
         if src == dst:
@@ -585,10 +690,8 @@ class LakeService:
             df = df.filter(F.coalesce(
                 compile_dsl(q, field_resolver=_tolerant_resolver(df),
                             schema_fields=df.schema), F.lit(False)))
-        script = body.get("script")
+        script = _obj(body, "script")
         if script is not None:
-            if not isinstance(script, dict):
-                raise DslError("reindex script must be an object")
             df = _apply_update_script(
                 df.withColumn("__match", F.lit(True)), script
             ).drop("__match")
@@ -781,8 +884,7 @@ class LakeService:
         if from_ < 0:
             raise DslError("from must be a non-negative integer")
         _validate_rescore_options(rescore)
-        names = [n for spec in (tables or [INDEX_PREFIX + "*"])
-                 for n in self._tables(spec)]
+        names = self._tables(tables or INDEX_PREFIX + "*")
         if fields == ["*"]:
             fields = None  # the reference's default-everything shape
         scored: list[DataFrame] = []
@@ -860,7 +962,7 @@ class LakeService:
             # SAME TakeOrdered, combine scores driver-side on the
             # window only, then slice the page (the offset must apply
             # AFTER the window re-sort — the order changed inside it)
-            window = int(rescore.get("window_size", 10))
+            window = _int_opt(rescore, "window_size", 10)
             rows = ranked.limit(max(window, from_ + k)).collect()
             paged = _rescore_window(rows, rescore, window) \
                 + [(r["_score"], r) for r in rows[window:]]
@@ -920,7 +1022,7 @@ class LakeService:
         qv = knn.get("query_vector")
         if not field or not isinstance(qv, list) or not qv:
             raise DslError("knn requires field and query_vector")
-        kk = int(knn.get("k", k))
+        kk = _int_opt(knn, "k", k)
         df = self._read(name)
         if field not in df.columns:
             raise DslError(f"unknown knn field {field!r}")
@@ -937,11 +1039,8 @@ class LakeService:
         # fetch exactly kk candidates so both the page and the total
         # honor it; a knn.k smaller than size must NOT backfill the
         # page with docs beyond the k nearest (r7 ADVICE)
-        nc = knn.get("num_candidates")
+        nc = _int_opt(knn, "num_candidates", None, minimum=1)
         if nc is not None:
-            if isinstance(nc, bool) or not isinstance(nc, int) or nc < 1:
-                raise DslError(
-                    "knn num_candidates must be a positive integer")
             if nc < kk:
                 raise DslError("knn num_candidates must be >= k")
             nlist = 16
@@ -1220,13 +1319,6 @@ class LakeService:
             # r12: collapse rides the ranked page — ES's default
             # (group results under the _score order, no explicit sort
             # needed). inner_hits stay on the sorted membership page.
-            if not (isinstance(collapse, dict)
-                    and isinstance(collapse.get("field"), str)):
-                raise DslError('collapse requires a "field" string')
-            unknown = sorted(set(collapse) - {"field", "inner_hits"})
-            if unknown:
-                raise DslError(
-                    f"unsupported collapse options: {unknown}")
             if collapse.get("inner_hits") is not None:
                 raise DslError(
                     "collapse inner_hits on the ranked page are not "
@@ -1396,7 +1488,7 @@ class LakeService:
                 ckey = (F.col(cfield) if cfield in df.columns
                         else F.lit(None).cast("string"))
                 page = collapse_hits(page, ckey, order)
-            window = int(rescore.get("window_size", 10)) \
+            window = _int_opt(rescore, "window_size", 10) \
                 if rescore is not None else 0
             rows = page.orderBy(*order).limit(
                 max(window, from_ + k)).collect()
@@ -1557,7 +1649,7 @@ class LakeService:
         import base64
         import json as _json
 
-        if not isinstance(table, str) or not table:
+        if not table:
             raise DslError("pit requires a table")
         names = self._tables(table)
         if not names:
@@ -1883,8 +1975,8 @@ class LakeService:
             terms_enum_frame,
         )
 
-        if not field:
-            raise DslError("terms_enum requires a field")
+        if not isinstance(field, str) or not field:
+            raise DslError("terms_enum requires a field string")
         if size < 1:
             raise DslError("terms_enum size must be >= 1")
         names = self._tables(table)
@@ -2052,7 +2144,8 @@ class LakeService:
         deep-page scan pruning is worth more than re-reporting a number
         page one already carried.
 
-        ``table`` may be an INDEX PATTERN (``data_lake_*``) — the
+        ``table`` may be an INDEX PATTERN (``data_lake_*``), or a list
+        of names and patterns — the
         reference's advanced search ALWAYS queries the pattern
         (src/search_api.py:40-44). Per ES semantics, a field a table
         doesn't have simply never matches there (tolerant resolver:
@@ -2101,14 +2194,22 @@ class LakeService:
         # condition, a scalar indices_boost raised on iteration, and
         # a non-numeric rescore window/weight raised ValueError deep
         # in the combine. Shape-check the scoring options up front.
-        if collapse is not None and not isinstance(collapse, dict):
-            raise DslError('collapse must be an object with a "field"')
+        if collapse is not None:
+            if not (isinstance(collapse, dict)
+                    and isinstance(collapse.get("field"), str)):
+                raise DslError('collapse requires a "field" string')
+            unknown = sorted(set(collapse) - {"field", "inner_hits"})
+            if unknown:
+                raise DslError(
+                    f"unsupported collapse options: {unknown}")
         if indices_boost is not None and not isinstance(
                 indices_boost, (dict, list)):
             raise DslError(
                 "indices_boost must be a list of single-entry "
                 "{index: factor} objects")
         _validate_rescore_options(rescore)
+        if from_ < 0:
+            raise DslError("from must be a non-negative integer")
 
         names = self._tables(table)
         if isinstance(dsl, dict) and len(dsl) == 1 \
@@ -2216,8 +2317,6 @@ class LakeService:
             # computed score IS the order (the ranked path). With an
             # explicit sort, scoring cannot affect the response and
             # the body compiles as membership below (filter context).
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
             if search_after is not None:
                 raise DslError(
                     f"{next(iter(dsl))} ranking is not supported "
@@ -2250,8 +2349,6 @@ class LakeService:
             # the ranked page. Feature combinations it doesn't carry
             # (search_after / runtime fields / collapse inner_hits)
             # fall through to the membership page instead of erroring.
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
             return self._scored_search(
                 names, dsl, k=k, from_=from_, source=source,
                 fields_opt=fields_opt, aggs=aggs, suggest=suggest,
@@ -2281,8 +2378,6 @@ class LakeService:
                 "cursor compares raw columns)"
             )
         if from_:
-            if from_ < 0:
-                raise DslError("from must be a non-negative integer")
             if not sort:
                 raise DslError(
                     "from requires a sort (an offset into an unordered "
@@ -2296,13 +2391,6 @@ class LakeService:
                 )
         inner_hits = None
         if collapse is not None:
-            if not (isinstance(collapse, dict)
-                    and isinstance(collapse.get("field"), str)):
-                raise DslError('collapse requires a "field" string')
-            unknown = sorted(set(collapse) - {"field", "inner_hits"})
-            if unknown:
-                raise DslError(
-                    f"unsupported collapse options: {unknown}")
             if not sort:
                 raise DslError(
                     "collapse requires a sort (this engine has no "
@@ -2327,13 +2415,7 @@ class LakeService:
                     raise DslError(
                         f"unsupported inner_hits options: {bad}")
                 for nm in ("size", "from"):
-                    v = inner_hits.get(nm)
-                    if v is not None and (not isinstance(v, int)
-                                          or isinstance(v, bool)
-                                          or v < 0):
-                        raise DslError(
-                            f"inner_hits {nm} must be a non-negative "
-                            "integer")
+                    _int_opt(inner_hits, nm, None)
                 if len(names) > 1:
                     raise DslError(
                         "collapse inner_hits requires a single "
@@ -2666,8 +2748,8 @@ class LakeService:
         isort = inner.get("sort") or sort
         ifields, iorder, igetters = _parse_sort(
             isort, matched.columns, matched.schema)
-        isize = int(inner.get("size", 3))
-        ifrom = int(inner.get("from", 0))
+        isize = _int_opt(inner, "size", 3)
+        ifrom = _int_opt(inner, "from", 0)
         iname = str(inner.get("name") or cfield)
         src_cols = resolve_source_columns(
             matched.columns, inner.get("_source"))
@@ -2749,8 +2831,10 @@ def _assert_read_only_sql(spark, query: str) -> None:
         plan = spark._jsparkSession.sessionState().sqlParser() \
             .parsePlan(query)
     except Exception as ex:
-        first = str(ex).splitlines()[0] if str(ex) else "parse error"
-        raise DslError(f"SQL parse error: {first}") from None
+        first = next((ln for ln in str(ex).splitlines() if ln.strip()),
+                     "")
+        raise DslError(f"query is not valid SQL (parse error: {first})") \
+            from None
     for line in plan.treeString().splitlines():
         m = re.match(r"^[\s:+|\-]*'?([A-Za-z][A-Za-z0-9_]*)", line)
         if m and _SQL_DENY.match(m.group(1)):
@@ -2873,13 +2957,6 @@ def _highlight_plan(highlight: dict, columns: list[str]) -> list[tuple]:
         BOUNDARY_MAX_SCAN,
     )
 
-    def _hl_int(spec, key, default, minimum):
-        v = spec.get(key, default)
-        if not isinstance(v, int) or isinstance(v, bool) or v < minimum:
-            raise DslError(
-                f"highlight {key} must be an integer >= {minimum}")
-        return v
-
     def _hl_boundary(spec, d_chars, d_scan, d_scanner="chars"):
         sc = spec.get("boundary_scanner", d_scanner)
         if sc not in ("chars", "sentence"):
@@ -2891,10 +2968,10 @@ def _highlight_plan(highlight: dict, columns: list[str]) -> list[tuple]:
         bc = spec.get("boundary_chars", d_chars)
         if not isinstance(bc, str):
             raise DslError("highlight boundary_chars must be a string")
-        return bc, _hl_int(spec, "boundary_max_scan", d_scan, 0), sc
+        return bc, _int_opt(spec, "boundary_max_scan", d_scan, 0), sc
 
-    g_fs = _hl_int(highlight, "fragment_size", 100, 1)
-    g_nof = _hl_int(highlight, "number_of_fragments", 5, 0)
+    g_fs = _int_opt(highlight, "fragment_size", 100, 1)
+    g_nof = _int_opt(highlight, "number_of_fragments", 5, 0)
     g_bc, g_scan, g_sc = _hl_boundary(
         highlight, BOUNDARY_CHARS, BOUNDARY_MAX_SCAN)
     g_order = highlight.get("order") or "none"
@@ -2910,8 +2987,8 @@ def _highlight_plan(highlight: dict, columns: list[str]) -> list[tuple]:
             if bad:
                 raise DslError(
                     f"unsupported highlight field options: {bad}")
-            fs = _hl_int(fspec, "fragment_size", g_fs, 1)
-            nof = _hl_int(fspec, "number_of_fragments", g_nof, 0)
+            fs = _int_opt(fspec, "fragment_size", g_fs, 1)
+            nof = _int_opt(fspec, "number_of_fragments", g_nof, 0)
             bc, scan, sc = _hl_boundary(fspec, g_bc, g_scan, g_sc)
         for c in _expand_patterns([pat], columns):
             if c not in seen:
@@ -2943,10 +3020,7 @@ def _validate_rescore_options(rescore) -> None:
         return
     if not isinstance(rescore, dict):
         raise DslError("rescore must be an object")
-    ws = rescore.get("window_size", 10)
-    if isinstance(ws, bool) or not isinstance(ws, int) or ws < 0:
-        raise DslError("rescore window_size must be a non-negative "
-                       "integer")
+    _int_opt(rescore, "window_size", 10)
     rspec = rescore.get("query")
     if isinstance(rspec, dict):
         for wkey in ("query_weight", "rescore_query_weight"):
@@ -2985,6 +3059,8 @@ def _rescore_expr(rescore: dict | None, df: "DataFrame"):
             f"unsupported rescore_query kind {kind!r} (scoreable "
             "leaves only: multi_match, match, match_phrase)"
         )
+    if not isinstance(body, dict):
+        raise DslError(f"rescore_query {kind} must be an object")
     if kind == "multi_match" and not body.get("fields"):
         return F.lit(0.0)  # no requested field → zero contribution
 
@@ -3091,7 +3167,7 @@ def _rank_eval_score(mname: str, mspec: dict, ranked: list[str | None],
                      rmap: dict[str, int]) -> float:
     import math
 
-    thr = int(mspec.get("relevant_rating_threshold", 1))
+    thr = _int_opt(mspec, "relevant_rating_threshold", 1)
     if mname == "precision":
         rels = [rmap.get(i) for i in ranked]
         if mspec.get("ignore_unlabeled"):
@@ -3137,31 +3213,23 @@ def _rank_eval_score(mname: str, mspec: dict, ranked: list[str | None],
 def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
     """ES ``_rank_eval`` semantics over the engine's ranked pages —
     validation, per-request evaluation, mean score."""
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
-    if not isinstance(body, dict):
-        raise DslError("rank_eval body must be a JSON object")
-    unknown = sorted(set(body) - {"requests", "metric", "table"})
-    if unknown:
-        raise DslError(f"unsupported rank_eval keys: {unknown}")
-    reqs = body.get("requests")
-    metric = body.get("metric")
-    if not isinstance(reqs, list) or not reqs:
+    _keys(body, ("requests", "metric", "table"), "rank_eval")
+    reqs = _list(body, "requests")
+    metric = _obj(body, "metric")
+    if not reqs:
         raise DslError("rank_eval requires a non-empty requests list")
-    if not isinstance(metric, dict) or len(metric) != 1:
+    if metric is None or len(metric) != 1:
         raise DslError("rank_eval requires exactly one metric")
     (mname, mspec), = metric.items()
     if mname not in _RANK_EVAL_METRICS:
         raise DslError(
             f"unsupported rank_eval metric {mname!r} "
             f"(supported: {sorted(_RANK_EVAL_METRICS)})")
-    mspec = mspec or {}
+    mspec = _obj(metric, mname) or {}
     bad = sorted(set(mspec) - _RANK_EVAL_METRICS[mname])
     if bad:
         raise DslError(f"unsupported {mname} options: {bad}")
-    k = mspec.get("k", 10)
-    if not isinstance(k, int) or isinstance(k, bool) or k <= 0:
-        raise DslError("rank_eval k must be a positive integer")
+    k = _int_opt(mspec, "k", 10, minimum=1)
     if mname == "expected_reciprocal_rank":
         gmax = mspec.get("maximum_relevance")
         if not isinstance(gmax, int) or isinstance(gmax, bool) \
@@ -3175,11 +3243,8 @@ def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
     for req in reqs:
         if not isinstance(req, dict):
             raise DslError("each rank_eval request must be an object")
-        runknown = sorted(set(req) - {"id", "request", "ratings",
-                                      "table"})
-        if runknown:
-            raise DslError(
-                f"unsupported rank_eval request keys: {runknown}")
+        _keys(req, ("id", "request", "ratings", "table"),
+              "rank_eval request")
         rid = req.get("id")
         if not isinstance(rid, str) or not rid:
             raise DslError("each rank_eval request needs an id")
@@ -3211,8 +3276,8 @@ def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
                     f"request {rid!r}: rating must be an integer")
             rmap[str(ent["_id"])] = ent["rating"]
         out = service.advanced_search(
-            req.get("table") or body.get("table", INDEX_PREFIX + "*"),
-            search["query"], k=k, sort=search.get("sort"),
+            _names(req, _names(body, INDEX_PREFIX + "*")),
+            search["query"], k=k, sort=_list(search, "sort"),
             track_total_hits=False)
         hits = out["hits"]["hits"]
         ranked = [_hit_id(h) for h in hits]
@@ -3233,20 +3298,6 @@ def _run_rank_eval(service: "LakeService", body) -> dict[str, Any]:
         "metric_score": sum(scores) / len(scores),
         "details": details,
     }
-
-
-def _int_opt(container: dict, key: str, default: int) -> int:
-    """An integer option or a named 400 — a malformed size/max_edits
-    must never surface as an unhandled ValueError (a 500)."""
-    from sql_database_to_elastic_datalake_spark.plans.es_dsl import DslError
-
-    v = container.get(key, default)
-    if isinstance(v, bool) or not isinstance(v, (int, str)):
-        raise DslError(f"{key} must be an integer")
-    try:
-        return int(v)
-    except (TypeError, ValueError):
-        raise DslError(f"{key} must be an integer") from None
 
 
 def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
@@ -3282,7 +3333,7 @@ def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
                 raise DslError(
                     f"suggester {name!r} mixes completion with "
                     f"{sorted(set(kinds) - {'completion'})}")
-            body = spec["completion"]
+            body = _obj(spec, "completion", required=True)
             unknown = sorted(set(body) - {
                 "field", "size", "skip_duplicates", "analyzer",
                 "fuzzy", "regex"})
@@ -3362,7 +3413,7 @@ def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
             raise DslError(f"suggester {name!r} requires text")
         kinds = [k for k in spec if k != "text"]
         if kinds == ["phrase"]:
-            body = spec["phrase"]
+            body = _obj(spec, "phrase", required=True)
             unknown = sorted(set(body) - {
                 "field", "size", "max_edits", "prefix_length",
                 "min_doc_freq",
@@ -3405,7 +3456,7 @@ def _run_suggest(df: "DataFrame", suggest: dict) -> dict[str, Any]:
                 f"{name!r} (term, phrase and completion are "
                 "implemented)"
             )
-        body = spec["term"]
+        body = _obj(spec, "term", required=True)
         unknown = sorted(set(body) - {
             "field", "size", "max_edits", "prefix_length",
             "min_doc_freq", "suggest_mode", "sort",
@@ -3778,6 +3829,8 @@ def _sort_directions(sort: list) -> list[tuple[bool, bool]]:
         if isinstance(s, str):
             out.append((False, True))
             continue
+        if not isinstance(s, dict) or len(s) != 1:
+            raise DslError(f"malformed sort clause {s!r}")
         spec = next(iter(s.values()))
         d = (spec.get("order", "asc") if isinstance(spec, dict)
              else spec) == "desc"
@@ -3971,6 +4024,17 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def _bad_request(ex):
         return jsonify({"error": str(ex)}), 400
 
+    def _json_body(optional: bool = False) -> dict:
+        """The request's JSON body, which must be an object (the one
+        body reader; the ingest routes alone take a list too). An
+        empty or unparseable body is ``{}`` where ``optional``."""
+        body = request.get_json(force=True, silent=True)
+        if body is None and optional:
+            return {}
+        if not isinstance(body, dict):
+            raise DslError("body must be a JSON object")
+        return body
+
     def _etype(segment):
         return ROUTE_ENTITY.get(segment, segment.rstrip("s"))
 
@@ -3985,21 +4049,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         # /sync blueprints (ticket_routes.py:212, user_routes.py:190)
         if entities is None:
             return jsonify({"error": "no source tables configured"}), 503
-        # an empty body yields None from get_json even with force=True —
-        # treat that as {} so the missing-id message applies; a valid
-        # NON-OBJECT JSON body (array/string/number) is a DIFFERENT
-        # client error and gets named as such rather than being coerced
-        # into a misleading "missing id"
-        body = request.get_json(force=True, silent=True)
-        if body is None:
-            body = {}
-        elif not isinstance(body, dict):
-            return jsonify({"error": "body must be a JSON object"}), 400
+        # an empty body is {} so the missing-id message applies
+        body = _json_body(optional=True)
         etype = _etype(entity)
         indexed_at = body.get("indexed_at") or _utcnow_iso()
         eid = body.get("id") or body.get(f"{etype}_id")
         if eid is None:
-            return jsonify({"error": "missing id"}), 400
+            raise DslError("missing id")
         # a partially populated --entities-dir must be a clean
         # client-facing 503 listing what's absent, not a KeyError->500
         # inside the sync plan
@@ -4040,13 +4096,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/<entity>/<entity2>/batch", methods=["POST"])
     def ingest_batch_doubled(entity, entity2):
         if entity != entity2:
-            return jsonify({"error": "not found"}), 404
+            raise NotFoundError("not found")
         return ingest_batch(entity)
 
     @app.route("/<entity>/<entity2>/sync", methods=["POST"])
     def resync_doubled(entity, entity2):
         if entity != entity2:
-            return jsonify({"error": "not found"}), 404
+            raise NotFoundError("not found")
         return resync(entity)
 
     #: every top-level /search/advanced body key with implemented
@@ -4059,15 +4115,6 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         "runtime_mappings", "script_fields", "pit",
         "indices_boost", "rescore", "min_score",
     }
-
-    def _page_size(body):
-        # "k" or ES's "size" select the page; ES's default of 10
-        # applies; a malformed value is the client's error, not a 500
-        try:
-            k = int(body.get("k", body.get("size", 10)))
-        except (TypeError, ValueError):
-            return None
-        return k if k >= 0 else None
 
     def _wire_envelope(out: dict) -> dict:
         """Reference-parity response keys on top of the engine's ES
@@ -4091,75 +4138,50 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
 
     @app.route("/search", methods=["POST"])
     def search():
-        body = request.get_json(force=True)
-        k = _page_size(body)
-        if k is None:
-            return jsonify({"error": "k/size must be a non-negative integer"}), 400
+        body = _json_body()
+        # ES's offset idiom works WITHOUT a sort here: the ranked
+        # path's _score order is total (r7 — it used to be rejected)
+        k, from_ = _page(body)
         # the reference's request key is search_term (+fields,
         # src/search_api.py:19-21); "query" stays accepted as the
         # engine's original spelling
         term = body.get("query", body.get("search_term"))
         if term is None:
-            return jsonify(
-                {"error": "missing query/search_term"}), 400
+            raise DslError("missing query/search_term")
         if not isinstance(term, str):
-            return jsonify(
-                {"error": "query/search_term must be a string"}), 400
-        # a string is one index expression, as in ES's ``index``
-        tables = body.get("tables")
-        if isinstance(tables, str):
-            tables = [tables]
-        elif tables is not None and not (
-                isinstance(tables, list)
-                and all(isinstance(t, str) for t in tables)):
-            return jsonify({"error": "tables must be a string or a "
-                                     "list of strings"}), 400
-        # ES's offset idiom works WITHOUT a sort here: the ranked
-        # path's _score order is total (r7 — it used to be rejected)
-        try:
-            from_ = int(body.get("from", 0))
-            if from_ < 0:
-                raise ValueError
-        except (TypeError, ValueError):
-            return jsonify(
-                {"error": "from must be a non-negative integer"}), 400
+            raise DslError("query/search_term must be a string")
         ms = body.get("min_score")
         if ms is not None and not isinstance(ms, (int, float)) \
                 or isinstance(ms, bool):
-            return jsonify(
-                {"error": "min_score must be a number"}), 400
+            raise DslError("min_score must be a number")
         return jsonify(_wire_envelope(
-            service.search(term, tables, k=k,
-                           fields=body.get("fields"), from_=from_,
+            # a string is one index expression, as in ES's ``index``
+            service.search(term, _names(body, keys=("tables",)), k=k,
+                           fields=_list(body, "fields"), from_=from_,
                            min_score=ms,
                            rescore=body.get("rescore")),
         )), 200
 
     @app.route("/search/advanced", methods=["POST"])
     def advanced():
-        return _advanced_body(request.get_json(force=True))
+        return jsonify(_advanced_body(_json_body())), 200
 
-    def _advanced_body(body):
+    def _advanced_body(body: dict) -> dict:
         """The /search/advanced body pipeline — shared verbatim by the
-        template route (r11): a rendered template IS an advanced body."""
-        k = _page_size(body)
-        if k is None:
-            return jsonify({"error": "k/size must be a non-negative integer"}), 400
+        template and async routes: a rendered template IS an advanced
+        body. Returns the wire envelope."""
         # the reference forwards this body VERBATIM to ES, so every
-        # top-level key a saved query carries has live semantics
-        # there. A key this engine does not implement must 400, not
-        # vanish: silently ignoring `from` returned page 1 forever
-        # (r5 verdict #1) — silent wrong results are worse than an
-        # error.
-        unknown = sorted(set(body) - _ADVANCED_BODY_KEYS)
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported request keys: {unknown} "
-                            f"(supported: {sorted(_ADVANCED_BODY_KEYS)})"}), 400
-        try:
-            from_ = int(body.get("from", 0))
-        except (TypeError, ValueError):
-            return jsonify({"error": "from must be a non-negative integer"}), 400
+        # top-level key a saved query carries has live semantics there
+        _keys(body, _ADVANCED_BODY_KEYS, "request")
+        k, from_ = _page(body)
+        query = _query(body)
+        sort = _list(body, "sort")
+        aggs = body.get("aggs") or body.get("aggregations")
+        # docvalue_fields is the pre-8.x spelling of the fields option
+        # — same {field, format} entries, same hit["fields"] arrays
+        # (what older Kibana sends by default); both merge into one list
+        fields_opt = ((_list(body, "fields") or [])
+                      + (_list(body, "docvalue_fields") or [])) or None
         if body.get("scroll") is not None:
             # scroll TTL accepted-and-ignored: the returned _scroll_id
             # is a stateless continuation token (scroll_search docs)
@@ -4172,106 +4194,63 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                         # one (the reject-instead-of-drop policy)
                         "pit"):
                 if body.get(bad):
-                    return jsonify({"error":
-                                    f"scroll is not supported with "
-                                    f"{bad} (the token manages the "
-                                    "cursor)"}), 400
-            return jsonify(_wire_envelope(service.scroll_search(
-                table=body.get("table"),
-                dsl=body.get("query", {"match_all": {}}),
-                size=k, sort=body.get("sort"),
-                source=body.get("_source"),
-                aggs=body.get("aggs") or body.get("aggregations"),
-            ))), 200
-        if body.get("pit") is not None:
+                    raise DslError(f"scroll is not supported with {bad} "
+                                   "(the token manages the cursor)")
+            return _wire_envelope(service.scroll_search(
+                table=_names(body), dsl=query, size=k, sort=sort,
+                source=body.get("_source"), aggs=aggs))
+        pit = body.get("pit")
+        if pit is not None:
             # ES 8.x PIT + search_after: the pit carries the index (no
             # index in the path → no "table" key), the caller manages
             # the search_after cursor from each page's last hit. The
             # sort is totalized with the table's tie-break columns
             # (ES's implicit _shard_doc equivalent).
             if body.get("table"):
-                return jsonify({"error":
-                                "pit is not supported with table "
-                                "(the pit id carries the table, like "
-                                "ES's no-index-in-path rule)"}), 400
+                raise DslError("pit is not supported with table (the pit "
+                               "id carries the table, like ES's "
+                               "no-index-in-path rule)")
             for bad in ("from", "collapse", "knn"):
                 if body.get(bad):
-                    return jsonify({"error":
-                                    f"pit is not supported with "
-                                    f"{bad} (use search_after "
-                                    "paging)"}), 400
-            table = service.resolve_pit(body["pit"])
-            out = service.advanced_search(
-                table, body.get("query", {"match_all": {}}), k=k,
-                aggs=body.get("aggs") or body.get("aggregations"),
-                sort=service.pit_total_sort(
-                    table, body.get("sort")),
-                search_after=body.get("search_after"),
-                source=body.get("_source"),
-                highlight=body.get("highlight"),
-                post_filter=body.get("post_filter"),
-                track_total_hits=body.get("track_total_hits"),
-                fields_opt=(
-                    ((body.get("fields") or [])
-                     + (body.get("docvalue_fields") or []))
-                    or None),
-                suggest=body.get("suggest"),
-                runtime_mappings=body.get("runtime_mappings"),
-                script_fields=body.get("script_fields"),
-            )
-            # ES returns the (possibly refreshed) pit_id on every
-            # page; stateless tokens never change
-            pid = body["pit"]
-            out["pit_id"] = (pid.get("id")
-                             if isinstance(pid, dict) else pid)
-            return jsonify(_wire_envelope(out)), 200
-        return jsonify(_wire_envelope(
-            service.advanced_search(
-                # the reference always queries the index pattern
-                # (src/search_api.py:40-44); an explicit table (or
-                # narrower pattern) is the engine's extension
-                body.get("table", INDEX_PREFIX + "*"),
-                # ES defaults an omitted query to match_all —
-                # aggs-only bodies are a standard Kibana shape
-                body.get("query", {"match_all": {}}), k=k,
-                aggs=body.get("aggs") or body.get("aggregations"),
-                sort=body.get("sort"),
-                search_after=body.get("search_after"),
-                from_=from_,
-                source=body.get("_source"),
-                highlight=body.get("highlight"),
-                post_filter=body.get("post_filter"),
-                collapse=body.get("collapse"),
-                track_total_hits=body.get("track_total_hits"),
-                # docvalue_fields is the pre-8.x spelling of the
-                # fields option — same {field, format} entries,
-                # same hit["fields"] arrays (what older Kibana
-                # sends by default); both merge into one list
-                fields_opt=(
-                    ((body.get("fields") or [])
-                     + (body.get("docvalue_fields") or []))
-                    or None),
-                suggest=body.get("suggest"),
-                knn=body.get("knn"),
-                runtime_mappings=body.get("runtime_mappings"),
-                script_fields=body.get("script_fields"),
+                    raise DslError(f"pit is not supported with {bad} "
+                                   "(use search_after paging)")
+            table = service.resolve_pit(pit)
+            sort = service.pit_total_sort(table, sort)
+            page_only = {}
+        else:
+            # the reference always queries the index pattern
+            # (src/search_api.py:40-44); an explicit table (or
+            # narrower pattern) is the engine's extension
+            table = _names(body, INDEX_PREFIX + "*")
+            page_only = dict(
+                from_=from_, collapse=body.get("collapse"),
+                knn=_obj(body, "knn"),
                 indices_boost=body.get("indices_boost"),
                 rescore=body.get("rescore"),
-                min_score=body.get("min_score"),
-            )
-        )), 200
+                min_score=body.get("min_score"))
+        out = service.advanced_search(
+            table, query, k=k, aggs=aggs, sort=sort,
+            search_after=body.get("search_after"),
+            source=body.get("_source"),
+            highlight=body.get("highlight"),
+            post_filter=body.get("post_filter"),
+            track_total_hits=body.get("track_total_hits"),
+            fields_opt=fields_opt,
+            suggest=_obj(body, "suggest"),
+            runtime_mappings=_obj(body, "runtime_mappings"),
+            script_fields=body.get("script_fields"),
+            **page_only)
+        if pit is not None:
+            # ES returns the (possibly refreshed) pit_id on every
+            # page; stateless tokens never change
+            out["pit_id"] = pit.get("id") if isinstance(pit, dict) else pit
+        return _wire_envelope(out)
 
-    def _resolve_template(body):
+    def _resolve_template(body: dict):
         """(source, params) from a template request body — exactly one
-        of inline ``source`` / stored ``id``; unknown keys are named
-        400s (the reject-instead-of-drop policy)."""
-        if not isinstance(body, dict):
-            raise DslError("template request must be a JSON object")
-        unknown = sorted(set(body) - {"source", "id", "params", "table"})
-        if unknown:
-            raise DslError(
-                f"unsupported template request keys: {unknown} "
-                "(supported: source | id, params, table)")
+        of inline ``source`` / stored ``id``."""
+        _keys(body, ("source", "id", "params", "table"),
+              "template request")
         has_src = body.get("source") is not None
         has_id = body.get("id") is not None
         if has_src == has_id:
@@ -4298,7 +4277,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             render_search_template,
         )
 
-        body = request.get_json(force=True)
+        body = _json_body()
         source, params = _resolve_template(body)
         rendered = render_search_template(
             source, params, partials=service.stored_templates)
@@ -4306,7 +4285,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         # carries the index in the path); the template may also set it
         if body.get("table") is not None and "table" not in rendered:
             rendered["table"] = body["table"]
-        return _advanced_body(rendered)
+        return jsonify(_advanced_body(rendered)), 200
 
     @app.route("/render/template", methods=["POST"])
     def render_template():
@@ -4316,8 +4295,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             render_search_template,
         )
 
-        body = request.get_json(force=True)
-        source, params = _resolve_template(body)
+        source, params = _resolve_template(_json_body())
         rendered = render_search_template(
             source, params, partials=service.stored_templates)
         return jsonify({"template_output": rendered}), 200
@@ -4328,8 +4306,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             validate_stored_script,
         )
 
-        service.stored_templates[sid] = validate_stored_script(
-            request.get_json(force=True))
+        service.stored_templates[sid] = validate_stored_script(_json_body())
         return jsonify({"acknowledged": True}), 200
 
     @app.route("/scripts/<sid>", methods=["GET"])
@@ -4342,7 +4319,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/scripts/<sid>", methods=["DELETE"])
     def delete_script(sid):
         if sid not in service.stored_templates:
-            return jsonify({"error": f"no stored template {sid!r}"}), 404
+            raise NotFoundError(f"no stored template {sid!r}")
         del service.stored_templates[sid]
         return jsonify({"acknowledged": True}), 200
 
@@ -4353,14 +4330,9 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         service-local namespace. The tree is validated through the
         compiler AT STORE TIME (schema-free: unknown kinds/options 400
         now, missing fields resolve NULL at match time)."""
-        body = request.get_json(force=True)
-        if not isinstance(body, dict) or not isinstance(
-                body.get("query"), dict):
-            return jsonify({"error":
-                            "percolator body must carry a query "
-                            "object"}), 400
+        query = _obj(_json_body(), "query", required=True)
         try:
-            compile_dsl(body["query"],
+            compile_dsl(query,
                         field_resolver=lambda f:
                         F.lit(None).cast("string"))
         except GeoResolutionError:
@@ -4369,7 +4341,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             # of the table percolated against, unknown here; match
             # time still raises the named 400 on a non-geo target
             pass
-        service.percolator_queries[pid] = body["query"]
+        service.percolator_queries[pid] = query
         return jsonify({"acknowledged": True, "_id": pid}), 200
 
     @app.route("/percolator/<pid>", methods=["GET"])
@@ -4383,8 +4355,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/percolator/<pid>", methods=["DELETE"])
     def delete_percolator(pid):
         if pid not in service.percolator_queries:
-            return jsonify({"error": f"no percolator query "
-                            f"{pid!r}"}), 404
+            raise NotFoundError(f"no percolator query {pid!r}")
         del service.percolator_queries[pid]
         return jsonify({"acknowledged": True}), 200
 
@@ -4392,24 +4363,16 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def termvectors_route():
         """ES ``_termvectors``: one doc's per-field term vectors with
         optional corpus statistics (service.termvectors docstring)."""
-        body = request.get_json(force=True)
-        if not isinstance(body, dict):
-            return jsonify({"error": "body must be a JSON object"}), 400
-        unknown = sorted(set(body) - {
-            "table", "id", "fields", "term_statistics",
-            "field_statistics"})
-        if unknown:
-            # doc (artificial document) / per_field_analyzer /
-            # offsets / payloads toggles are named here, not dropped
-            return jsonify({"error":
-                            f"unsupported termvectors keys: {unknown} "
-                            "(supported: table, id, fields, "
-                            "term_statistics, field_statistics)"}), 400
-        if not body.get("table") or body.get("id") is None:
-            return jsonify({"error":
-                            "termvectors requires table and id"}), 400
+        body = _json_body()
+        # doc (artificial document) / per_field_analyzer / offsets /
+        # payloads toggles are named here, not dropped
+        _keys(body, ("table", "id", "fields", "term_statistics",
+                     "field_statistics"), "termvectors")
+        table = _names(body)
+        if table is None or body.get("id") is None:
+            raise DslError("termvectors requires table and id")
         return jsonify(service.termvectors(
-            body["table"], body["id"],
+            table, body["id"],
             fields=body.get("fields"),
             term_statistics=bool(body.get("term_statistics")),
             field_statistics=body.get("field_statistics", True)
@@ -4422,37 +4385,23 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         request table, or ``docs`` entries carrying ``_index``/
         ``_id`` (+ per-entry fields/term_statistics). Per-entry
         errors stay inline (the multi-API contract)."""
-        body = request.get_json(force=True)
-        if not isinstance(body, dict):
-            return jsonify({"error": "body must be a JSON object"}), 400
-        unknown = sorted(set(body) - {
-            "table", "ids", "docs", "fields", "term_statistics",
-            "field_statistics"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported mtermvectors keys: "
-                            f"{unknown}"}), 400
-        if (body.get("ids") is None) == (body.get("docs") is None):
-            return jsonify({"error":
-                            "mtermvectors takes ids or docs, not "
-                            "both/neither"}), 400
-        if body.get("ids") is not None:
-            if not body.get("table"):
-                return jsonify({"error":
-                                "mtermvectors ids form requires a "
-                                "table"}), 400
-            entries = [{"_index": body["table"], "_id": i}
-                       for i in body["ids"]]
-        else:
-            entries = body["docs"]
-            if not isinstance(entries, list):
-                return jsonify({"error": "docs must be a list"}), 400
+        body = _json_body()
+        _keys(body, ("table", "ids", "docs", "fields", "term_statistics",
+                     "field_statistics"), "mtermvectors")
+        ids, entries = _list(body, "ids"), _list(body, "docs")
+        if (ids is None) == (entries is None):
+            raise DslError("mtermvectors requires ids or docs (not both)")
+        request_table = _names(body)
+        if ids is not None:
+            if request_table is None:
+                raise DslError("mtermvectors ids form requires a table")
+            entries = [{"_index": request_table, "_id": i} for i in ids]
         out = []
         for ent in entries:
             if not isinstance(ent, dict) or ent.get("_id") is None:
                 out.append({"error": "each entry needs an _id"})
                 continue
-            table = ent.get("_index", body.get("table"))
+            table = ent.get("_index", request_table)
             if not table:
                 out.append({"_id": str(ent["_id"]),
                             "error": "entry has no _index/table"})
@@ -4482,9 +4431,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         (precision/recall@k, MRR, (n)DCG, ERR). Metrics are computed
         driver-side over the page's ids (bounded by k); each request
         is ONE ordinary ranked search."""
-        body = request.get_json(force=True)
-        out = _run_rank_eval(service, body)
-        return jsonify(out), 200
+        return jsonify(_run_rank_eval(service, _json_body())), 200
 
     @app.route("/search/count", methods=["POST"])
     def count_route():
@@ -4492,17 +4439,12 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         One count job per table with the predicate pushed to the
         scan — the same cost ES pays. Runtime fields are honored
         (a Kibana count over a runtime filter works)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "query",
-                                      "runtime_mappings"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported count keys: {unknown}"}), 400
+        body = _json_body()
+        _keys(body, ("table", "query", "runtime_mappings"), "count")
         out = service.advanced_search(
-            body.get("table", INDEX_PREFIX + "*"),
-            body.get("query", {"match_all": {}}),
+            _names(body, INDEX_PREFIX + "*"), _query(body),
             k=0, track_total_hits=True,
-            runtime_mappings=body.get("runtime_mappings"))
+            runtime_mappings=_obj(body, "runtime_mappings"))
         return jsonify({
             "count": out["hits"]["total"]["value"],
             # the official client reads _shards for success gating
@@ -4518,48 +4460,30 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``conflicts`` abort/proceed is accepted-and-ignored (a
         snapshot lake rewrite has no concurrent versioning to
         conflict with)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "index", "query",
-                                      "conflicts"})
-        if unknown:
-            return jsonify({"error": "unsupported delete_by_query "
-                                     f"keys: {unknown}"}), 400
-        table = body.get("table") or body.get("index")
-        if not table:
-            return jsonify({"error": "delete_by_query requires a "
-                                     "table/index"}), 400
-        if body.get("conflicts") not in (None, "abort", "proceed"):
-            return jsonify({"error": "conflicts must be abort or "
-                                     "proceed"}), 400
-        if not isinstance(body.get("query"), dict):
-            return jsonify({"error": "delete_by_query requires a "
-                                     "query object"}), 400
+        body = _json_body()
+        _keys(body, ("table", "index", "query", "conflicts"),
+              "delete_by_query")
+        table = _names(body)
+        if table is None:
+            raise DslError("delete_by_query requires a table/index")
+        _choice(body, "conflicts", ("abort", "proceed"))
         return jsonify(service.delete_by_query(
-            table, body["query"])), 200
+            table, _obj(body, "query", required=True))), 200
 
     @app.route("/search/update_by_query", methods=["POST"])
     def update_by_query_route():
         """ES ``_update_by_query`` (service.update_by_query): painless
         assignment subset over the matched set; no ``query`` means
         match_all, like ES."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "index", "query",
-                                      "script", "conflicts"})
-        if unknown:
-            return jsonify({"error": "unsupported update_by_query "
-                                     f"keys: {unknown}"}), 400
-        table = body.get("table") or body.get("index")
-        if not table:
-            return jsonify({"error": "update_by_query requires a "
-                                     "table/index"}), 400
-        if body.get("conflicts") not in (None, "abort", "proceed"):
-            return jsonify({"error": "conflicts must be abort or "
-                                     "proceed"}), 400
-        q = body.get("query")
-        if q is not None and not isinstance(q, dict):
-            return jsonify({"error": "query must be an object"}), 400
+        body = _json_body()
+        _keys(body, ("table", "index", "query", "script", "conflicts"),
+              "update_by_query")
+        table = _names(body)
+        if table is None:
+            raise DslError("update_by_query requires a table/index")
+        _choice(body, "conflicts", ("abort", "proceed"))
         return jsonify(service.update_by_query(
-            table, q, body.get("script"))), 200
+            table, _obj(body, "query"), body.get("script"))), 200
 
     #: completed async searches kept for the GET/DELETE lifecycle
     #: (service-local, like the stored-scripts namespace)
@@ -4580,30 +4504,24 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         import time as _time
         import uuid as _u
 
-        body = dict(request.get_json(force=True))
+        body = dict(_json_body())
         keep = body.pop("keep_on_completion", False)
         body.pop("wait_for_completion_timeout", None)
         body.pop("batched_reduce_size", None)
         keep_alive = body.pop("keep_alive", None)
         if not isinstance(keep, bool):
-            return jsonify({"error": "keep_on_completion must be a "
-                                     "boolean"}), 400
-        resp = _advanced_body(body)
-        payload, status = (resp if isinstance(resp, tuple)
-                           else (resp, 200))
-        if status != 200:
-            return payload, status
-        now = int(_time.time() * 1000)
+            raise DslError("keep_on_completion must be a boolean")
         ttl = 5 * 60_000 if keep_alive is None \
             else _parse_keep_alive(keep_alive)
         if ttl is None:
-            return jsonify({"error": "keep_alive must look like 5m/"
-                                     "30s/1h"}), 400
+            raise DslError("keep_alive must look like 5m/30s/1h")
+        response = _advanced_body(body)
+        now = int(_time.time() * 1000)
         env = {
             "is_partial": False, "is_running": False,
             "start_time_in_millis": now,
             "expiration_time_in_millis": now + ttl,
-            "response": payload.get_json(),
+            "response": response,
         }
         if keep:
             sid = _u.uuid4().hex
@@ -4629,15 +4547,13 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             del async_store[sid]
             env = None
         if env is None:
-            return jsonify({"error": f"async search {sid!r} not "
-                                     "found"}), 404
+            raise NotFoundError(f"async search {sid!r} not found")
         return jsonify({"id": sid, **env}), 200
 
     @app.route("/search/async/<sid>", methods=["DELETE"])
     def async_search_delete(sid):
         if sid not in async_store:
-            return jsonify({"error": f"async search {sid!r} not "
-                                     "found"}), 404
+            raise NotFoundError(f"async search {sid!r} not found")
         del async_store[sid]
         return jsonify({"acknowledged": True}), 200
 
@@ -4661,12 +4577,10 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
             create_index_body,
         )
 
-        body = request.get_json(silent=True) or {}
-        table = request.args.get("table") or body.get("table") \
-            or body.get("index")
+        table = request.args.get("table") or _names(_json_body(True))
         if not table:
-            return jsonify({"error": "mapping requires a table/index "
-                                     "(query param or body)"}), 400
+            raise DslError("mapping requires a table/index (query param "
+                           "or body)")
         return jsonify({
             name: _json.loads(create_index_body(service._read(name)))
             for name in service._tables(table)}), 200
@@ -4692,9 +4606,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         metadata-cheap count job) and on-disk byte/file totals from
         the parquet directory listing. Wildcard tables like
         _mapping."""
-        body = request.get_json(silent=True) or {}
-        table = request.args.get("table") or body.get("table") \
-            or body.get("index") or "*"
+        table = request.args.get("table") or _names(_json_body(True), "*")
         indices = {}
         total_docs, total_bytes = 0, 0
         for name in service._tables(table):
@@ -4726,10 +4638,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         status are constant green/open (no shard states to report);
         uuid/pri/rep are the lake's honest equivalents."""
         pat = request.args.get("index") or "*"
-        fmt = request.args.get("format", "text")
-        if fmt not in ("text", "json"):
-            return jsonify({"error":
-                            "format must be text or json"}), 400
+        fmt = _choice(request.args, "format", ("text", "json"))
         rows = []
         for name in service._tables(pat):
             n, size, _ = _table_stats(name)
@@ -4760,10 +4669,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         import time as _time
 
         pat = request.args.get("index") or "*"
-        fmt = request.args.get("format", "text")
-        if fmt not in ("text", "json"):
-            return jsonify({"error":
-                            "format must be text or json"}), 400
+        fmt = _choice(request.args, "format", ("text", "json"))
         total = sum(service._read(name).count()
                     for name in service._tables(pat))
         epoch = int(_time.time())
@@ -4781,34 +4687,25 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         ``rows`` (+ ``cursor`` when more), cursor pages carry rows
         only, ``columnar: true`` transposes to per-column ``values``
         lists — all per the ES SQL REST docs."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"query", "fetch_size", "cursor",
-                                      "columnar"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported sql keys: {unknown}"}), 400
-        fs = body.get("fetch_size", 1000)
-        if not isinstance(fs, int) or isinstance(fs, bool) or fs < 1:
-            return jsonify({"error": "fetch_size must be a positive "
-                                     "integer"}), 400
+        body = _json_body()
+        _keys(body, ("query", "fetch_size", "cursor", "columnar"), "sql")
+        fs = _int_opt(body, "fetch_size", 1000, minimum=1)
         columnar = body.get("columnar", False)
         if not isinstance(columnar, bool):
-            return jsonify({"error": "columnar must be a boolean"}), 400
+            raise DslError("columnar must be a boolean")
         cur = body.get("cursor")
         if cur is not None:
             if body.get("query") is not None:
-                return jsonify({"error": "send query OR cursor, not "
-                                         "both"}), 400
+                raise DslError("send query OR cursor, not both")
             entry = sql_cursors.pop(str(cur), None)
             if entry is None:
-                return jsonify({"error": f"unknown cursor {cur!r}"}), 400
+                raise DslError(f"unknown cursor {cur!r}")
             rows, rest = entry["rows"][:fs], entry["rows"][fs:]
             out = {}
             columnar = entry["columnar"]
         else:
             if not isinstance(body.get("query"), str):
-                return jsonify({"error": "sql requires a query "
-                                         "string"}), 400
+                raise DslError("sql requires a query string")
             cols, all_rows = service.sql_query(body["query"])
             rows, rest = all_rows[:fs], all_rows[fs:]
             out = {"columns": cols}
@@ -4832,23 +4729,16 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     @app.route("/search/sql/close", methods=["POST"])
     def sql_close_route():
         """ES ``_sql/close``: release an open cursor."""
-        body = request.get_json(force=True)
-        cur = str(body.get("cursor", ""))
+        cur = str(_json_body().get("cursor", ""))
         return jsonify(
             {"succeeded": sql_cursors.pop(cur, None) is not None}), 200
 
     @app.route("/search/reindex", methods=["POST"])
     def reindex_route():
         """ES ``_reindex`` (service.reindex)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"source", "dest", "script",
-                                      "conflicts"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported reindex keys: {unknown}"}), 400
-        if body.get("conflicts") not in (None, "abort", "proceed"):
-            return jsonify({"error": "conflicts must be abort or "
-                                     "proceed"}), 400
+        body = _json_body()
+        _keys(body, ("source", "dest", "script", "conflicts"), "reindex")
+        _choice(body, "conflicts", ("abort", "proceed"))
         return jsonify(service.reindex(body)), 200
 
     def _multi_search(route: str, prepare):
@@ -4864,8 +4754,7 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         raw = request.get_data(as_text=True) or ""
         lines = [ln for ln in raw.splitlines() if ln.strip()]
         if len(lines) % 2:
-            return jsonify({"error":
-                            f"{route} needs header/body line pairs"}), 400
+            raise DslError(f"{route} needs header/body line pairs")
         responses = []
         for i in range(0, len(lines), 2):
             try:
@@ -4876,28 +4765,21 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
                                   "status": 400})
                 continue
             try:
+                for what, line in (("header", header), ("body", body)):
+                    if not isinstance(line, dict):
+                        raise DslError(f"{what} must be a JSON object")
                 body = prepare(body)
-                k = _page_size(body)
-                if k is None:
-                    raise DslError("k/size must be a non-negative "
-                                   "integer")
-                try:
-                    from_ = int(body.get("from", 0))
-                except (TypeError, ValueError):
-                    # a malformed `from` is ITS slot's 400, never an
-                    # unhandled ValueError -> request-level 500
-                    raise DslError(
-                        "from must be a non-negative integer") from None
+                k, from_ = _page(body)
                 out = service.advanced_search(
-                    header.get("index",
-                               body.get("table", INDEX_PREFIX + "*")),
-                    body.get("query", {"match_all": {}}), k=k,
+                    _names(header, _names(body, INDEX_PREFIX + "*"),
+                           keys=("index",)),
+                    _query(body), k=k,
                     aggs=body.get("aggs") or body.get("aggregations"),
-                    sort=body.get("sort"),
+                    sort=_list(body, "sort"),
                     from_=from_,
                     source=body.get("_source"),
                     track_total_hits=body.get("track_total_hits"),
-                    runtime_mappings=body.get("runtime_mappings"),
+                    runtime_mappings=_obj(body, "runtime_mappings"),
                 )
                 responses.append({**_wire_envelope(out), "status": 200})
             except NotFoundError as ex:
@@ -4933,14 +4815,10 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``_mget``: batch point lookups, one pushed-In scan per
         distinct table, misses reported per entry (never a request
         error)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "index", "ids", "docs",
-                                      "_source"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported mget keys: {unknown}"}), 400
+        body = _json_body()
+        _keys(body, ("table", "index", "ids", "docs", "_source"), "mget")
         return jsonify(service.mget(
-            table=body.get("table") or body.get("index"),
+            table=_names(body),
             ids=body.get("ids"), docs=body.get("docs"),
             source=body.get("_source"))), 200
 
@@ -4948,14 +4826,10 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def field_caps_route():
         """ES ``_field_caps``: schema capabilities for an index
         pattern — Kibana's first call. Footer metadata only, no job."""
-        body = request.get_json(force=True, silent=True) or {}
-        unknown = sorted(set(body) - {"table", "index", "fields"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported field_caps keys: {unknown}"}), 400
+        body = _json_body(optional=True)
+        _keys(body, ("table", "index", "fields"), "field_caps")
         return jsonify(service.field_caps(
-            table=body.get("table") or body.get("index")
-            or request.args.get("index"),
+            table=_names(body) or request.args.get("index"),
             fields=body.get("fields")
             or request.args.get("fields"))), 200
 
@@ -4963,25 +4837,15 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def terms_enum_route():
         """ES ``_terms_enum``: prefix autocomplete over a keyword
         field (Kibana's field-value suggestions)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "index", "field",
-                                      "string", "size",
-                                      "case_insensitive",
-                                      "search_after", "timeout"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported terms_enum keys: {unknown} "
-                            "(index_filter is unimplemented)"}), 400
-        try:
-            size = int(body.get("size", 10))
-        except (TypeError, ValueError):
-            return jsonify({"error": "size must be an integer"}), 400
+        body = _json_body()
+        _keys(body, ("table", "index", "field", "string", "size",
+                     "case_insensitive", "search_after", "timeout"),
+              "terms_enum")
         return jsonify(service.terms_enum(
-            table=(body.get("table") or body.get("index")
-                   or INDEX_PREFIX + "*"),
+            table=_names(body, INDEX_PREFIX + "*"),
             field=body.get("field"),
             string=str(body.get("string", "") or ""),
-            size=size,
+            size=_int_opt(body, "size", 10),
             case_insensitive=bool(body.get("case_insensitive",
                                             False)),
             search_after=body.get("search_after"))), 200
@@ -4990,15 +4854,11 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
     def analyze_route():
         """ES ``_analyze``: the engine's one analysis chain, echoed
         with original-text offsets. Driver-side only."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"text", "analyzer"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported analyze keys: {unknown} "
-                            "(custom tokenizer/filter chains are "
-                            "unimplemented)"}), 400
+        body = _json_body()
+        # custom tokenizer/filter chains are unimplemented
+        _keys(body, ("text", "analyzer"), "analyze")
         if "text" not in body:
-            return jsonify({"error": "analyze requires text"}), 400
+            raise DslError("analyze requires text")
         return jsonify(analyze_text(
             body["text"], body.get("analyzer", "standard"))), 200
 
@@ -5007,27 +4867,20 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``_explain``: per-document match breakdown (membership
         explanation — the BM25 tree divergence is documented on the
         service method)."""
-        body = request.get_json(force=True)
-        unknown = sorted(set(body) - {"table", "index", "id", "query"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported explain keys: {unknown}"}), 400
-        table = body.get("table") or body.get("index")
-        if not table or body.get("id") is None:
-            return jsonify(
-                {"error": "explain requires table and id"}), 400
-        out = service.explain(
-            table, body["id"],
-            body.get("query", {"match_all": {}}))
+        body = _json_body()
+        _keys(body, ("table", "index", "id", "query"), "explain")
+        table = _names(body)
+        if table is None or body.get("id") is None:
+            raise DslError("explain requires table and id")
+        out = service.explain(table, body["id"], _query(body))
         # ES returns the found:false envelope with a 404 status
         return jsonify(out), (200 if out.get("found") else 404)
 
     @app.route("/search/scroll", methods=["POST"])
     def scroll_continue():
-        body = request.get_json(force=True)
-        sid = body.get("scroll_id")
+        sid = _json_body().get("scroll_id")
         if not isinstance(sid, str) or not sid:
-            return jsonify({"error": "scroll_id is required"}), 400
+            raise DslError("scroll_id is required")
         # "scroll" (the TTL refresh) is accepted-and-ignored —
         # stateless tokens don't expire (scroll_search docs)
         return jsonify(_wire_envelope(
@@ -5044,15 +4897,11 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         """ES ``POST /<index>/_pit``: mint a point-in-time id
         (open_pit docs — stateless token; keep_alive accepted and
         ignored). Body/query: {"table": ..., "keep_alive": ...}."""
-        body = request.get_json(force=True, silent=True) or {}
-        unknown = sorted(set(body) - {"table", "index", "keep_alive"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported pit keys: {unknown}"}), 400
-        table = (body.get("table") or body.get("index")
-                 or request.args.get("table"))
+        body = _json_body(optional=True)
+        _keys(body, ("table", "index", "keep_alive"), "pit")
         return jsonify(service.open_pit(
-            table, keep_alive=body.get("keep_alive"))), 200
+            _names(body) or request.args.get("table"),
+            keep_alive=body.get("keep_alive"))), 200
 
     @app.route("/search/validate", methods=["POST"])
     def validate_query():
@@ -5062,20 +4911,16 @@ def create_app(service: LakeService, entities: dict[str, "DataFrame"] | None = N
         schema — ``valid`` plus, with ``explain=true``, the ES-shaped
         per-"shard" explanation carrying the error text. Nothing
         executes: compilation only, no Spark job."""
-        body = request.get_json(force=True, silent=True) or {}
-        unknown = sorted(set(body) - {"table", "index", "query",
-                                      "explain", "rewrite"})
-        if unknown:
-            return jsonify({"error":
-                            f"unsupported validate keys: {unknown}"}), 400
-        table = body.get("table") or body.get("index")
+        body = _json_body(optional=True)
+        _keys(body, ("table", "index", "query", "explain", "rewrite"),
+              "validate")
+        table = _names(body)
         fields = None
         if table and "*" not in table and "?" not in table:
             fields = service._read(table).columns
         err = None
         try:
-            compile_dsl(body.get("query", {"match_all": {}}),
-                        schema_fields=fields)
+            compile_dsl(_query(body), schema_fields=fields)
         except DslError as ex:
             err = str(ex)
         out: dict = {"valid": err is None,

@@ -1315,12 +1315,17 @@ def _compile_dsl(
     if not isinstance(dsl, dict) or len(dsl) != 1:
         raise DslError(f"query node must have exactly one key, got {dsl!r}")
     kind, body = next(iter(dsl.items()))
+    if not isinstance(body, dict):
+        raise DslError(f"{kind} query body must be an object, got {body!r}")
 
     if kind == "match_all":
         return F.lit(True)
 
     if kind == "term":
         field, value = _field_value(body, allowed=("case_insensitive",))
+        if isinstance(value, (list, dict)):
+            raise DslError(f"term {field!r} value must be a scalar "
+                           "(use terms for a list)")
         if isinstance(value, str) and "/" in value:
             # r14 (r13 verdict #7): a CIDR-shaped term takes ES's
             # ip-field block semantics — two numeric comparisons over
@@ -1348,7 +1353,9 @@ def _compile_dsl(
         if len(body) != 1:
             raise DslError("terms expects one field")
         field, values = next(iter(body.items()))
-        return col(field).isin(list(values))
+        if not isinstance(values, list):
+            raise DslError(f"terms {field!r} requires a list of values")
+        return col(field).isin(values)
 
     if kind == "ids":
         values = body.get("values")
@@ -1362,6 +1369,8 @@ def _compile_dsl(
         if len(body) != 1:
             raise DslError("range expects one field")
         field, bounds = next(iter(body.items()))
+        if not isinstance(bounds, dict):
+            raise DslError(f"range {field!r} requires an object of bounds")
         c = col(field)
         preds = []
         ops = {"gte": c.__ge__, "gt": c.__gt__, "lte": c.__le__, "lt": c.__lt__}
@@ -1379,7 +1388,7 @@ def _compile_dsl(
         return acc
 
     if kind == "exists":
-        if not isinstance(body, dict) or not body.get("field"):
+        if not body.get("field"):
             raise DslError("exists requires a field")
         return col(body["field"]).isNotNull()
 
@@ -1776,8 +1785,6 @@ def _compile_dsl(
         # the official client sends min_doc_freq: 5 implicitly).
         # Membership-only in filter context like every compound; pair
         # with function_score for ranked pages.
-        if not isinstance(body, dict):
-            raise DslError("more_like_this must be an object")
         unknown = sorted(set(body) - {
             "fields", "like", "min_term_freq", "max_query_terms",
             "minimum_should_match", "min_word_length",
@@ -1870,8 +1877,6 @@ def _compile_dsl(
         # body into (predicate, score) and orders the page by it.
         # min_score is honored where a score exists; here it would
         # silently change membership, so it is a named 400.
-        if not isinstance(body, dict):
-            raise DslError(f"{kind} must be an object")
         if body.get("min_score") is not None:
             raise DslError(
                 f"{kind}.min_score needs scoring context (top-level "
@@ -1886,8 +1891,7 @@ def _compile_dsl(
         # positive feature value); as a TOP-LEVEL query the API layer
         # routes it to the scored page before reaching here
         # (score_dsl.rank_feature_columns has the scoring math)
-        if not isinstance(body, dict) or not isinstance(
-                body.get("field"), str):
+        if not isinstance(body.get("field"), str):
             raise DslError("rank_feature requires a field")
         unknown = sorted(set(body) - {
             "field", "boost", "saturation", "log", "sigmoid", "linear"})
@@ -1900,8 +1904,7 @@ def _compile_dsl(
     if kind == "distance_feature":
         # membership = has the field (ES semantics); scoring only on
         # the top-level ranked page (score_dsl.distance_feature_columns)
-        if not isinstance(body, dict) or not isinstance(
-                body.get("field"), str):
+        if not isinstance(body.get("field"), str):
             raise DslError("distance_feature requires a field")
         unknown = sorted(set(body) - {"field", "origin", "pivot",
                                       "boost"})
@@ -1932,7 +1935,7 @@ def _compile_dsl(
             script_column,
         )
 
-        if not isinstance(body, dict) or "script" not in body:
+        if "script" not in body:
             raise DslError("script query requires a script object")
         unknown = sorted(set(body) - {"script", "boost"})
         if unknown:
@@ -1949,7 +1952,7 @@ def _compile_dsl(
         # onto the same positional token-array algebra as the span
         # family (score-free membership; `filter` rules and
         # analyzer/use_field overrides are named 400s)
-        if not isinstance(body, dict) or len(body) != 1:
+        if len(body) != 1:
             raise DslError("intervals expects one field")
         field, spec = next(iter(body.items()))
         if isinstance(spec, dict) and "boost" in spec:
@@ -2005,8 +2008,6 @@ def _compile_dsl(
             parse_distance_km,
         )
 
-        if not isinstance(body, dict):
-            raise DslError("geo_distance expects an object")
         opts = {k: v for k, v in body.items()
                 if k in ("distance", "distance_type",
                          "validation_method", "_name", "boost")}
@@ -2037,8 +2038,6 @@ def _compile_dsl(
             bbox_predicate,
         )
 
-        if not isinstance(body, dict):
-            raise DslError("geo_bounding_box expects an object")
         fields = {k: v for k, v in body.items()
                   if k not in ("validation_method", "type", "_name",
                                "boost", "ignore_unmapped")}
@@ -2084,8 +2083,6 @@ def _compile_dsl(
             point_in_polygon,
         )
 
-        if not isinstance(body, dict):
-            raise DslError("geo_polygon expects an object")
         fields = {k: v for k, v in body.items()
                   if k not in ("validation_method", "_name", "boost",
                                "ignore_unmapped")}
@@ -2119,8 +2116,6 @@ def _compile_dsl(
             point_in_polygon,
         )
 
-        if not isinstance(body, dict):
-            raise DslError("geo_shape expects an object")
         fields = {k: v for k, v in body.items()
                   if k not in ("ignore_unmapped", "_name", "boost")}
         if len(fields) != 1:
@@ -2226,7 +2221,7 @@ def _compile_dsl(
             geotile,
         )
 
-        if not isinstance(body, dict) or len(body) != 1:
+        if len(body) != 1:
             raise DslError("geo_grid expects exactly one field")
         field, spec = next(iter(body.items()))
         if not isinstance(spec, dict) or len(spec) != 1:
